@@ -318,7 +318,7 @@ object ScaleProbe {
     * readable exemption map covering every OTHER registered query).
     */
   val Probed10x: Seq[String] = Seq(
-      "edges_to_sonata", "dedup_canonical_corpus", "dedup_cluster_cc",
+      "dedup_canonical_corpus", "dedup_cluster_cc",
       "dedup_ngram_jaccard", "pipeline_curate_corpus", "rle_group_ranges",
       // round-8 additions: the remaining expensive families (banded
       // minhash, TF-IDF, cell-probe ANN, salted skew join, stateful
@@ -528,8 +528,8 @@ object ScaleProbe {
     def timeOne(name: String, dir: String): (Double, String, Long) = {
       // t0 wraps CONSTRUCTION + the forced noop-sink evaluation:
       // several queries do their real work eagerly while building the
-      // frame (the CC loop's checkpointed rounds, edges_to_sonata's
-      // stamped write), and the sink is ForceEval — NOT count(), which
+      // frame (the CC loop's checkpointed rounds, edges_to_sonata_h5's
+      // container write), and the sink is ForceEval — NOT count(), which
       // prunes global-aggregate faces and unique-key left joins to
       // near-empty plans (see ForceEval's scaladoc; entries measured
       // before this fix carry carried_from/note provenance)

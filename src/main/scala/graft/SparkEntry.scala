@@ -101,7 +101,6 @@ object SparkEntry {
     (ext.Multimodal.queries, ext.Multimodal.oracleSql),
     (ext.LmStats.queries, ext.LmStats.oracleSql),
     (ext.Abtest.queries, ext.Abtest.oracleSql),
-    (pipelines.EdgesToSonata.queries, pipelines.EdgesToSonata.oracleSql),
     (pipelines.SonataH5.queries, pipelines.SonataH5.oracleSql),
     (streaming.StreamingOps.queries, streaming.StreamingOps.oracleSql)
   )

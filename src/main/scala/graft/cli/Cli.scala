@@ -39,43 +39,18 @@ object Touch2Parquet {
     * schema-agreement rule (parquet2hdf5.cpp:67-73 — mixed record
     * versions cannot share a sink) and gid-range disjointness (synapse
     * ids are `(gid << 24) + ordinal`, so overlapping gid ranges across
-    * inputs would collide; the reference's per-rank file split
-    * guarantees disjointness, here it is asserted). Stamps the same
-    * footer provenance as the single-input path — version STRING
-    * agreement is not required (git-hash builds of one record version
-    * differ), so the first input's string is stamped. The ranges come
-    * from the INDEXES, so the check is conservative: a short-read index
-    * whose zero-padding pulls firstGid to 0 widens its claimed range
-    * and can reject a union whose actual records were disjoint.
+    * inputs would collide). Version STRING agreement is not required
+    * (git-hash builds of one record version differ), so the first
+    * input's string is stamped.
     */
   def convertMany(spark: SparkSession, inputs: Seq[String], outDir: String): Unit = {
-    import graft.io.TouchBinary
-    val indexes = inputs.map(p =>
-      p -> TouchBinary.readIndex(TouchBinary.indexFileFor(p)))
-    val versions = indexes.map(_._2.version).distinct
-    require(versions.size == 1,
-      s"inputs disagree on schema version: " +
-        indexes.map { case (p, i) => s"$p=v${i.version.ordinal}" }.mkString(", "))
-    val ranges = indexes.map { case (p, i) =>
-      (p, i.firstGid, i.firstGid + math.max(0, i.shifts.length - 1)) }
-    ranges.sortBy(_._2).sliding(2).foreach {
-      case Seq((pa, _, aHi), (pb, bLo, _)) =>
-        require(aHi < bLo,
-          s"gid ranges overlap between $pa (..$aHi) and $pb ($bLo..) — " +
-            "synapse ids would collide in the union")
-      case _ => ()
-    }
+    import graft.sources.TouchDataSource
+    val indexed = TouchDataSource.indexedDataFiles(inputs: _*)
+    TouchDataSource.requireDisjointGidRanges(indexed)
     val frames: Seq[DataFrame] =
       inputs.map(p => spark.read.format("touchbin").load(p))
-    graft.io.ParquetMeta.writeWithMeta(
-      frames.reduce(_ unionByName _), outDir,
-      kv = Map(
-        "touchdetector_version" -> indexes.head._2.versionString,
-        "touch2parquet_version" -> graft.BuildInfo.version),
-      options = Map(
-        "compression" -> "snappy",
-        "parquet.enable.dictionary" -> "false",
-        "parquet.block.size" -> (20 * 1024 * 1024).toString))
+    graft.pipelines.TouchToParquet.write(
+      frames.reduce(_ unionByName _), indexed.head.index, outDir)
   }
 
   def main(args: Array[String]): Unit = {
@@ -92,71 +67,68 @@ object Touch2Parquet {
   }
 }
 
-/** `runMain graft.cli.Touch2Sonata <touchesData.N> <outDir>` — the full
-  * reference pipeline in one command: TouchDetector binary →
+/** `runMain graft.cli.Parquet2Sonata <edgesParquetDir> <out.h5>
+  * <population> [sourceCol targetCol [enumCol...]]` — converts a
+  * parquet edge directory into one SONATA HDF5 edge file (ordered edge
+  * datasets, both CSR index directions, `@library` dictionaries), like
+  * the reference's `parquet2hdf5 <parquet-dir> <out.h5> <population>`
+  * (src/parquet2hdf5.cpp:171-251).
+  */
+object Parquet2Sonata {
+
+  /** The testable body (mains own the session): returns the edge count. */
+  def run(spark: SparkSession, parquetDir: String, outFile: String, population: String,
+          sourceCol: String = "source_node_id", targetCol: String = "target_node_id",
+          enumCols: Seq[String] = Seq.empty): Long = {
+    val edges = graft.io.SchemaSidecar.readParquetDir(spark, parquetDir)
+    // every column but the node ids and the dropped ones tiebreaks the
+    // order, so edge_id is a total order over the input
+    val tiebreak = edges.columns.filterNot(
+      (Seq(sourceCol, targetCol) ++ graft.pipelines.SonataH5.SkipColumns).contains).toSeq
+    val (result, release) = graft.pipelines.SonataH5.convert(spark, edges,
+      sourceCol, targetCol, outFile, population, tiebreak, enumCols)
+    try result.count() finally release()
+  }
+
+  def main(args: Array[String]): Unit = {
+    require(args.length >= 3,
+      "usage: Parquet2Sonata <edgesDir> <out.h5> <population> [sourceCol targetCol [enumCol...]]")
+    val sourceCol = if (args.length > 3) args(3) else "source_node_id"
+    val targetCol = if (args.length > 4) args(4) else "target_node_id"
+    val spark = Cli.session("parquet2sonata")
+    try {
+      val n = run(spark, args(0), args(1), args(2), sourceCol, targetCol, args.drop(5).toSeq)
+      println(s"parquet2sonata: wrote $n edges + indices to ${args(1)}")
+    } finally spark.stop()
+  }
+}
+
+/** `runMain graft.cli.Touch2Sonata <touchesData.N> <outDir> <population>`
+  * — the full reference pipeline in one command: TouchDetector binary →
   * `<outDir>/parquet` (provenance-stamped edge table) →
-  * `<outDir>/sonata` (SONATA-mirror layout: ordered `edges/`, both
-  * `indices/` directions, `@library/` dictionaries). Equivalent to
-  * `touch2parquet` followed by `parquet2hdf5` in the reference, with
-  * the HDF5 container mirrored as parquet directories — the group-name
-  * mapping to sonata_file.cpp:26-79 / index.cpp:27-31 is documented in
-  * README "Switching from the reference".
+  * `<outDir>/edges.h5` (SONATA edge file, `/edges/<population>/`).
+  * Equivalent to `touch2parquet` followed by `parquet2hdf5` in the
+  * reference.
   */
 object Touch2Sonata {
 
   /** The testable pipeline body (mains own session lifecycle, tests
     * share one): returns the ordered edge count.
     */
-  def run(spark: SparkSession, touchesData: String, outDir: String): Long = {
+  def run(spark: SparkSession, touchesData: String, outDir: String,
+          population: String): Long = {
     val parquetDir = s"$outDir/parquet"
     graft.pipelines.TouchToParquet.convert(spark, touchesData, parquetDir)
-    val edges = graft.io.SchemaSidecar.readParquetDir(spark, parquetDir)
-    // synapse_id is dropped by the sonata step (SkipColumns); everything
-    // else tiebreaks the total order like Parquet2Sonata
-    val tiebreak = edges.columns.filterNot(c =>
-      c == "source_node_id" || c == "target_node_id" || c == "synapse_id").toSeq
-    val (result, release) = graft.pipelines.EdgesToSonata.convertStamped(
-      spark, edges, "source_node_id", "target_node_id", s"$outDir/sonata", tiebreak)
-    val n = result.count()
-    release()
-    n
+    Parquet2Sonata.run(spark, parquetDir, s"$outDir/edges.h5", population)
   }
 
   def main(args: Array[String]): Unit = {
-    require(args.length == 2, "usage: Touch2Sonata <touchesData.N> <outDir>")
+    require(args.length == 3, "usage: Touch2Sonata <touchesData.N> <outDir> <population>")
     val spark = Cli.session("touch2sonata")
     try {
-      val n = run(spark, args(0), args(1))
-      println(s"touch2sonata: wrote $n edges + indices to ${args(1)}/sonata " +
+      val n = run(spark, args(0), args(1), args(2))
+      println(s"touch2sonata: wrote $n edges + indices to ${args(1)}/edges.h5 " +
         s"(intermediate parquet at ${args(1)}/parquet)")
-    } finally spark.stop()
-  }
-}
-
-/** `runMain graft.cli.Parquet2Sonata <edgesParquetDir> <outDir>
-  * [sourceCol targetCol [enumCol...]]` — converts a parquet edge
-  * directory into the SONATA-mirror layout (ordered position-stamped
-  * edges + both CSR index directions + @library dictionaries), like the
-  * reference's `parquet2hdf5` (src/parquet2hdf5.cpp:171-251) with the
-  * HDF5 container mirrored as parquet (SURVEY §2.1 S5).
-  */
-object Parquet2Sonata {
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: Parquet2Sonata <edgesDir> <outDir> [sourceCol targetCol [enumCol...]]")
-    val (in, out) = (args(0), args(1))
-    val sourceCol = if (args.length > 2) args(2) else "source_node_id"
-    val targetCol = if (args.length > 3) args(3) else "target_node_id"
-    val enums = args.drop(4).toSeq
-    val spark = Cli.session("parquet2sonata")
-    try {
-      val edges = graft.io.SchemaSidecar.readParquetDir(spark, in)
-      val tiebreak = edges.columns.filterNot(c =>
-        c == sourceCol || c == targetCol).toSeq // total order over all columns
-      val (result, release) = graft.pipelines.EdgesToSonata.convertStamped(
-        spark, edges, sourceCol, targetCol, out, tiebreak, enums)
-      println(s"parquet2sonata: wrote ${result.count()} edges + indices to $out")
-      release()
     } finally spark.stop()
   }
 }

@@ -52,23 +52,34 @@ object CsrIndex {
     */
   def buildStamped(edges: DataFrame, nodeCol: String, posCol: String,
                    nodeCount: Long): (DataFrame, DataFrame, () => Unit) = {
-    val spark = edges.sparkSession
     val (ranges, done) = RangeRle.numberedRanges(edges.select(
       lit(0).as("dir"), col(nodeCol).as("node_id"), col(posCol).as("pos")))
-    val secondary = ranges.select(
-      col("range_pos"),
-      col("range_start").as("edge_start"),
-      col("range_end").as("edge_end"))
+    (primary(ranges, nodeCount), secondary(ranges), done)
+  }
+
+  /** I6 `dense_left_join_sequence` over numbered ranges (`node_id`,
+    * `range_pos`, one direction): per node id in [0, nodeCount) the
+    * half-open slice (first_range, first_range + cnt) of the flattened
+    * range list, (0, 0) for edge-less ids (index.cpp:282-299). A node's
+    * ranges are numbered consecutively, so min + count bounds them.
+    */
+  def primary(ranges: DataFrame, nodeCount: Long): DataFrame = {
     val counts = ranges.groupBy(col("node_id"))
       .agg(count(lit(1)).as("cnt"), min(col("range_pos")).as("first_range"))
-    val primary = spark.range(0, nodeCount).toDF("node_id")
+    ranges.sparkSession.range(0, nodeCount).toDF("node_id")
       .join(counts, Seq("node_id"), "left_outer")
       .select(
         col("node_id"),
         coalesce(col("first_range"), lit(0L)).as("range_start"),
         coalesce(col("first_range") + col("cnt"), lit(0L)).as("range_end"))
-    (primary, secondary, done)
   }
+
+  /** The flattened range list: range_pos → (edge_start, edge_end). */
+  private def secondary(ranges: DataFrame): DataFrame =
+    ranges.select(
+      col("range_pos"),
+      col("range_start").as("edge_start"),
+      col("range_end").as("edge_end"))
 
   private def lineitemEdges(s: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_linenumber"))
@@ -94,23 +105,11 @@ object CsrIndex {
     // caches are released by the harness's per-query clearCache (the
     // Rle.scala registry note); compositions outside that contract
     // should thread _frame/_done through to their action site
-    val secondary = ranges.select(
-      col("range_pos"),
-      col("range_start").as("edge_start"),
-      col("range_end").as("edge_end"))
-    val counts = ranges.groupBy(col("node_id"))
-      .agg(count(lit(1)).as("cnt"), min(col("range_pos")).as("first_range"))
     // nodeCount from a direct footer-backed max scan of the key column
     // (the persisted edges scan the old route kept alive only for this)
     val nodeCount = nodeCountOf(
       Tables.lineitem(s, dir).select(col("l_orderkey").as("node_id")), "node_id")
-    val primary = s.range(0, nodeCount).toDF("node_id")
-      .join(counts, Seq("node_id"), "left_outer")
-      .select(
-        col("node_id"),
-        coalesce(col("first_range"), lit(0L)).as("range_start"),
-        coalesce(col("first_range") + col("cnt"), lit(0L)).as("range_end"))
-    (primary, secondary)
+    (primary(ranges, nodeCount), secondary(ranges))
   }
 
   /** max(col)+1 with empty-input → 0 (agg of empty yields a null row). */

@@ -3,26 +3,26 @@ package graft.pipelines
 import graft.{Q, Tables}
 import graft.io.Hdf5Mini
 import graft.io.Hdf5Mini.{DataRegion, DatasetSpec, GroupSpec}
-import graft.ops.Offsets
+import graft.ops.{CsrIndex, Offsets}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Pipeline S5, physical form: Parquet edge directory → a SONATA edge
-  * file in an ACTUAL HDF5 container, written by the repo's own minimal
-  * pure-JVM codec ([[graft.io.Hdf5Mini]]) — closing the one reference
-  * capability the parquet-mirror sink ([[EdgesToSonata]]) left open
-  * (reference: src/circuit/sonata_file.cpp:26-79 — `/edges/<pop>/` group
-  * tree, top-level node-id datasets, `0/` property group, `@library`
+/** Pipeline B (S3 → P6 → O5 → I1-I7 → S5): Parquet edge directory → a
+  * SONATA edge file in an HDF5 container, written by the repo's own
+  * minimal pure-JVM codec ([[graft.io.Hdf5Mini]]) — the reference's
+  * `parquet2hdf5` (src/parquet2hdf5.cpp:171-251; layout
+  * src/circuit/sonata_file.cpp:26-79 — `/edges/<pop>/` group tree,
+  * top-level node-id datasets, `0/` property group, `@library`
   * dictionaries; src/index/index.cpp:302-324 — `indices/{source_to_target,
   * target_to_source}/{node_id_to_ranges,range_to_edge_id}` 2-D uint64).
   *
-  * The DISTRIBUTED dataflow is byte-for-byte the one behind
-  * `edges_to_sonata` (same `globalPositionStamped` total order, same fused
-  * `RangeRle.numberedRanges` two-direction index build, same broadcast
-  * enum encode) — only the sink differs, mirroring the reference's own
-  * split between computation (MPI collectives) and container I/O (HDF5
-  * calls). Sink mechanics at scale:
+  * The distributed dataflow is the reference's MPI collectives as Spark
+  * stages: one `globalPositionStamped` total order (the exclusive prefix
+  * sum, O5), a broadcast enum encode, one fused
+  * `RangeRle.numberedRanges` two-direction RLE + numbering, and the
+  * dense primary join of `CsrIndex.primary`. Container I/O (the HDF5
+  * calls) is kept apart from that computation. Sink mechanics at scale:
   *
   *  1. driver writes the file's METADATA only (a few KB: superblock,
   *     groups, dataset headers) after three scalar facts are known —
@@ -40,7 +40,8 @@ import org.apache.spark.sql.types._
   */
 object SonataH5 {
 
-  private val SkipColumns = Seq("synapse_id", "__index_level_0__")
+  /** Columns dropped before writing: the touch synapse id and a pandas index. */
+  val SkipColumns: Seq[String] = Seq("synapse_id", "__index_level_0__")
   private val TopLevel = Set("source_node_id", "target_node_id", "edge_type_id")
 
   private def h5TypeOf(dt: DataType): Hdf5Mini.H5Type = dt match {
@@ -113,10 +114,14 @@ object SonataH5 {
   }
 
   /** Convert an edge DataFrame to a SONATA HDF5 file at `outFile`.
-    * Same contract as [[EdgesToSonata.convert]] (total order via
-    * `tiebreak`, dictionary columns via `enumCols`); `population` names
-    * the `/edges/<population>/` group. Returns the ordered, enum-coded
-    * edge frame (still persisted; unpersisted via the returned thunk).
+    * Rows are ordered by (source, target, `tiebreak`...) and `edge_id`
+    * is the row position in that order; `tiebreak` must complete a
+    * total order for the output to be deterministic. `enumCols` are
+    * dictionary-encoded into integer codes plus an `@library/<col>`
+    * values dataset (sonata_writer.cpp:102-111); [[SkipColumns]] are
+    * dropped. `population` names the `/edges/<population>/` group.
+    * Returns the ordered, enum-coded edge frame (still persisted;
+    * unpersisted via the returned thunk).
     */
   def convert(spark: SparkSession, edges: DataFrame,
               sourceCol: String, targetCol: String,
@@ -157,8 +162,10 @@ object SonataH5 {
     val sourceNodes = nodeCountOf("ms")
     val targetNodes = nodeCountOf("mt")
 
-    // both directions' CSR ranges, RLE'd + globally numbered in one pass
-    // (the edges_to_sonata dataflow, src/index/index.cpp:114-153/272-280)
+    // both directions' CSR ranges, RLE'd + globally numbered in one
+    // range shuffle: each edge explodes into a (dir, node, pos) pair per
+    // direction (src/index/index.cpp:114-153/272-280). The source
+    // direction's runs are maximal because the edges are source-sorted.
     val (numbered0, doneR) = graft.ops.RangeRle.numberedRanges(
       ordered.select(
         explode(array(
@@ -250,13 +257,7 @@ object SonataH5 {
               (r.getLong(0), Seq(u64Pair(r.getLong(1), r.getLong(2))))))
           }
         val primary = regions(s"/edges/$population/indices/$dirName/node_id_to_ranges")
-        val counts = nd.groupBy(col("node_id"))
-          .agg(count(lit(1)).as("cnt"), min(col("range_pos")).as("first_range"))
-        numbered.sparkSession.range(0, nodes).toDF("node_id")
-          .join(counts, Seq("node_id"), "left_outer")
-          .select(col("node_id"),
-            coalesce(col("first_range"), lit(0L)).as("range_start"),
-            coalesce(col("first_range") + col("cnt"), lit(0L)).as("range_end"))
+        CsrIndex.primary(nd, nodes)
           // the join's hash exchange scatters node ids; node_id is DENSE
           // (spark.range), so a range repartition + sort restores fully
           // contiguous per-partition runs — ONE pwrite per partition
@@ -288,87 +289,11 @@ object SonataH5 {
     (encoded, () => { ordered.unpersist(); () })
   }
 
-  /** Read a written container back into the edge DataFrame — the
-    * validation face of the sink, and the libsonata-consumer's view of
-    * the file. DISTRIBUTED like the write: the driver parses only the
-    * metadata prefix ([[Hdf5Mini.readMeta]]); each of the `spark.range`
-    * partitions positional-reads its disjoint row slice of every column
-    * region (one read per column per partition — the MPI-IO read
-    * analogue, reference src/index/index.cpp:157-180's hyperslab
-    * selects). Returns columns in dataset order plus `edge_id`.
-    */
-  def readEdges(spark: SparkSession, file: String, population: String,
-                partitions: Int = 32): DataFrame = {
-    val f = Hdf5Mini.readMeta(file)
-    val base = s"/edges/$population"
-    val topPaths = Seq("source_node_id", "target_node_id", "edge_type_id")
-      .map(n => s"$base/$n").filter(f.datasets.contains)
-    val propPaths = f.datasets.keys
-      .filter(p => p.startsWith(s"$base/0/") && !p.startsWith(s"$base/0/@library/"))
-    val colPaths = (topPaths ++ propPaths).distinct.sorted
-    val n = f.datasets(colPaths.head).dims.head
-    // everything the executors need, in plain serializable form; a
-    // chunked column (round 14) carries its chunk placement index and
-    // reads per-chunk segments — same bytes as contiguous
-    val cols: Seq[(String, Hdf5Mini.H5Type, Long, Option[Hdf5Mini.ChunkIndex])] =
-      colPaths.map { p =>
-        val ds = f.datasets(p)
-        require(ds.dims == Seq(n), s"sonata-h5: ragged edge column $p (${ds.dims} vs $n)")
-        (p.split('/').last, ds.dtype, ds.dataAddress,
-          if (ds.chunked) ds.chunkIndex else None)
-      }
-    val schema = StructType(StructField("edge_id", LongType, nullable = false) +:
-      cols.map {
-        case (name, Hdf5Mini.I32, _, _) => StructField(name, IntegerType, nullable = false)
-        case (name, Hdf5Mini.I16, _, _) => StructField(name, ShortType, nullable = false)
-        case (name, Hdf5Mini.I8, _, _)  => StructField(name, ByteType, nullable = false)
-        case (name, Hdf5Mini.F32, _, _) => StructField(name, FloatType, nullable = false)
-        case (name, Hdf5Mini.F64, _, _) => StructField(name, DoubleType, nullable = false)
-        // all unsigned widths (the SONATA spec's common dtypes) widen to
-        // LongType with zero-extension — see the read loop below
-        case (name, _, _, _)            => StructField(name, LongType, nullable = false)
-      })
-    val rowRdd = spark.range(0, n, 1, partitions).rdd.mapPartitions { ids =>
-      val idArr = ids.toArray
-      if (idArr.isEmpty) Iterator.empty
-      else {
-        // spark.range partitions are contiguous id runs
-        val lo = idArr.head
-        val count = idArr.length
-        val buffers = cols.map {
-          case (_, t, _, Some(ix)) =>
-            (t, Hdf5Mini.readChunkedSlice(file, ix, t.size, lo, count))
-          case (_, t, addr, None) =>
-            (t, Hdf5Mini.readSlice(file, addr, t.size, lo, count))
-        }
-        (0 until count).iterator.map { i =>
-          // explicit Seq[Any] blocks numeric-branch harmonization, which
-          // would silently widen the Int/Short branches to Double
-          val vals: Seq[Any] = buffers.map {
-            case (Hdf5Mini.I64 | Hdf5Mini.U64, bb) => bb.getLong(i * 8)
-            case (Hdf5Mini.I32, bb) => bb.getInt(i * 4)
-            case (Hdf5Mini.I16, bb) => bb.getShort(i * 2)
-            case (Hdf5Mini.I8, bb)  => bb.get(i)
-            // unsigned columns zero-extend to the declared LongType —
-            // sign-extension here would both corrupt large values and
-            // ClassCastException against the schema
-            case (Hdf5Mini.U32, bb) => bb.getInt(i * 4) & 0xFFFFFFFFL
-            case (Hdf5Mini.U16, bb) => (bb.getShort(i * 2) & 0xFFFF).toLong
-            case (Hdf5Mini.U8, bb)  => (bb.get(i) & 0xFF).toLong
-            case (Hdf5Mini.F64, bb) => bb.getDouble(i * 8)
-            case (Hdf5Mini.F32, bb) => bb.getFloat(i * 4)
-            case (t, _) => sys.error(s"sonata-h5: unsupported edge column type $t")
-          }
-          Row.fromSeq((lo + i) +: vals)
-        }
-      }
-    }
-    spark.createDataFrame(rowRdd, schema)
-  }
-
   /** Distributed read of a 2-D `[n][2]` uint64 dataset (the CSR index
-    * shape) → (row_id, a, b); same positional-slice model as
-    * [[readEdges]].
+    * shape) → (row_id, a, b). Each `spark.range` partition
+    * positional-reads its disjoint row slice (the MPI-IO read analogue,
+    * reference src/index/index.cpp:157-180's hyperslab selects); the
+    * driver parses only the metadata prefix ([[Hdf5Mini.readMeta]]).
     */
   def readPairs(spark: SparkSession, file: String, datasetPath: String,
                 partitions: Int = 32): DataFrame = {
@@ -397,10 +322,14 @@ object SonataH5 {
   }
 
   val queries: Map[String, Q] = Map(
-    // The edges_to_sonata mapping, but through the PHYSICAL container:
-    // convert lineitem edges to a real HDF5 file, then parse the file's
-    // bytes back and emit the edge table — the oracle match proves the
-    // full write→read round trip of the container, not just the dataflow.
+    // lineitem as the edge table (orderkey → suppkey edges) through the
+    // container: convert to an HDF5 file, then read the file's bytes back
+    // through the `sonatah5` source and emit the edge table — the oracle
+    // match proves the write→read round trip, including the enum column
+    // (codes = sorted-value ranks, a dense rank over the values in the
+    // oracle). The tiebreak completes the total order: without it, rows
+    // sharing (source, target) could swap positions and their payload
+    // columns would disagree with the oracle.
     "edges_to_sonata_h5" -> ((s, dir) => {
       val out = graft.io.TempDirs.create("sonatah5") + "/edges.h5"
       val edges = Tables.lineitem(s, dir).select(
@@ -414,7 +343,7 @@ object SonataH5 {
         tiebreak = Seq("edge_type_id", "my_attribute", "my_label"),
         enumCols = Seq("my_label"))
       done()
-      readEdges(s, out, "lineitem_edges")
+      s.read.format("sonatah5").option("population", "lineitem_edges").load(out)
         .select(col("source_node_id"), col("target_node_id"),
           col("edge_type_id").cast("int").as("edge_type_id"),
           col("my_attribute"), col("my_label"), col("edge_id"))
@@ -478,13 +407,13 @@ object SonataH5 {
         col("edge_type_id").cast("int").as("edge_type_id"),
         col("q_cents"), col("my_label")) ++
         (0 until WideProps).map(i => col(f"c$i%02d")) :+ col("edge_id")
-      readEdges(s, out, "wide_edges").select(cols: _*)
+      s.read.format("sonatah5").option("population", "wide_edges").load(out)
+        .select(cols: _*)
     }),
 
-    // The container through the DataSource V2 connector (round 13):
-    // same bytes as edges_to_sonata_h5, but read as a PLANNED Spark
-    // source — full-table face proves the connector end-to-end against
-    // the same oracle.
+    // The read-only face of edges_to_sonata_h5: the same bytes, from
+    // the container shared by the v2 faces, so the time is the
+    // connector's full-table scan without the conversion.
     "sonata_h5_v2_source" -> ((s, dir) =>
       s.read.format("sonatah5").option("population", "lineitem_edges")
         .load(v2Container(s, dir))
@@ -650,8 +579,8 @@ object SonataH5 {
          |FROM lineitem WHERE l_partkey % 16 = 0""".stripMargin
     },
 
-    // identical semantics to edges_to_sonata_h5 — the V2 face must
-    // produce the same table the RDD face does
+    // identical semantics to edges_to_sonata_h5: the shared container
+    // read back as a full table
     "sonata_h5_v2_source" ->
       """SELECT l_orderkey AS source_node_id, l_suppkey AS target_node_id,
         |  l_linenumber AS edge_type_id, l_quantity AS my_attribute,

@@ -37,15 +37,21 @@ object TouchToParquet {
   }
 
   def convert(spark: SparkSession, dataPath: String, outDir: String): DataFrame = {
-    // V2 connector: record-aligned splits, no zipWithIndex counting pass
-    val df = spark.read.format("touchbin").load(dataPath)
-    // footer provenance KVs, as the reference writer stamps them
-    // (src/touches/parquet_writer.cpp:115-120). Resolved through the
-    // connector's file resolver so directory inputs stamp the first
-    // file's index instead of failing index-name derivation on the
-    // directory path.
-    val index = graft.sources.TouchDataSource.indexedDataFiles(dataPath).head.index
-    graft.io.ParquetMeta.writeWithMeta(df, outDir,
+    // V2 connector: record-aligned splits, no zipWithIndex counting pass.
+    // The index is resolved through the connector's file resolver so
+    // directory inputs stamp the first file's index instead of failing
+    // index-name derivation on the directory path.
+    write(spark.read.format("touchbin").load(dataPath),
+      graft.sources.TouchDataSource.indexedDataFiles(dataPath).head.index, outDir)
+    spark.read.parquet(outDir)
+  }
+
+  /** The sink: decoded touches → parquet with the reference writer's
+    * knobs and footer provenance KVs (src/touches/parquet_writer.cpp:
+    * 115-120); `index` supplies the TouchDetector version string.
+    */
+  def write(touches: DataFrame, index: TouchBinary.TouchIndex, outDir: String): Unit =
+    graft.io.ParquetMeta.writeWithMeta(touches, outDir,
       kv = Map(
         "touchdetector_version" -> index.versionString,
         "touch2parquet_version" -> graft.BuildInfo.version),
@@ -53,8 +59,6 @@ object TouchToParquet {
         "compression" -> "snappy",
         "parquet.enable.dictionary" -> "false",
         "parquet.block.size" -> (20 * 1024 * 1024).toString))
-    spark.read.parquet(outDir)
-  }
 
   /** Rows-only queries (binary input is outside the SQL oracle's reach —
     * golden-compared against tests/testCircuit.parquet in ScalaTest

@@ -17,9 +17,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 /** DataSource V2 connector for SONATA HDF5 edge containers — the
   * container the sink ([[graft.pipelines.SonataH5]]) writes becomes a
   * first-class planned Spark source (`spark.read.format("sonatah5")
-  * .option("population", p).load(file)`), upgrading the RDD
-  * `readEdges` scan the same way [[TouchDataSource]] upgraded the
-  * touch scan:
+  * .option("population", p).load(file)`) and the only reader of its
+  * edge table:
   *
   *  - **True columnar pruning** (`SupportsPushDownRequiredColumns`):
   *    every SONATA column is its own contiguous dataset region, so a
@@ -100,10 +99,9 @@ object Hdf5DataSource {
     case _ => LongType
   }
 
-  /** Metadata-prefix parse → the edge-table layout (same column
-    * resolution as [[graft.pipelines.SonataH5.readEdges]]: top-level
-    * node/type datasets + the `0/` property group, `@library`
-    * excluded, name-sorted after the fixed top-level trio).
+  /** Metadata-prefix parse → the edge-table layout: the top-level
+    * node/type datasets the sink ([[graft.pipelines.SonataH5]]) writes,
+    * then the `0/` property group name-sorted, `@library` excluded.
     */
   def layout(path: String, population: Option[String]): Layout = {
     val f = Hdf5Mini.readMeta(path)

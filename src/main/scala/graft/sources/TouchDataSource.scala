@@ -137,13 +137,14 @@ object TouchDataSource {
     }
   }
 
-  /** Every data file paired with its decoded companion index, with the
-    * schema-agreement check of the reference's multi-input converter
-    * (parquet2hdf5.cpp:67-73): mixed record versions cannot share one
-    * schema, so the load fails before any task runs.
+  /** Every data file of `paths` (each a file or a directory) paired
+    * with its decoded companion index, with the schema-agreement check
+    * of the reference's multi-input converter (parquet2hdf5.cpp:67-73):
+    * mixed record versions cannot share one schema, so the load fails
+    * before any task runs.
     */
-  def indexedDataFiles(path: String): Seq[IndexedFile] = {
-    val indexed = resolveDataFiles(path).map { case (f, len) =>
+  def indexedDataFiles(paths: String*): Seq[IndexedFile] = {
+    val indexed = paths.flatMap(resolveDataFiles).map { case (f, len) =>
       IndexedFile(f, len, TouchBinary.readIndex(TouchBinary.indexFileFor(f))) }
     val versions = indexed.map(_.index.version).distinct
     require(versions.size == 1,
@@ -157,7 +158,7 @@ object TouchDataSource {
     * reference's per-rank split guarantees this). The ranges come from
     * the indexes, so the check is conservative: an index whose
     * short-read zero-padding pulls firstGid to 0 widens its claimed
-    * range (same trade as the CLI's convertMany).
+    * range. Directory scans and the CLI's multi-input union share it.
     */
   def requireDisjointGidRanges(indexed: Seq[IndexedFile]): Unit = {
     val ranges = indexed

@@ -7,10 +7,11 @@ import graft.cli.Touch2Parquet
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Multi-input touch2parquet: schema agreement, gid-range disjointness,
-  * and the provenance stamps of the single-input path. Uses synthetic
-  * v1 pairs so gid ranges can be controlled (every shipped fixture
-  * shares its gid range with itself).
+/** The converter CLIs. Multi-input touch2parquet: schema agreement,
+  * gid-range disjointness, and the provenance stamps of the
+  * single-input path, on synthetic v1 pairs so gid ranges can be
+  * controlled (every shipped fixture shares its gid range with itself).
+  * Touch2Sonata: the composed job's SONATA `.h5` on the v2 fixture.
   */
 class CliSpec extends AnyFunSuite {
 
@@ -57,30 +58,26 @@ class CliSpec extends AnyFunSuite {
     assert(e.getMessage.contains("gid ranges overlap"), e.getMessage)
   }
 
-  test("Touch2Sonata: one command produces the full SONATA-mirror tree") {
-    import graft.pipelines.TouchToParquet
+  test("Touch2Sonata: one command produces the parquet table and the SONATA .h5") {
+    import graft.pipelines.{SonataH5, TouchToParquet}
+    import org.apache.spark.sql.functions.{col, sum}
     val out = graft.io.TempDirs.create("touch2sonata")
-    val n = graft.cli.Touch2Sonata.run(spark, TouchToParquet.fixturePath(2), out)
+    val n = graft.cli.Touch2Sonata.run(spark, TouchToParquet.fixturePath(2), out, "touches")
     assert(n == 1104, s"v2 fixture has 1104 touches, got $n")
-    // intermediate parquet + every sonata tree node readable with the
-    // expected schema (README layout-mapping table)
     assert(spark.read.parquet(s"$out/parquet").count() == 1104)
-    val edges = spark.read.parquet(s"$out/sonata/edges")
+    val h5 = s"$out/edges.h5"
+    val edges = spark.read.format("sonatah5").load(h5)
     assert(edges.count() == 1104)
     assert(edges.columns.contains("edge_id") && !edges.columns.contains("synapse_id"))
     for (d <- Seq("source_to_target", "target_to_source")) {
-      val primary = spark.read.parquet(s"$out/sonata/indices/$d/primary")
-      assert(primary.columns.toSeq == Seq("node_id", "range_start", "range_end"))
-      assert(primary.count() > 0, s"$d primary empty")
-      val secondary = spark.read.parquet(s"$out/sonata/indices/$d/secondary")
-      assert(secondary.columns.toSeq == Seq("range_pos", "edge_start", "edge_end"))
+      val ranges = SonataH5.readPairs(spark, h5, s"/edges/touches/indices/$d/range_to_edge_id")
       // range_to_edge_id rows must cover every edge exactly once
-      val covered = secondary.agg(
-        org.apache.spark.sql.functions.sum(
-          org.apache.spark.sql.functions.col("edge_end") -
-            org.apache.spark.sql.functions.col("edge_start"))).collect()(0).getLong(0)
-      assert(covered == 1104, s"$d secondary covers $covered of 1104 edges")
+      val covered = ranges.agg(sum(col("b") - col("a"))).collect()(0).getLong(0)
+      assert(covered == 1104, s"$d range_to_edge_id covers $covered of 1104 edges")
     }
+    // the independent reading of the HDF5 spec accepts the container
+    val (code, log) = Hdf5ConformanceSpec.h5check(h5)
+    assert(code == 0, s"h5check rejected the Touch2Sonata container:\n$log")
   }
 
   test("convertMany rejects a schema-version mix") {

@@ -129,13 +129,6 @@ class ForeignHdf5FixtureSpec extends AnyFunSuite {
       "chunked pruned scan must read exactly planned_rows x width")
   }
 
-  test("the RDD edge reader reads chunked datasets through the chunk index") {
-    val rows = graft.pipelines.SonataH5.readEdges(spark, chunkedEdges, "pop")
-      .orderBy("edge_id").collect()
-    assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSeq ==
-      (0L until 12L).map(i => (i, i)))
-  }
-
   test("multi-column chunked container: mixed chunk sizes, exact values, no fill leak") {
     import org.apache.spark.sql.functions._
     // tiny partitions force several splits, so per-split index slicing

@@ -25,15 +25,9 @@ import scala.sys.process._
   *     red, proving the checks bite.
   */
 class Hdf5ConformanceSpec extends AnyFunSuite {
+  import Hdf5ConformanceSpec.h5check
 
   private val golden = "src/test/resources/golden_sonata.h5"
-
-  private def h5check(path: String): (Int, String) = {
-    val out = new StringBuilder
-    val code = Process(Seq("python3", "tools/h5check.py", path))
-      .!(ProcessLogger(l => out.append(l).append('\n'), l => out.append(l).append('\n')))
-    (code, out.toString)
-  }
 
   test("committed golden container passes the independent spec validator") {
     val (code, out) = h5check(golden)
@@ -115,5 +109,15 @@ class Hdf5ConformanceSpec extends AnyFunSuite {
       addrBytes.indices.forall(j => bytes(i + 2 + j) == addrBytes(j))).get
     assert(corrupted(b => b(layoutOff + 10) = (b(layoutOff + 10) + 1).toByte) != 0,
       "layout-size/dataspace mismatch not caught")
+  }
+}
+
+object Hdf5ConformanceSpec {
+  /** `tools/h5check.py` on one file: (exit code, combined output). */
+  def h5check(path: String): (Int, String) = {
+    val out = new StringBuilder
+    val code = Process(Seq("python3", "tools/h5check.py", path))
+      .!(ProcessLogger(l => out.append(l).append('\n'), l => out.append(l).append('\n')))
+    (code, out.toString)
   }
 }

@@ -63,56 +63,53 @@ class IndexDataflowSpec extends AnyFunSuite {
     }
   }
 
-  test("EdgesToSonata end-to-end: edges + all four index files on the fixture") {
-    import graft.pipelines.EdgesToSonata
-    val out = java.nio.file.Files.createTempDirectory("sonata_e2e").toString
+  test("SonataH5 end-to-end: edges, @library and all four index datasets") {
+    import graft.pipelines.SonataH5
+    val out = graft.io.TempDirs.create("sonata_e2e") + "/edges.h5"
     // an enum payload column: label = "even"/"odd" by target parity
-    val in = edges.select(col("source"), col("target"))
-      .withColumn("kind", when(col("target") % 2 === 0, "even").otherwise("odd"))
-    val result = EdgesToSonata.convert(spark, in, "source", "target", out,
-      tiebreak = Seq("kind"), enumCols = Seq("kind"))
+    val in = edges.select(col("source").as("source_node_id"), col("target").as("target_node_id"))
+      .withColumn("kind", when(col("target_node_id") % 2 === 0, "even").otherwise("odd"))
+    val (result, done) = SonataH5.convert(spark, in, "source_node_id", "target_node_id",
+      out, "fixture", tiebreak = Seq("kind"), enumCols = Seq("kind"))
     assert(result.count() == 100)
-    result.unpersist()
+    done()
 
     // @library/kind holds the sorted enum values; the edge column holds codes
-    val lib = spark.read.parquet(s"$out/@library/kind")
-      .collect().map(r => (r.getInt(0), r.getString(1))).sortBy(_._1)
-    assert(lib.toSeq == Seq((0, "even"), (1, "odd")))
-    val kinds = spark.read.parquet(s"$out/edges")
-      .select(col("target"), col("kind")).collect()
+    val lib = graft.io.Hdf5Mini.read(out).strings("/edges/fixture/0/@library/kind")
+    assert(lib.toSeq == Seq("even", "odd"))
+    val back = spark.read.format("sonatah5").load(out)
+    val kinds = back.select(col("target_node_id"), col("kind")).collect()
       .map(r => (r.getInt(0), r.getInt(1)))
     assert(kinds.length == 100)
     assert(kinds.forall { case (t, k) => k == (t % 2) },
       "code 0=even must appear exactly on even targets")
 
-    val edgesOut = spark.read.parquet(s"$out/edges")
-      .collect().map(r => (r.getAs[Int]("source"), r.getAs[Int]("target"),
-        r.getAs[Long]("edge_id"))).sortBy(_._3)
+    val edgesOut = back.collect().map(r => (r.getAs[Int]("source_node_id"),
+        r.getAs[Int]("target_node_id"), r.getAs[Long]("edge_id"))).sortBy(_._3)
     // edge_id = position in (source, target) order = s*10 + t
     for (((s, t, id), i) <- edgesOut.zipWithIndex)
       assert(id == i && s == 90 + i / 10 && t == i % 10, s"edge $i: ($s,$t,$id)")
 
-    val s2tPrim = spark.read.parquet(s"$out/indices/source_to_target/primary")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
+    def pairs(dir: String, ds: String): Array[(Long, Long, Long)] =
+      SonataH5.readPairs(spark, out, s"/edges/fixture/indices/$dir/$ds").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
+    val s2tPrim = pairs("source_to_target", "node_id_to_ranges")
     assert(s2tPrim.length == 100)
     assert(s2tPrim.take(90).forall { case (_, a, b) => a == 0 && b == 0 })
     for (i <- 0 until 10) {
       val (_, a, b) = s2tPrim(90 + i); assert(a == i && b == i + 1)
     }
-    val s2tSec = spark.read.parquet(s"$out/indices/source_to_target/secondary")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
+    val s2tSec = pairs("source_to_target", "range_to_edge_id")
     assert(s2tSec.length == 10)
     for (i <- 0 until 10) {
       val (_, s, e) = s2tSec(i); assert(s == 10 * i && e == 10 * (i + 1))
     }
-    val t2sPrim = spark.read.parquet(s"$out/indices/target_to_source/primary")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
+    val t2sPrim = pairs("target_to_source", "node_id_to_ranges")
     assert(t2sPrim.length == 10)
     for (i <- 0 until 10) {
       val (_, a, b) = t2sPrim(i); assert(a == 10 * i && b == 10 * i + 10)
     }
-    val t2sSec = spark.read.parquet(s"$out/indices/target_to_source/secondary")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
+    val t2sSec = pairs("target_to_source", "range_to_edge_id")
     assert(t2sSec.length == 100)
     for (t <- 0 until 10; j <- 0 until 10) {
       val (_, s, e) = t2sSec(10 * t + j)

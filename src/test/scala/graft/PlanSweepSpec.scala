@@ -261,8 +261,6 @@ object PlanSweepSpec {
         (X, "sweep runs over the DAY alphabet of the event range"),
       "pr_curve_by_threshold" ->
         (X, "curve windows run over the bounded score-threshold alphabet"),
-      "edges_to_sonata" ->
-        (X, "@library dictionary and population-level windows are enum-alphabet-sized"),
       "enum_library_codes" ->
         (X, "dictionary build windows over the enum value alphabet"),
       "exclusive_prefix_sum" ->

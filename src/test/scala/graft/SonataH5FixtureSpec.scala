@@ -29,7 +29,7 @@ class SonataH5FixtureSpec extends AnyFunSuite {
     done()
 
     // edge table: 100 rows, edge_id = 10*s + t in (source, target) order
-    val back = SonataH5.readEdges(spark, out, "fixture")
+    val back = spark.read.format("sonatah5").load(out)
       .collect().map(r => (r.getAs[Long]("edge_id"),
         r.getAs[Long]("source_node_id"), r.getAs[Long]("target_node_id")))
       .sortBy(_._1)

@@ -91,26 +91,32 @@ class Hdf5SourceSpec extends AnyFunSuite {
       s"pruned ${stats(pruned)} should be < full ${stats(full)}")
   }
 
-  test("V2 scan of a sink-written container matches the RDD read-back") {
+  test("V2 scan of a sink-written container matches the locally sorted input") {
     import graft.pipelines.SonataH5
+    import spark.implicits._
     val out = graft.io.TempDirs.create("h5v2spec") + "/edges.h5"
     val edges = graft.Tables.lineitem(spark, "/root/testdata/sf0.001")
       .limit(3000)
-      .select(col("l_orderkey").as("source_node_id"),
-        col("l_suppkey").as("target_node_id"),
-        col("l_linenumber").as("edge_type_id"),
-        col("l_quantity").as("my_attribute"))
-    val (_, done) = SonataH5.convert(spark, edges, "source_node_id",
-      "target_node_id", out, "pop",
+      .select(col("l_orderkey").cast("long").as("source_node_id"),
+        col("l_suppkey").cast("long").as("target_node_id"),
+        col("l_linenumber").cast("int").as("edge_type_id"),
+        col("l_quantity").cast("double").as("my_attribute"))
+    // collected once: the conversion and the expectation see the same rows
+    val input = edges.as[(Long, Long, Int, Double)].collect()
+    assert(input.length == 3000)
+    val (_, done) = SonataH5.convert(spark, input.toSeq.toDF(edges.columns.toSeq: _*),
+      "source_node_id", "target_node_id", out, "pop",
       tiebreak = Seq("edge_type_id", "my_attribute"))
     done()
     val viaV2 = spark.read.format("sonatah5").load(out)
       .select("edge_id", "source_node_id", "target_node_id",
         "edge_type_id", "my_attribute")
-    val viaRdd = SonataH5.readEdges(spark, out, "pop")
-      .select("edge_id", "source_node_id", "target_node_id",
-        "edge_type_id", "my_attribute")
-    assert(viaV2.exceptAll(viaRdd).isEmpty && viaRdd.exceptAll(viaV2).isEmpty)
+      .as[(Long, Long, Long, Int, Double)].collect().sortBy(_._1).toSeq
+    // edge_id = position in the (source, target, type, attribute) order
+    val want = input.sorted(Ordering.Tuple4(Ordering.Long, Ordering.Long,
+        Ordering.Int, Ordering.Double.TotalOrdering))
+      .zipWithIndex.map { case ((s, t, k, q), i) => (i.toLong, s, t, k, q) }.toSeq
+    assert(viaV2 == want)
   }
 
   test("column pruning skips bytes ON DISK: per-path byte meter vs planned width") {

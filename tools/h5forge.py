@@ -308,10 +308,10 @@ def group_block(base, members):
 
 def forge_chunked_edges(path, n=12, chunk=4):
     """A miniature SONATA-shaped tree /edges/pop/source_node_id whose
-    single edge column (int64, n values 0..n-1) is CHUNKED — drives the
-    planned readers' by-name rejection of chunked columns through the
-    real /edges discovery path (Hdf5DataSource.layout /
-    SonataH5.readEdges), where the flat fixtures cannot reach it."""
+    single edge column (int64, n values 0..n-1) is CHUNKED — drives a
+    chunked column through the sonatah5 source's real /edges discovery
+    path (Hdf5DataSource.layout), where the flat fixtures cannot reach
+    it."""
     # group size depends on member-name heap padding — probe each level
     root_base = 96
     edges_base = root_base + len(group_block(root_base, {"edges": 0})[0])
