@@ -253,7 +253,7 @@ object ProbeInventory {
     ++ fam("record-aligned fixed-width container face, linear by construction; the heavy " +
       "container I/O paths carry probes (edges_to_sonata_h5, sonata_h5_indices at 10x AND " +
       "100x)")(
-      "scan_touch_binary", "scan_touch_index", "scan_touch_v2_source",
+      "scan_touch_index", "scan_touch_v2_source",
       "touch2parquet_pipeline", "synapse_id_gen", "enum_library_codes",
       "partition_uniform")
     // ---- range-shuffle + bucket-prefix-sum layout idiom ----

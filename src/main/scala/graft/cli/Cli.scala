@@ -1,6 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** CLI parity with the reference's two converters, so a user can run the
   * same jobs without writing Scala (reference: `touch2parquet
@@ -30,40 +30,24 @@ private[cli] object Cli {
   * converts one or more TouchDetector binary files (each with its
   * companion index next to it) into a single parquet dataset, like the
   * reference's `touch2parquet` (src/touch2parquet.cpp:34-138). Multiple
-  * inputs must share a schema version; they union into one sink.
+  * inputs must share a schema version; they union into one sink
+  * (`TouchToParquet.convertMany`).
   */
 object Touch2Parquet {
 
-  /** Union several touch files into one parquet sink, with the checks
-    * the single-input path gets implicitly: the reference's
-    * schema-agreement rule (parquet2hdf5.cpp:67-73 — mixed record
-    * versions cannot share a sink) and gid-range disjointness (synapse
-    * ids are `(gid << 24) + ordinal`, so overlapping gid ranges across
-    * inputs would collide). Version STRING agreement is not required
-    * (git-hash builds of one record version differ), so the first
-    * input's string is stamped.
+  /** The testable body (mains own the session): returns the line
+    * `main` prints, with the row count the sink observed while writing.
     */
-  def convertMany(spark: SparkSession, inputs: Seq[String], outDir: String): Unit = {
-    import graft.sources.TouchDataSource
-    val indexed = TouchDataSource.indexedDataFiles(inputs: _*)
-    TouchDataSource.requireDisjointGidRanges(indexed)
-    val frames: Seq[DataFrame] =
-      inputs.map(p => spark.read.format("touchbin").load(p))
-    graft.pipelines.TouchToParquet.write(
-      frames.reduce(_ unionByName _), indexed.head.index, outDir)
+  def run(spark: SparkSession, inputs: Seq[String], outDir: String): String = {
+    val n = graft.pipelines.TouchToParquet.convertMany(spark, inputs, outDir)
+    s"touch2parquet: wrote $n rows to $outDir"
   }
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Touch2Parquet <touchesData.N>... <outDir>")
-    val inputs = args.dropRight(1)
-    val outDir = args.last
     val spark = Cli.session("touch2parquet")
-    try {
-      if (inputs.length == 1)
-        graft.pipelines.TouchToParquet.convert(spark, inputs.head, outDir)
-      else convertMany(spark, inputs.toSeq, outDir)
-      println(s"touch2parquet: wrote ${spark.read.parquet(outDir).count()} rows to $outDir")
-    } finally spark.stop()
+    try println(run(spark, args.dropRight(1).toSeq, args.last))
+    finally spark.stop()
   }
 }
 

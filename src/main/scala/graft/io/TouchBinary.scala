@@ -3,28 +3,22 @@ package graft.io
 import java.nio.{ByteBuffer, ByteOrder}
 
 import graft.model.TouchModel
-import graft.model.TouchModel._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.model.TouchModel.Version
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.SparkSession
 
-/** S1 `scan_touch_binary` + S2 `scan_touch_index` + W1 faithful synapse-id:
-  * distributed decode of TouchDetector fixed-width binary files.
-  *
-  * Spark-first design: `sc.binaryRecords(path, recordSize)` splits the data
-  * file into fixed-length records across executors (the reference's
-  * ceil-div record partitioning, src/touch2parquet.cpp:110-115, for free);
-  * `zipWithIndex` assigns the deterministic global row position (one extra
-  * count-only job — the O5 idiom); the tiny index header is decoded once on
-  * the driver and broadcast as the `shifts` array, exactly the reference's
-  * replicated-lookup join (src/touches/touch_reader.cpp:119-144, 275-288).
-  * At 100 TB: the scan is an embarrassingly parallel narrow stage — no
-  * shuffle anywhere.
+/** S2 `scan_touch_index`: driver-side decode of the TouchDetector
+  * companion index (`touches.N`) that every touch data file needs — its
+  * byte order, record version and per-neuron (shift, count) entries.
+  * The records themselves are decoded by the `touchbin` connector
+  * (`sources.TouchDataSource`), which carries this index in each split.
   *
   * Endianness: the index magic double 1.001 decides byte order
   * (touch_reader.cpp:14, 89). Unlike the reference — which swaps only the
   * first 10 words and silently corrupts big-endian v2/v3 floats
-  * (touch_reader.cpp:261-273, SURVEY.md §1.5.5) — we decode every field
-  * through a `ByteBuffer` carrying the detected order, so all versions are
-  * correct under either endianness.
+  * (touch_reader.cpp:261-273, SURVEY.md §1.5.5) — the connector decodes
+  * every field through a `ByteBuffer` carrying the detected order, so
+  * all versions are correct under either endianness.
   */
 object TouchBinary {
 
@@ -126,17 +120,20 @@ object TouchBinary {
     dataFile.substring(0, idx) + dataFile.substring(idx + 4)
   }
 
-  /** Whole-file read through the Hadoop FileSystem API (session conf
-    * when a session is active), so index decoding works on any
-    * Hadoop-supported store, not just local paths. Index files are
-    * 32 B + 16 B/neuron — always driver-sized.
+  /** The session's Hadoop conf when a session is active (propagates
+    * `spark.hadoop.*` overrides), a default conf otherwise.
+    */
+  def hadoopConf(): Configuration =
+    SparkSession.getActiveSession.map(_.sessionState.newHadoopConf())
+      .getOrElse(new Configuration())
+
+  /** Whole-file read through the Hadoop FileSystem API, so index
+    * decoding works on any Hadoop-supported store, not just local
+    * paths. Index files are 32 B + 16 B/neuron — always driver-sized.
     */
   private def readAllBytesFs(path: String): Array[Byte] = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val conf = SparkSession.getActiveSession
-      .map(_.sessionState.newHadoopConf())
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    val fs = p.getFileSystem(conf)
+    val fs = p.getFileSystem(hadoopConf())
     val len = fs.getFileStatus(p).getLen
     require(len <= Int.MaxValue, s"$path: implausibly large touch index ($len bytes)")
     val bytes = new Array[Byte](len.toInt)
@@ -198,85 +195,5 @@ object TouchBinary {
     }
     TouchIndex(order == ByteOrder.LITTLE_ENDIAN, versionString, version, firstGid,
       shifts, counts, truncated = zeroPad)
-  }
-
-  /** Decode one raw record (without synapse id). Field offsets follow the
-    * C struct layout (touch_defs.h:19-63; v2 pads to 80, v3 appends at 80).
-    */
-  private def decodeRecord(bytes: Array[Byte], order: ByteOrder, version: Int): Touch = {
-    val b = ByteBuffer.wrap(bytes).order(order)
-    val preNeuron = b.getInt(0); val preSection = b.getInt(4); val preSegment = b.getInt(8)
-    val postNeuron = b.getInt(12); val postSection = b.getInt(16); val postSegment = b.getInt(20)
-    val branch = b.getInt(24)
-    val distanceSoma = b.getFloat(28); val preOffset = b.getFloat(32); val postOffset = b.getFloat(36)
-    // hard guard from parquet_writer.cpp:207-219 (likely endianness damage)
-    if (preSection > 0x7fff)
-      throw new IllegalStateException(
-        s"Invalid pre_section $preSection for gid $preNeuron — check endianness")
-    var preSectionFraction = 0f; var postSectionFraction = 0f
-    var px = 0f; var py = 0f; var pz = 0f; var qx = 0f; var qy = 0f; var qz = 0f
-    var spineLength = -1f; var branchType = 255
-    var pcx = 0f; var pcy = 0f; var pcz = 0f; var qsx = 0f; var qsy = 0f; var qsz = 0f
-    if (version >= 2) {
-      preSectionFraction = b.getFloat(40); postSectionFraction = b.getFloat(44)
-      px = b.getFloat(48); py = b.getFloat(52); pz = b.getFloat(56)
-      qx = b.getFloat(60); qy = b.getFloat(64); qz = b.getFloat(68)
-      spineLength = b.getFloat(72)
-      branchType = b.get(76).toInt & 0xff
-    }
-    if (version >= 3) {
-      pcx = b.getFloat(80); pcy = b.getFloat(84); pcz = b.getFloat(88)
-      qsx = b.getFloat(92); qsy = b.getFloat(96); qsz = b.getFloat(100)
-    }
-    Touch(
-      synapse_id = 0L, // filled by caller
-      source_node_id = preNeuron, target_node_id = postNeuron,
-      efferent_section_id = preSection.toShort, efferent_segment_id = preSegment.toShort,
-      afferent_section_id = postSection.toShort, afferent_segment_id = postSegment.toShort,
-      efferent_segment_offset = preOffset, afferent_segment_offset = postOffset,
-      distance_soma = distanceSoma, branch_order = branch.toByte,
-      efferent_section_pos = preSectionFraction, afferent_section_pos = postSectionFraction,
-      efferent_surface_x = px, efferent_surface_y = py, efferent_surface_z = pz,
-      afferent_center_x = qx, afferent_center_y = qy, afferent_center_z = qz,
-      spine_length = spineLength,
-      // nibble unpack + MorphIO +1 soma offset (parquet_writer.h:63-69)
-      efferent_section_type = (((branchType >> 4) & 0xf) + 1).toByte,
-      afferent_section_type = ((branchType & 0xf) + 1).toByte,
-      efferent_center_x = pcx, efferent_center_y = pcy, efferent_center_z = pcz,
-      afferent_surface_x = qsx, afferent_surface_y = qsy, afferent_surface_z = qsz)
-  }
-
-  /** Distributed scan+decode of one touch data file into `Dataset[Touch]`
-    * with faithful synapse ids:
-    * `synapse_id = (gid << 24) + (global_row − shifts[gid])`, erroring past
-    * 2^24 touches per gid (touch_reader.cpp:275-288).
-    */
-  def read(spark: SparkSession, dataPath: String): Dataset[Touch] = {
-    import spark.implicits._
-    val index = readIndex(indexFileFor(dataPath))
-    val version = index.version
-    val orderIsLE = index.littleEndian
-    val bcast = spark.sparkContext.broadcast(index)
-    val records = spark.sparkContext.binaryRecords(dataPath, version.recordSize)
-    val vOrd = version.ordinal
-    records.zipWithIndex.map { case (bytes, globalRow) =>
-      val order = if (orderIsLE) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN
-      val t = decodeRecord(bytes, order, vOrd)
-      val gid = t.source_node_id
-      val k = globalRow - bcast.value.shiftOf(gid)
-      if (k >= (1L << 24))
-        throw new IllegalStateException(
-          s"gid $gid has more than 2^24 touches, can't assign unique synapse indices")
-      t.copy(synapse_id = (gid.toLong << 24) + k)
-    }.toDS()
-  }
-
-  /** Version-appropriate projection (the DataFrame a user of the reference
-    * would see for this file's schema version).
-    */
-  def readProjected(spark: SparkSession, dataPath: String): DataFrame = {
-    val index = readIndex(indexFileFor(dataPath))
-    val cols = TouchModel.columnsFor(index.version)
-    read(spark, dataPath).toDF().select(cols.head, cols.tail: _*)
   }
 }

@@ -1,8 +1,10 @@
 package graft.model
 
+import org.apache.spark.sql.types._
+
 /** Touch data model — the versioned record schema of TouchDetector binary
-  * output, re-expressed as one flat case class (Spark `Dataset[Touch]`)
-  * plus per-version column projections.
+  * output, re-expressed as one ordered layout table of flat output
+  * columns; each version's schema is a prefix of it.
   *
   * Reference layout: struct inheritance v1 ⊂ v2 ⊂ v3
   * (src/touches/touch_defs.h:19-92); raw record widths incl. C padding are
@@ -21,13 +23,14 @@ object TouchModel {
   /** Version sniff from the index-file version string
     * (src/touches/touch_reader.cpp:95-117): `>=6` or `>=5.4` → V3,
     * `>=5` or `>=4.99` → V2, anything non-numeric (git hashes) → V1.
-    * Mimics C++ `std::stoi` (parses a leading integer, throws only if none).
+    * Mimics C++ `std::stoi` (parses a leading integer, throws if there is
+    * none or it overflows int32; the reference's catch-all makes either V1).
     */
   def sniffVersion(versionString: String): Version = {
     val clean = versionString.takeWhile(_ != '\u0000')
     def stoi(s: String): Option[Int] = {
       val m = "^[+-]?\\d+".r.findFirstIn(s.trim)
-      m.map(_.toInt)
+      m.flatMap(d => scala.util.Try(d.toInt).toOption)
     }
     // -1 keeps trailing empty components: "5." must yield ["5", ""] so
     // the empty component rejects the string to V1 exactly like the
@@ -45,61 +48,54 @@ object TouchModel {
     }
   }
 
-  /** Fully decoded touch row (v3 superset; v1/v2 reads leave the defaults
-    * from touch_defs.h:36-40 — spine_length = -1, branch_type = 255 i.e.
-    * section types 16/16 after unpack — but those columns are projected
-    * away for v1 anyway).
+  /** One output column of the decoded record: its name, Spark type,
+    * the byte offset of its source field in the raw C struct
+    * (touch_defs.h:19-63; v2 pads to 80, v3 appends at 80) and the
+    * first record version that carries it. Int and float columns read
+    * the 4-byte word at `offset`; short and byte columns narrow the
+    * int32 word there (section/segment ids, branch order). The three
+    * `derived` columns are computed rather than read as their type at
+    * `offset`, and their decoders are named in
+    * `sources.TouchDataSource.extractor`: `synapse_id` (from the pre-gid
+    * word at 0 and the row's position), and the two section types (the
+    * nibbles of the `branch_type` byte at 76).
     */
-  final case class Touch(
-      synapse_id: Long,
-      source_node_id: Int,
-      target_node_id: Int,
-      efferent_section_id: Short,
-      efferent_segment_id: Short,
-      afferent_section_id: Short,
-      afferent_segment_id: Short,
-      efferent_segment_offset: Float,
-      afferent_segment_offset: Float,
-      distance_soma: Float,
-      branch_order: Byte,
-      efferent_section_pos: Float,
-      afferent_section_pos: Float,
-      efferent_surface_x: Float,
-      efferent_surface_y: Float,
-      efferent_surface_z: Float,
-      afferent_center_x: Float,
-      afferent_center_y: Float,
-      afferent_center_z: Float,
-      spine_length: Float,
-      efferent_section_type: Byte,
-      afferent_section_type: Byte,
-      efferent_center_x: Float,
-      efferent_center_y: Float,
-      efferent_center_z: Float,
-      afferent_surface_x: Float,
-      afferent_surface_y: Float,
-      afferent_surface_z: Float)
+  final case class Field(name: String, dataType: DataType, offset: Int, since: Int,
+                         derived: Boolean = false)
 
-  val v1Columns: Seq[String] = Seq(
-    "synapse_id", "source_node_id", "target_node_id",
-    "efferent_section_id", "efferent_segment_id",
-    "afferent_section_id", "afferent_segment_id",
-    "efferent_segment_offset", "afferent_segment_offset",
-    "distance_soma", "branch_order")
+  /** The record layout, in output column order. */
+  val Layout: Seq[Field] = Seq(
+    Field("synapse_id", LongType, 0, 1, derived = true),
+    Field("source_node_id", IntegerType, 0, 1),
+    Field("target_node_id", IntegerType, 12, 1),
+    Field("efferent_section_id", ShortType, 4, 1),
+    Field("efferent_segment_id", ShortType, 8, 1),
+    Field("afferent_section_id", ShortType, 16, 1),
+    Field("afferent_segment_id", ShortType, 20, 1),
+    Field("efferent_segment_offset", FloatType, 32, 1),
+    Field("afferent_segment_offset", FloatType, 36, 1),
+    Field("distance_soma", FloatType, 28, 1),
+    Field("branch_order", ByteType, 24, 1),
+    Field("efferent_section_pos", FloatType, 40, 2),
+    Field("afferent_section_pos", FloatType, 44, 2),
+    Field("efferent_surface_x", FloatType, 48, 2),
+    Field("efferent_surface_y", FloatType, 52, 2),
+    Field("efferent_surface_z", FloatType, 56, 2),
+    Field("afferent_center_x", FloatType, 60, 2),
+    Field("afferent_center_y", FloatType, 64, 2),
+    Field("afferent_center_z", FloatType, 68, 2),
+    Field("spine_length", FloatType, 72, 2),
+    Field("efferent_section_type", ByteType, 76, 2, derived = true),
+    Field("afferent_section_type", ByteType, 76, 2, derived = true),
+    Field("efferent_center_x", FloatType, 80, 3),
+    Field("efferent_center_y", FloatType, 84, 3),
+    Field("efferent_center_z", FloatType, 88, 3),
+    Field("afferent_surface_x", FloatType, 92, 3),
+    Field("afferent_surface_y", FloatType, 96, 3),
+    Field("afferent_surface_z", FloatType, 100, 3))
 
-  val v2Columns: Seq[String] = v1Columns ++ Seq(
-    "efferent_section_pos", "afferent_section_pos",
-    "efferent_surface_x", "efferent_surface_y", "efferent_surface_z",
-    "afferent_center_x", "afferent_center_y", "afferent_center_z",
-    "spine_length", "efferent_section_type", "afferent_section_type")
+  def field(name: String): Field = Layout.find(_.name == name)
+    .getOrElse(throw new IllegalArgumentException(s"no touch field $name"))
 
-  val v3Columns: Seq[String] = v2Columns ++ Seq(
-    "efferent_center_x", "efferent_center_y", "efferent_center_z",
-    "afferent_surface_x", "afferent_surface_y", "afferent_surface_z")
-
-  def columnsFor(v: Version): Seq[String] = v match {
-    case V1 => v1Columns
-    case V2 => v2Columns
-    case V3 => v3Columns
-  }
+  def fieldsFor(v: Version): Seq[Field] = Layout.filter(_.since <= v.ordinal)
 }

@@ -2,7 +2,9 @@ package graft.pipelines
 
 import graft.Q
 import graft.io.TouchBinary
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.TouchDataSource
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Pipeline A end-to-end (S1 → W1 → P1-P4 → S4): TouchDetector binary →
   * columnar Parquet (reference: src/touch2parquet.cpp:34-138).
@@ -37,21 +39,39 @@ object TouchToParquet {
   }
 
   def convert(spark: SparkSession, dataPath: String, outDir: String): DataFrame = {
-    // V2 connector: record-aligned splits, no zipWithIndex counting pass.
-    // The index is resolved through the connector's file resolver so
-    // directory inputs stamp the first file's index instead of failing
-    // index-name derivation on the directory path.
-    write(spark.read.format("touchbin").load(dataPath),
-      graft.sources.TouchDataSource.indexedDataFiles(dataPath).head.index, outDir)
+    convertMany(spark, Seq(dataPath), outDir)
     spark.read.parquet(outDir)
+  }
+
+  /** One or more touch inputs (each a data file or a directory, with
+    * its companion indexes) unioned into one parquet sink; returns the
+    * rows written. Checks, all before the sink starts, so bad input
+    * fails before the output directory exists:
+    *  - the reference's schema-agreement rule (parquet2hdf5.cpp:67-73 —
+    *    mixed record versions cannot share a sink);
+    *  - gid-range disjointness (synapse ids are `(gid << 24) + ordinal`,
+    *    so overlapping gid ranges across files would collide);
+    *  - every data file's length is a whole number of records.
+    * Version STRING agreement is not required (git-hash builds of one
+    * record version differ), so the first file's string is stamped.
+    */
+  def convertMany(spark: SparkSession, inputs: Seq[String], outDir: String): Long = {
+    val indexed = TouchDataSource.indexedDataFiles(inputs: _*)
+    TouchDataSource.requireDisjointGidRanges(indexed)
+    indexed.foreach(_.numRecords)
+    write(inputs.map(p => spark.read.format("touchbin").load(p)).reduce(_ unionByName _),
+      indexed.head.index, outDir)
   }
 
   /** The sink: decoded touches → parquet with the reference writer's
     * knobs and footer provenance KVs (src/touches/parquet_writer.cpp:
     * 115-120); `index` supplies the TouchDetector version string.
+    * Returns the rows written, counted by an `Observation` on the
+    * written frame rather than by reading the sink back.
     */
-  def write(touches: DataFrame, index: TouchBinary.TouchIndex, outDir: String): Unit =
-    graft.io.ParquetMeta.writeWithMeta(touches, outDir,
+  def write(touches: DataFrame, index: TouchBinary.TouchIndex, outDir: String): Long = {
+    val rows = Observation()
+    graft.io.ParquetMeta.writeWithMeta(touches.observe(rows, count(lit(1)).as("rows")), outDir,
       kv = Map(
         "touchdetector_version" -> index.versionString,
         "touch2parquet_version" -> graft.BuildInfo.version),
@@ -59,16 +79,17 @@ object TouchToParquet {
         "compression" -> "snappy",
         "parquet.enable.dictionary" -> "false",
         "parquet.block.size" -> (20 * 1024 * 1024).toString))
+    rows.get("rows").asInstanceOf[Long]
+  }
 
   /** Rows-only queries (binary input is outside the SQL oracle's reach —
     * golden-compared against tests/testCircuit.parquet in ScalaTest
     * instead, the same fixture the reference's own CI uses).
     */
   val queries: Map[String, Q] = Map(
-    "scan_touch_binary" -> ((s, _) => TouchBinary.readProjected(s, fixturePath(2))),
-    // same decode through the DataSource V2 connector (split planning +
-    // decode-time column pruning); equality with the RDD path is
-    // asserted in TouchDataSourceSpec
+    // the DataSource V2 connector (split planning + decode-time column
+    // pruning); TouchDataSourceSpec checks its rows against the
+    // independent tools/touchcheck.py on every fixture version
     "scan_touch_v2_source" -> ((s, _) =>
       s.read.format("touchbin").load(fixturePath(2))),
     "scan_touch_index" -> ((s, _) => {

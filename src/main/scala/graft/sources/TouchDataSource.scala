@@ -8,7 +8,6 @@ import graft.io.TouchBinary.TouchIndex
 import graft.model.TouchModel
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HadoopPath}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -22,8 +21,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSource V2 connector for TouchDetector binary files — the
   * "custom connector" rung of the extension ladder (SURVEY.md §7.4's
-  * "revisit for 100 TB"), upgrading the RDD `binaryRecords` scan to a
-  * planned Batch source:
+  * "revisit for 100 TB") and the only decoder of touch records: a
+  * planned Batch source over the layout table in `model.TouchModel`:
   *
   *  - **Split planning**: the fixed record width makes record-aligned
   *    byte-range splits exact — `planInputPartitions` carves each file
@@ -57,9 +56,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    directory — the interactive-peek path.
   *  - **Faithful synapse ids without a count job**: global row =
   *    `split start record + local index` is known statically from the
-  *    split plan (the RDD path needs `zipWithIndex`'s extra pass), and
-  *    the id uses the same broadcast-free shifts lookup
-  *    (touch_reader.cpp:275-288) carried in the serialized partition.
+  *    split plan (no `zipWithIndex` counting pass), and the id uses the
+  *    index's shifts lookup (touch_reader.cpp:275-288) carried in the
+  *    serialized partition.
   *  - **Directory scans**: a directory path resolves to every `*Data*`
   *    file inside it in name order, each paired with its own companion
   *    index; all files must agree on the schema version (the
@@ -74,13 +73,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    through `org.apache.hadoop.fs.FileSystem` (the session's Hadoop
   *    conf, serialized to executors), so the source works on any
   *    Hadoop-supported store, not just the local filesystem — and a
-  *    file whose length is not a record multiple is rejected loudly,
-  *    the same truncation guard the RDD path inherits from Hadoop's
-  *    fixed-length input format.
+  *    file whose length is not a record multiple is rejected loudly at
+  *    split planning, naming the byte offset of the partial record.
   *
   * Usage: `spark.read.format("touchbin").load(dataPathOrDir)` (registered
   * via `DataSourceRegister`) — schema, endianness, and version come
-  * from the companion index files exactly as in `TouchBinary`.
+  * from the companion index files decoded by `io.TouchBinary.readIndex`.
   */
 class TouchDataSource extends TableProvider with DataSourceRegister {
 
@@ -105,18 +103,24 @@ class TouchDataSource extends TableProvider with DataSourceRegister {
 
 object TouchDataSource {
 
-  /** The session's Hadoop conf when a session is active (propagates
-    * `spark.hadoop.*` overrides), a default conf otherwise.
-    */
-  def hadoopConf(): Configuration =
-    SparkSession.getActiveSession.map(_.sessionState.newHadoopConf())
-      .getOrElse(new Configuration())
-
   /** One data file with its byte length (captured during the listing —
     * no second metadata round-trip at split planning) and its decoded
     * companion index.
     */
-  final case class IndexedFile(path: String, length: Long, index: TouchIndex)
+  final case class IndexedFile(path: String, length: Long, index: TouchIndex) {
+    /** Whole records in the file; a length that is not a record
+      * multiple is a truncated or corrupt file, rejected with the byte
+      * offset where its partial record starts.
+      */
+    def numRecords: Long = {
+      val recSize = index.version.recordSize
+      require(length % recSize == 0,
+        s"$path: length $length is not a multiple of the v${index.version.ordinal} " +
+          s"record size $recSize — truncated or corrupt input " +
+          s"(partial record at byte ${length - length % recSize})")
+      length / recSize
+    }
+  }
 
   /** A directory resolves to its `*Data*` files in name order (the
     * index companion of `fooData.N` is `foo.N`, so only data files
@@ -125,7 +129,7 @@ object TouchDataSource {
     */
   def resolveDataFiles(path: String): Seq[(String, Long)] = {
     val p = new HadoopPath(path)
-    val fs = p.getFileSystem(hadoopConf())
+    val fs = p.getFileSystem(TouchBinary.hadoopConf())
     val status = fs.getFileStatus(p)
     if (!status.isDirectory) Seq(path -> status.getLen)
     else {
@@ -175,78 +179,51 @@ object TouchDataSource {
     }
   }
 
-  private val fieldType: Map[String, DataType] = Map(
-    "synapse_id" -> LongType,
-    "source_node_id" -> IntegerType, "target_node_id" -> IntegerType,
-    "efferent_section_id" -> ShortType, "efferent_segment_id" -> ShortType,
-    "afferent_section_id" -> ShortType, "afferent_segment_id" -> ShortType,
-    "efferent_segment_offset" -> FloatType, "afferent_segment_offset" -> FloatType,
-    "distance_soma" -> FloatType, "branch_order" -> ByteType,
-    "efferent_section_pos" -> FloatType, "afferent_section_pos" -> FloatType,
-    "efferent_surface_x" -> FloatType, "efferent_surface_y" -> FloatType,
-    "efferent_surface_z" -> FloatType,
-    "afferent_center_x" -> FloatType, "afferent_center_y" -> FloatType,
-    "afferent_center_z" -> FloatType,
-    "spine_length" -> FloatType,
-    "efferent_section_type" -> ByteType, "afferent_section_type" -> ByteType,
-    "efferent_center_x" -> FloatType, "efferent_center_y" -> FloatType,
-    "efferent_center_z" -> FloatType,
-    "afferent_surface_x" -> FloatType, "afferent_surface_y" -> FloatType,
-    "afferent_surface_z" -> FloatType)
-
   def schemaFor(version: TouchModel.Version): StructType =
-    StructType(TouchModel.columnsFor(version).map(c =>
-      StructField(c, fieldType(c), nullable = false)))
+    StructType(TouchModel.fieldsFor(version).map(f =>
+      StructField(f.name, f.dataType, nullable = false)))
 
   /** Per-field decoder: (record buffer, record base, global row) →
-    * Catalyst value. The struct offsets follow touch_defs.h:19-63.
+    * Catalyst value. Plain fields read their `TouchModel.Layout` word;
+    * the derived and guarded fields are decoded by name.
     */
   private[sources] def extractor(name: String, index: TouchIndex):
-      (ByteBuffer, Int, Long) => Any = name match {
-    case "synapse_id" => (b, base, row) => {
-      val gid = b.getInt(base)
-      val k = row - index.shiftOf(gid)
-      if (k >= (1L << 24))
-        throw new IllegalStateException(
-          s"gid $gid has more than 2^24 touches, can't assign unique synapse indices")
-      (gid.toLong << 24) + k
+      (ByteBuffer, Int, Long) => Any = {
+    val f = TouchModel.field(name)
+    val off = f.offset
+    f.name match {
+      case "synapse_id" => (b, base, row) => {
+        val gid = b.getInt(base + off)
+        val k = row - index.shiftOf(gid)
+        if (k >= (1L << 24))
+          throw new IllegalStateException(
+            s"gid $gid has more than 2^24 touches, can't assign unique synapse indices")
+        (gid.toLong << 24) + k
+      }
+      case "efferent_section_id" =>
+        val gidOff = TouchModel.field("source_node_id").offset
+        (b, base, _) => {
+          val s = b.getInt(base + off)
+          // hard guard from parquet_writer.cpp:207-219
+          if (s > 0x7fff) throw new IllegalStateException(
+            s"Invalid pre_section $s for gid ${b.getInt(base + gidOff)} — check endianness")
+          s.toShort
+        }
+      // nibble unpack + MorphIO +1 soma offset (parquet_writer.h:63-69)
+      case "efferent_section_type" => (b, base, _) =>
+        ((((b.get(base + off).toInt & 0xff) >> 4) & 0xf) + 1).toByte
+      case "afferent_section_type" => (b, base, _) =>
+        (((b.get(base + off).toInt & 0xff) & 0xf) + 1).toByte
+      case _ if f.derived =>
+        throw new IllegalStateException(s"touch field $name is derived but has no decoder")
+      case _ => f.dataType match {
+        case IntegerType => (b, base, _) => b.getInt(base + off)
+        case ShortType => (b, base, _) => b.getInt(base + off).toShort
+        case ByteType => (b, base, _) => b.getInt(base + off).toByte
+        case FloatType => (b, base, _) => b.getFloat(base + off)
+        case t => throw new IllegalStateException(s"touch field $name: no decoder for $t")
+      }
     }
-    case "source_node_id" => (b, base, _) => b.getInt(base)
-    case "target_node_id" => (b, base, _) => b.getInt(base + 12)
-    case "efferent_section_id" => (b, base, _) => {
-      val s = b.getInt(base + 4)
-      // hard guard from parquet_writer.cpp:207-219
-      if (s > 0x7fff) throw new IllegalStateException(
-        s"Invalid pre_section $s for gid ${b.getInt(base)} — check endianness")
-      s.toShort
-    }
-    case "efferent_segment_id" => (b, base, _) => b.getInt(base + 8).toShort
-    case "afferent_section_id" => (b, base, _) => b.getInt(base + 16).toShort
-    case "afferent_segment_id" => (b, base, _) => b.getInt(base + 20).toShort
-    case "branch_order" => (b, base, _) => b.getInt(base + 24).toByte
-    case "distance_soma" => (b, base, _) => b.getFloat(base + 28)
-    case "efferent_segment_offset" => (b, base, _) => b.getFloat(base + 32)
-    case "afferent_segment_offset" => (b, base, _) => b.getFloat(base + 36)
-    case "efferent_section_pos" => (b, base, _) => b.getFloat(base + 40)
-    case "afferent_section_pos" => (b, base, _) => b.getFloat(base + 44)
-    case "efferent_surface_x" => (b, base, _) => b.getFloat(base + 48)
-    case "efferent_surface_y" => (b, base, _) => b.getFloat(base + 52)
-    case "efferent_surface_z" => (b, base, _) => b.getFloat(base + 56)
-    case "afferent_center_x" => (b, base, _) => b.getFloat(base + 60)
-    case "afferent_center_y" => (b, base, _) => b.getFloat(base + 64)
-    case "afferent_center_z" => (b, base, _) => b.getFloat(base + 68)
-    case "spine_length" => (b, base, _) => b.getFloat(base + 72)
-    // nibble unpack + MorphIO +1 soma offset (parquet_writer.h:63-69)
-    case "efferent_section_type" => (b, base, _) =>
-      ((((b.get(base + 76).toInt & 0xff) >> 4) & 0xf) + 1).toByte
-    case "afferent_section_type" => (b, base, _) =>
-      (((b.get(base + 76).toInt & 0xff) & 0xf) + 1).toByte
-    case "efferent_center_x" => (b, base, _) => b.getFloat(base + 80)
-    case "efferent_center_y" => (b, base, _) => b.getFloat(base + 84)
-    case "efferent_center_z" => (b, base, _) => b.getFloat(base + 88)
-    case "afferent_surface_x" => (b, base, _) => b.getFloat(base + 92)
-    case "afferent_surface_y" => (b, base, _) => b.getFloat(base + 96)
-    case "afferent_surface_z" => (b, base, _) => b.getFloat(base + 100)
   }
 }
 
@@ -451,13 +428,7 @@ private[sources] class TouchCountScan(path: String,
     s"touchbin-count $path files=${indexed.size} PushedAggregates: count (metadata-only)"
 
   override def planInputPartitions(): Array[InputPartition] =
-    indexed.map { case TouchDataSource.IndexedFile(file, fileLen, index) =>
-      val recSize = index.version.recordSize
-      require(fileLen % recSize == 0,
-        s"$file: length $fileLen is not a multiple of the v${index.version.ordinal} " +
-          s"record size $recSize — truncated or corrupt input")
-      TouchCountSplit(fileLen / recSize): InputPartition
-    }.toArray
+    indexed.map(f => TouchCountSplit(f.numRecords): InputPartition).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new TouchCountReaderFactory(nCounts)
@@ -572,13 +543,9 @@ private[sources] class TouchScan(path: String,
     // ranges; a projection without it can scan overlapping inputs freely
     if (required.fieldNames.contains("synapse_id"))
       TouchDataSource.requireDisjointGidRanges(indexed)
-    val splits = indexed.flatMap { case TouchDataSource.IndexedFile(file, fileLen, index) =>
+    val splits = indexed.flatMap { case f @ TouchDataSource.IndexedFile(file, _, index) =>
       val recSize = index.version.recordSize
-      // same loud truncation guard as Hadoop's fixed-length input format
-      require(fileLen % recSize == 0,
-        s"$file: length $fileLen is not a multiple of the v${index.version.ordinal} " +
-          s"record size $recSize — truncated or corrupt input")
-      val nRecords = fileLen / recSize
+      val nRecords = f.numRecords
       // pushed gid intervals → this file's record ranges from ITS OWN
       // index (clamped: an index may claim records past a short data
       // file; ranges come back merged-disjoint so no record plans
@@ -612,7 +579,7 @@ private[sources] class TouchScan(path: String,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new TouchReaderFactory(
-      new SerializableHadoopConf(TouchDataSource.hadoopConf()),
+      new SerializableHadoopConf(TouchBinary.hadoopConf()),
       required.fieldNames)
 }
 

@@ -4,6 +4,7 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.Files
 
 import graft.cli.Touch2Parquet
+import graft.pipelines.TouchToParquet
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -37,7 +38,7 @@ class CliSpec extends AnyFunSuite {
 
   test("convertMany unions disjoint-gid inputs with unique synapse ids and stamps") {
     val out = graft.io.TempDirs.create("cli_union")
-    Touch2Parquet.convertMany(spark, Seq(v1Pair(7, 2), v1Pair(100, 3)), out)
+    assert(TouchToParquet.convertMany(spark, Seq(v1Pair(7, 2), v1Pair(100, 3)), out) == 5)
     val rows = spark.read.parquet(out).select("synapse_id").collect().map(_.getLong(0))
     assert(rows.length == 5)
     assert(rows.distinct.length == 5, "synapse ids must be unique across the union")
@@ -52,14 +53,14 @@ class CliSpec extends AnyFunSuite {
 
   test("convertMany rejects overlapping gid ranges (synapse ids would collide)") {
     val e = intercept[IllegalArgumentException] {
-      Touch2Parquet.convertMany(spark, Seq(v1Pair(7, 2), v1Pair(7, 3)),
+      TouchToParquet.convertMany(spark, Seq(v1Pair(7, 2), v1Pair(7, 3)),
         graft.io.TempDirs.create("cli_overlap"))
     }
     assert(e.getMessage.contains("gid ranges overlap"), e.getMessage)
   }
 
   test("Touch2Sonata: one command produces the parquet table and the SONATA .h5") {
-    import graft.pipelines.{SonataH5, TouchToParquet}
+    import graft.pipelines.SonataH5
     import org.apache.spark.sql.functions.{col, sum}
     val out = graft.io.TempDirs.create("touch2sonata")
     val n = graft.cli.Touch2Sonata.run(spark, TouchToParquet.fixturePath(2), out, "touches")
@@ -76,14 +77,20 @@ class CliSpec extends AnyFunSuite {
       assert(covered == 1104, s"$d range_to_edge_id covers $covered of 1104 edges")
     }
     // the independent reading of the HDF5 spec accepts the container
-    val (code, log) = Hdf5ConformanceSpec.h5check(h5)
+    val (code, log) = ToolCheck.h5check(h5)
     assert(code == 0, s"h5check rejected the Touch2Sonata container:\n$log")
   }
 
+  test("Touch2Parquet prints the row count observed while writing") {
+    val out = graft.io.TempDirs.create("cli_t2p")
+    assert(Touch2Parquet.run(spark, Seq(TouchToParquet.fixturePath(3)), out) ==
+      s"touch2parquet: wrote 62 rows to $out")
+    assert(spark.read.parquet(out).count() == 62)
+  }
+
   test("convertMany rejects a schema-version mix") {
-    import graft.pipelines.TouchToParquet
     val e = intercept[IllegalArgumentException] {
-      Touch2Parquet.convertMany(spark,
+      TouchToParquet.convertMany(spark,
         Seq(v1Pair(7, 2), TouchToParquet.fixturePath(2)),
         graft.io.TempDirs.create("cli_mix"))
     }

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
-import scala.sys.process._
 
 /** Independent conformance evidence for the HDF5 container (the round-12
   * "What's missing" item): `tools/h5check.py` is a SECOND reading of the
@@ -25,7 +24,7 @@ import scala.sys.process._
   *     red, proving the checks bite.
   */
 class Hdf5ConformanceSpec extends AnyFunSuite {
-  import Hdf5ConformanceSpec.h5check
+  import ToolCheck.h5check
 
   private val golden = "src/test/resources/golden_sonata.h5"
 
@@ -109,15 +108,5 @@ class Hdf5ConformanceSpec extends AnyFunSuite {
       addrBytes.indices.forall(j => bytes(i + 2 + j) == addrBytes(j))).get
     assert(corrupted(b => b(layoutOff + 10) = (b(layoutOff + 10) + 1).toByte) != 0,
       "layout-size/dataspace mismatch not caught")
-  }
-}
-
-object Hdf5ConformanceSpec {
-  /** `tools/h5check.py` on one file: (exit code, combined output). */
-  def h5check(path: String): (Int, String) = {
-    val out = new StringBuilder
-    val code = Process(Seq("python3", "tools/h5check.py", path))
-      .!(ProcessLogger(l => out.append(l).append('\n'), l => out.append(l).append('\n')))
-    (code, out.toString)
   }
 }

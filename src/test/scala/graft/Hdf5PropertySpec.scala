@@ -152,10 +152,7 @@ class Hdf5PropertySpec extends AnyFunSuite {
       }
       // the independent spec-derived checker must accept the multi-SNOD
       // B-tree (key ordering, SNOD sort, chunk bracketing)
-      import scala.sys.process._
-      val out = new StringBuilder
-      val code = Process(Seq("python3", "tools/h5check.py", path))
-        .!(ProcessLogger(l => out.append(l).append('\n'), l => out.append(l).append('\n')))
+      val (code, out) = ToolCheck.h5check(path)
       assert(code == 0, s"h5check rejected the $n-member group:\n$out")
     }
     // past the 2048 cap: loud error, never a silent drop

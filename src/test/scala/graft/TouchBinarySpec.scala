@@ -6,12 +6,15 @@ import java.nio.file.Files
 import graft.io.TouchBinary
 import graft.model.TouchModel
 import graft.pipelines.TouchToParquet
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 class TouchBinarySpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkTestSession.spark
+
+  private def touchbin(path: String): DataFrame = spark.read.format("touchbin").load(path)
+  private def fixture(v: Int): DataFrame = touchbin(TouchToParquet.fixturePath(v))
 
   test("version sniffing matches the reference rules") {
     import TouchModel._
@@ -24,26 +27,30 @@ class TouchBinarySpec extends AnyFunSuite {
     assert(sniffVersion("1.0.0") == V1)
     assert(sniffVersion("5.") == V1)  // trailing empty component rejects
     assert(sniffVersion("5.x") == V1) // unparsable component rejects
+    assert(sniffVersion("99999999999.0") == V1) // int32 overflow rejects, as stoi's throw does
+    // touchcheck.py reads the overflowing version string as v1 too
+    val big = writeFixture(Files.createTempDirectory("bigver"), 3, 0L, version = "99999999999.0")
+    assert(ToolCheck.touchRows(big).map(_.split('|').length) == Seq(11))
   }
 
   test("fixture row counts: v1=82, v2=1104, v3=62") {
-    assert(TouchBinary.readProjected(spark, TouchToParquet.fixturePath(1)).count() == 82)
-    assert(TouchBinary.readProjected(spark, TouchToParquet.fixturePath(2)).count() == 1104)
-    assert(TouchBinary.readProjected(spark, TouchToParquet.fixturePath(3)).count() == 62)
+    assert(fixture(1).collect().length == 82)
+    assert(fixture(2).collect().length == 1104)
+    assert(fixture(3).collect().length == 62)
   }
 
   test("schema widths per version: 11 / 22 / 28 columns") {
-    assert(TouchBinary.readProjected(spark, TouchToParquet.fixturePath(1)).columns.length == 11)
-    assert(TouchBinary.readProjected(spark, TouchToParquet.fixturePath(2)).columns.length == 22)
-    assert(TouchBinary.readProjected(spark, TouchToParquet.fixturePath(3)).columns.length == 28)
+    assert(fixture(1).columns.length == 11)
+    assert(fixture(2).columns.length == 22)
+    assert(fixture(3).columns.length == 28)
   }
 
   test("v1 decode golden-matches the reference's testCircuit.parquet") {
     val golden = spark.read
       .parquet(getClass.getResource("/testCircuit.parquet").getPath)
-    val ours = TouchBinary.readProjected(spark, TouchToParquet.fixturePath(1))
-      .drop("synapse_id")
-    assert(ours.columns.toSeq == golden.columns.toSeq)
+    val ours = fixture(1).drop("synapse_id")
+    assert(ours.schema.map(f => (f.name, f.dataType)) ==
+      golden.schema.map(f => (f.name, f.dataType)))
     // order-insensitive compare on full rows (unique enough for 82 rows)
     val g = golden.collect().map(_.toSeq.mkString("|")).sorted
     val o = ours.collect().map(_.toSeq.mkString("|")).sorted
@@ -52,8 +59,7 @@ class TouchBinarySpec extends AnyFunSuite {
 
   test("synapse ids: (gid << 24) + ordinal, contiguous from the shift") {
     import spark.implicits._
-    val ds = TouchBinary.read(spark, TouchToParquet.fixturePath(2))
-    val rows = ds.select($"synapse_id", $"source_node_id").collect()
+    val rows = fixture(2).select($"synapse_id", $"source_node_id").collect()
     assert(rows.length == 1104)
     val gid = rows.head.getInt(1)
     assert(gid == 28) // single-neuron fixture, id 28 in touches.0
@@ -65,15 +71,14 @@ class TouchBinarySpec extends AnyFunSuite {
 
   test("v2 unpacks branch-type nibbles into section types in [1,16]") {
     import spark.implicits._
-    val df = TouchBinary.readProjected(spark, TouchToParquet.fixturePath(2))
-    val types = df.select($"efferent_section_type".cast("int"), $"afferent_section_type".cast("int"))
+    val types = fixture(2).select($"efferent_section_type".cast("int"), $"afferent_section_type".cast("int"))
       .collect().flatMap(r => Seq(r.getInt(0), r.getInt(1)))
     assert(types.forall(t => t >= 1 && t <= 16))
   }
 
   test("big-endian input decodes identically (reference would corrupt v2/v3)") {
     // Byte-swap the little-endian v2 fixture into a synthetic BE pair and
-    // expect identical decoded values.
+    // expect identical decoded values, in agreement with touchcheck.py.
     def swapFile(src: String, dst: String, words32: Boolean): Unit = {
       val in = Files.readAllBytes(java.nio.file.Paths.get(src))
       val out = new Array[Byte](in.length)
@@ -110,18 +115,19 @@ class TouchBinarySpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("be_touches").toString
     swapFile(TouchToParquet.fixturePath(2), s"$dir/touchesData.0", words32 = true)
     swapFile(TouchBinary.indexFileFor(TouchToParquet.fixturePath(2)), s"$dir/touches.0", words32 = false)
-    val le = TouchBinary.readProjected(spark, TouchToParquet.fixturePath(2))
-    val be = TouchBinary.readProjected(spark, s"$dir/touchesData.0")
+    val le = fixture(2)
+    val be = touchbin(s"$dir/touchesData.0")
     // string-compare: the data contains NaNs, and NaN != NaN under Seq equality
     val a = le.collect().map(_.toSeq.mkString("|")).sorted
     val b = be.collect().map(_.toSeq.mkString("|")).sorted
     assert(a.toSeq == b.toSeq)
+    assert(ToolCheck.rendered(be) == ToolCheck.touchRows(s"$dir/touchesData.0"))
   }
 
   test("touch2parquet end-to-end round trip preserves all values") {
     val out = Files.createTempDirectory("t2p_test").toString
     val result = TouchToParquet.convert(spark, TouchToParquet.fixturePath(3), out)
-    val direct = TouchBinary.readProjected(spark, TouchToParquet.fixturePath(3))
+    val direct = fixture(3)
     assert(result.count() == 62)
     // compare names+types; Spark reads parquet back nullable even though the
     // file's fields are REQUIRED (written from a non-nullable Dataset)
@@ -132,40 +138,67 @@ class TouchBinarySpec extends AnyFunSuite {
     assert(a.toSeq == b.toSeq)
   }
 
-  test("validation guards TRIP on malformed data (both scan paths)") {
-    // craft a v1 pair: index declares one neuron; data holds one record
-    // with pre_section = 0x8000 (> 0x7fff → endianness-damage guard,
+  /** A v1 pair in `dir`: the index (magic `magic`, version string
+    * `version`, at most 16 bytes) declares one neuron,
+    * gid 7 at byte `offset`; the data holds one record with the given
+    * pre_section.
+    */
+  private def writeFixture(dir: java.nio.file.Path, preSection: Int, offset: Long,
+                           magic: Double = 1.001, version: String = "1.0.0"): String = {
+    val idx = ByteBuffer.allocate(48).order(ByteOrder.LITTLE_ENDIAN)
+    idx.putDouble(magic).putLong(1)
+    idx.put(version.getBytes("US-ASCII")); idx.position(32)
+    idx.putInt(7).putInt(1).putLong(offset)
+    Files.write(dir.resolve("touches.0"), idx.array())
+    val rec = ByteBuffer.allocate(40).order(ByteOrder.LITTLE_ENDIAN)
+    rec.putInt(7).putInt(preSection).putInt(0)
+    rec.putInt(8).putInt(1).putInt(0)
+    rec.putInt(1).putFloat(1f).putFloat(0f).putFloat(0f)
+    Files.write(dir.resolve("touchesData.0"), rec.array())
+    dir.resolve("touchesData.0").toString
+  }
+
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+  test("validation guards TRIP on malformed data (touchbin and touchcheck.py)") {
+    // pre_section = 0x8000 (> 0x7fff → endianness-damage guard,
     // parquet_writer.cpp:207-219)
-    def writeFixture(dir: java.nio.file.Path, preSection: Int, offset: Long): String = {
-      val idx = ByteBuffer.allocate(48).order(ByteOrder.LITTLE_ENDIAN)
-      idx.putDouble(1.001).putLong(1)
-      idx.put("1.0.0".getBytes("US-ASCII")); idx.position(32)
-      idx.putInt(7).putInt(1).putLong(offset)
-      Files.write(dir.resolve("touches.0"), idx.array())
-      val rec = ByteBuffer.allocate(40).order(ByteOrder.LITTLE_ENDIAN)
-      rec.putInt(7).putInt(preSection).putInt(0)
-      rec.putInt(8).putInt(1).putInt(0)
-      rec.putInt(1).putFloat(1f).putFloat(0f).putFloat(0f)
-      Files.write(dir.resolve("touchesData.0"), rec.array())
-      dir.resolve("touchesData.0").toString
-    }
     val bad = writeFixture(Files.createTempDirectory("badsec"), 0x8000, 0L)
-    for (df <- Seq(TouchBinary.readProjected(spark, bad),
-                   spark.read.format("touchbin").load(bad))) {
-      val e = intercept[org.apache.spark.SparkException](df.collect())
-      assert(e.getMessage.contains("Invalid pre_section") ||
-        Option(e.getCause).exists(_.getMessage.contains("Invalid pre_section")), e.getMessage)
-    }
+    val e1 = intercept[org.apache.spark.SparkException](touchbin(bad).collect())
+    assert(messages(e1).contains("Invalid pre_section"), messages(e1))
+    assert(ToolCheck.run("touchcheck.py", bad)._1 != 0, "touchcheck accepted pre_section 0x8000")
     // 2^24-touches-per-gid overflow: a negative index offset makes
     // global_row − shift reach 2^24 with a single record
     val over = writeFixture(Files.createTempDirectory("overflow"), 3, -(1L << 24) * 40)
-    for (df <- Seq(TouchBinary.readProjected(spark, over),
-                   spark.read.format("touchbin").load(over))) {
-      val e = intercept[org.apache.spark.SparkException](df.select("synapse_id").collect())
-      assert(e.getMessage.contains("2^24") ||
-        Option(e.getCause).exists(_.getMessage.contains("2^24")), e.getMessage)
-    }
+    val e2 = intercept[org.apache.spark.SparkException](
+      touchbin(over).select("synapse_id").collect())
+    assert(messages(e2).contains("2^24"), messages(e2))
+    assert(ToolCheck.run("touchcheck.py", over)._1 != 0, "touchcheck accepted a 2^24 ordinal")
     // non-trip: the valid fixture decodes fine (exercised throughout)
+  }
+
+  test("truncated data or a bad index magic fail convert before any output") {
+    // a data file 7 bytes past its one record: the partial record
+    // starts at byte 40
+    val trunc = writeFixture(Files.createTempDirectory("trunc"), 3, 0L)
+    Files.write(java.nio.file.Paths.get(trunc), new Array[Byte](7),
+      java.nio.file.StandardOpenOption.APPEND)
+    // an index whose magic is 1.001 in neither byte order
+    val magic = writeFixture(Files.createTempDirectory("magic"), 3, 0L, magic = 2.5)
+    val magicIndex = TouchBinary.indexFileFor(magic)
+    for ((data, named, detail) <- Seq(
+        (trunc, trunc, "partial record at byte 40"),
+        (magic, magicIndex, "bad architecture identifier"))) {
+      val out = Files.createTempDirectory("t2p_bad").resolve("out")
+      val e = intercept[IllegalArgumentException](
+        TouchToParquet.convert(spark, data, out.toString))
+      assert(e.getMessage.contains(named) && e.getMessage.contains(detail), e.getMessage)
+      assert(!Files.exists(out), s"$out was created before the input was rejected")
+      val (code, log) = ToolCheck.run("touchcheck.py", data)
+      assert(code != 0 && log.contains(named), s"touchcheck accepted $data:\n$log")
+    }
+    assert(ToolCheck.run("touchcheck.py", trunc)._2.contains("byte 40"))
   }
 
   test("converter stamps footer KV provenance that round-trips write+read") {

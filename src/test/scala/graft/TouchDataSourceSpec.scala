@@ -1,13 +1,14 @@
 package graft
 
-import graft.io.TouchBinary
 import graft.pipelines.TouchToParquet
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** DataSource V2 touch connector: values must match the RDD-based
-  * decoder bit-for-bit on every fixture version, column pruning must
-  * reach the scan, and record-aligned splits must not change results.
+/** DataSource V2 touch connector: values must match the independent
+  * reader `tools/touchcheck.py` bit-for-bit on every fixture version,
+  * column pruning must reach the scan, and record-aligned splits must
+  * not change results.
   */
 class TouchDataSourceSpec extends AnyFunSuite {
 
@@ -16,14 +17,53 @@ class TouchDataSourceSpec extends AnyFunSuite {
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
 
-  test("v1/v2/v3 fixtures decode identically to the RDD path") {
-    for (v <- 1 to 3) {
+  /** The v3 output columns, in order; v1 and v2 are its first 11 and 22.
+    * Written out here, not derived from `TouchModel.Layout`, so a change
+    * to a column's type or position fails this spec.
+    */
+  private val v3Schema: Seq[(String, DataType)] = Seq(
+    "synapse_id" -> LongType,
+    "source_node_id" -> IntegerType,
+    "target_node_id" -> IntegerType,
+    "efferent_section_id" -> ShortType,
+    "efferent_segment_id" -> ShortType,
+    "afferent_section_id" -> ShortType,
+    "afferent_segment_id" -> ShortType,
+    "efferent_segment_offset" -> FloatType,
+    "afferent_segment_offset" -> FloatType,
+    "distance_soma" -> FloatType,
+    "branch_order" -> ByteType,
+    "efferent_section_pos" -> FloatType,
+    "afferent_section_pos" -> FloatType,
+    "efferent_surface_x" -> FloatType,
+    "efferent_surface_y" -> FloatType,
+    "efferent_surface_z" -> FloatType,
+    "afferent_center_x" -> FloatType,
+    "afferent_center_y" -> FloatType,
+    "afferent_center_z" -> FloatType,
+    "spine_length" -> FloatType,
+    "efferent_section_type" -> ByteType,
+    "afferent_section_type" -> ByteType,
+    "efferent_center_x" -> FloatType,
+    "efferent_center_y" -> FloatType,
+    "efferent_center_z" -> FloatType,
+    "afferent_surface_x" -> FloatType,
+    "afferent_surface_y" -> FloatType,
+    "afferent_surface_z" -> FloatType)
+
+  test("v1/v2/v3 fixtures decode identically to touchcheck.py") {
+    for ((v, width) <- Seq(1 -> 11, 2 -> 22, 3 -> 28)) {
       val path = TouchToParquet.fixturePath(v)
-      val v2 = spark.read.format("touchbin").load(path)
-      val rdd = TouchBinary.readProjected(spark, path)
-      assert(v2.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-        rdd.schema.fields.map(f => (f.name, f.dataType)).toSeq, s"v$v schema")
-      assert(rows(v2) == rows(rdd), s"v$v values")
+      val df = spark.read.format("touchbin").load(path)
+      // touchcheck.py prints no types, so the schema is pinned here
+      assert(df.schema.map(f => (f.name, f.dataType)) == v3Schema.take(width),
+        s"v$v schema")
+      // one split, so collect() keeps file order
+      val got = ToolCheck.rendered(df)
+      val want = ToolCheck.touchRows(path)
+      assert(got.length == want.length, s"v$v row count")
+      got.zip(want).zipWithIndex.foreach { case ((g, w), i) =>
+        assert(g == w, s"v$v row $i") }
     }
   }
 
@@ -44,7 +84,7 @@ class TouchDataSourceSpec extends AnyFunSuite {
       .option("maxBytesPerPartition", (80 * 100).toString) // 100 records/split
       .load(path)
     assert(df.rdd.getNumPartitions > 5, s"${df.rdd.getNumPartitions} partitions")
-    assert(rows(df) == rows(TouchBinary.readProjected(spark, path)))
+    assert(rows(df) == rows(spark.read.format("touchbin").load(path)))
   }
 
   private def copyFixture(version: Int, dir: java.nio.file.Path, suffix: Int): Unit = {
@@ -73,7 +113,7 @@ class TouchDataSourceSpec extends AnyFunSuite {
     val noId = full.drop("synapse_id")
     assert(noId.rdd.getNumPartitions > 3 * 5,
       s"expected >5 splits per file across 3 files, got ${noId.rdd.getNumPartitions}")
-    val single = rows(TouchBinary.readProjected(spark, TouchToParquet.fixturePath(2))
+    val single = rows(spark.read.format("touchbin").load(TouchToParquet.fixturePath(2))
       .drop("synapse_id"))
     assert(rows(noId) == (single ++ single ++ single).sorted,
       "directory read must union every file's decode (multiset equality)")
