@@ -151,6 +151,8 @@ object TouchBinary {
     */
   def readIndex(indexPath: String): TouchIndex = {
     val bytes = readAllBytesFs(indexPath)
+    require(bytes.length >= 32,
+      s"$indexPath: index header needs 32 bytes, file has ${bytes.length}")
     val le = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     val order =
       if (le.getDouble(0) == ArchitectureIdentifier) ByteOrder.LITTLE_ENDIAN

@@ -55,8 +55,8 @@ object TouchModel {
     * the 4-byte word at `offset`; short and byte columns narrow the
     * int32 word there (section/segment ids, branch order). The three
     * `derived` columns are computed rather than read as their type at
-    * `offset`, and their decoders are named in
-    * `sources.TouchDataSource.extractor`: `synapse_id` (from the pre-gid
+    * `offset`, and their fill loops are named in
+    * `sources.TouchDataSource.fill`: `synapse_id` (from the pre-gid
     * word at 0 and the row's position), and the two section types (the
     * nibbles of the `branch_type` byte at 76).
     */

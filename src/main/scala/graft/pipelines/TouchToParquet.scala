@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions.{count, lit}
 /** Pipeline A end-to-end (S1 → W1 → P1-P4 → S4): TouchDetector binary →
   * columnar Parquet (reference: src/touch2parquet.cpp:34-138).
   *
-  * The whole pipeline is ONE narrow stage: binary record scan → per-record
-  * decode (rename/flatten/unpack/validate fused into the decoder) →
+  * The whole pipeline is ONE narrow stage: binary record scan → columnar
+  * decode (rename/flatten/unpack/validate fused into the fill loops) →
   * parquet sink; file-per-task parallel write replaces the reference's
   * one-file-per-MPI-rank. Sink matches the reference writer's physical
   * knobs: SNAPPY, dictionary encoding off, ~20 MB row groups
@@ -38,9 +38,13 @@ object TouchToParquet {
     }
   }
 
+  /** Converts one touch input and returns the written parquet, read
+    * back with the schema the sink wrote (no schema-inference job).
+    */
   def convert(spark: SparkSession, dataPath: String, outDir: String): DataFrame = {
-    convertMany(spark, Seq(dataPath), outDir)
-    spark.read.parquet(outDir)
+    val (touches, index) = load(spark, Seq(dataPath))
+    write(touches, index, outDir)
+    spark.read.schema(touches.schema).parquet(outDir)
   }
 
   /** One or more touch inputs (each a data file or a directory, with
@@ -56,11 +60,17 @@ object TouchToParquet {
     * record version differ), so the first file's string is stamped.
     */
   def convertMany(spark: SparkSession, inputs: Seq[String], outDir: String): Long = {
+    val (touches, index) = load(spark, inputs)
+    write(touches, index, outDir)
+  }
+
+  /** The checked union of `inputs` and the first file's index. */
+  private def load(spark: SparkSession, inputs: Seq[String]): (DataFrame, TouchBinary.TouchIndex) = {
     val indexed = TouchDataSource.indexedDataFiles(inputs: _*)
     TouchDataSource.requireDisjointGidRanges(indexed)
     indexed.foreach(_.numRecords)
-    write(inputs.map(p => spark.read.format("touchbin").load(p)).reduce(_ unionByName _),
-      indexed.head.index, outDir)
+    (inputs.map(p => spark.read.format("touchbin").load(p)).reduce(_ unionByName _),
+      indexed.head.index)
   }
 
   /** The sink: decoded touches → parquet with the reference writer's

@@ -140,20 +140,23 @@ class TouchBinarySpec extends AnyFunSuite {
 
   /** A v1 pair in `dir`: the index (magic `magic`, version string
     * `version`, at most 16 bytes) declares one neuron,
-    * gid 7 at byte `offset`; the data holds one record with the given
-    * pre_section.
+    * gid 7 at byte `offset`; the data holds `lead` records with
+    * pre_section 3, then one with the given pre_section.
     */
   private def writeFixture(dir: java.nio.file.Path, preSection: Int, offset: Long,
-                           magic: Double = 1.001, version: String = "1.0.0"): String = {
+                           magic: Double = 1.001, version: String = "1.0.0",
+                           lead: Int = 0): String = {
     val idx = ByteBuffer.allocate(48).order(ByteOrder.LITTLE_ENDIAN)
     idx.putDouble(magic).putLong(1)
     idx.put(version.getBytes("US-ASCII")); idx.position(32)
-    idx.putInt(7).putInt(1).putLong(offset)
+    idx.putInt(7).putInt(lead + 1).putLong(offset)
     Files.write(dir.resolve("touches.0"), idx.array())
-    val rec = ByteBuffer.allocate(40).order(ByteOrder.LITTLE_ENDIAN)
-    rec.putInt(7).putInt(preSection).putInt(0)
-    rec.putInt(8).putInt(1).putInt(0)
-    rec.putInt(1).putFloat(1f).putFloat(0f).putFloat(0f)
+    val rec = ByteBuffer.allocate(40 * (lead + 1)).order(ByteOrder.LITTLE_ENDIAN)
+    for (s <- Seq.fill(lead)(3) :+ preSection) {
+      rec.putInt(7).putInt(s).putInt(0)
+      rec.putInt(8).putInt(1).putInt(0)
+      rec.putInt(1).putFloat(1f).putFloat(0f).putFloat(0f)
+    }
     Files.write(dir.resolve("touchesData.0"), rec.array())
     dir.resolve("touchesData.0").toString
   }
@@ -162,19 +165,22 @@ class TouchBinarySpec extends AnyFunSuite {
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
 
   test("validation guards TRIP on malformed data (touchbin and touchcheck.py)") {
-    // pre_section = 0x8000 (> 0x7fff → endianness-damage guard,
-    // parquet_writer.cpp:207-219)
-    val bad = writeFixture(Files.createTempDirectory("badsec"), 0x8000, 0L)
+    // record 2 has pre_section = 0x8000 (> 0x7fff → endianness-damage
+    // guard, parquet_writer.cpp:207-219); its pre_section word is byte 84
+    val bad = writeFixture(Files.createTempDirectory("badsec"), 0x8000, 0L, lead = 2)
     val e1 = intercept[org.apache.spark.SparkException](touchbin(bad).collect())
-    assert(messages(e1).contains("Invalid pre_section"), messages(e1))
-    assert(ToolCheck.run("touchcheck.py", bad)._1 != 0, "touchcheck accepted pre_section 0x8000")
-    // 2^24-touches-per-gid overflow: a negative index offset makes
-    // global_row − shift reach 2^24 with a single record
-    val over = writeFixture(Files.createTempDirectory("overflow"), 3, -(1L << 24) * 40)
+    assert(messages(e1).contains(s"$bad: byte 84: Invalid pre_section 32768"), messages(e1))
+    val (code1, log1) = ToolCheck.run("touchcheck.py", bad)
+    assert(code1 != 0 && log1.contains(s"$bad: byte 84:"), s"touchcheck accepted pre_section 0x8000:\n$log1")
+    // 2^24-touches-per-gid overflow: an index offset of 2 − 2^24 records
+    // makes global_row − shift reach 2^24 at record 2, whose gid word is
+    // byte 80
+    val over = writeFixture(Files.createTempDirectory("overflow"), 3, (2 - (1L << 24)) * 40, lead = 2)
     val e2 = intercept[org.apache.spark.SparkException](
       touchbin(over).select("synapse_id").collect())
-    assert(messages(e2).contains("2^24"), messages(e2))
-    assert(ToolCheck.run("touchcheck.py", over)._1 != 0, "touchcheck accepted a 2^24 ordinal")
+    assert(messages(e2).contains(s"$over: byte 80: gid 7 has more than 2^24"), messages(e2))
+    val (code2, log2) = ToolCheck.run("touchcheck.py", over)
+    assert(code2 != 0 && log2.contains(s"$over: byte 80:"), s"touchcheck accepted a 2^24 ordinal:\n$log2")
     // non-trip: the valid fixture decodes fine (exercised throughout)
   }
 
@@ -187,9 +193,14 @@ class TouchBinarySpec extends AnyFunSuite {
     // an index whose magic is 1.001 in neither byte order
     val magic = writeFixture(Files.createTempDirectory("magic"), 3, 0L, magic = 2.5)
     val magicIndex = TouchBinary.indexFileFor(magic)
+    // an index cut to 6 bytes, short of its 32-byte header
+    val short = writeFixture(Files.createTempDirectory("shortidx"), 3, 0L)
+    val shortIndex = TouchBinary.indexFileFor(short)
+    Files.write(java.nio.file.Paths.get(shortIndex), new Array[Byte](6))
     for ((data, named, detail) <- Seq(
         (trunc, trunc, "partial record at byte 40"),
-        (magic, magicIndex, "bad architecture identifier"))) {
+        (magic, magicIndex, "bad architecture identifier"),
+        (short, shortIndex, "index header needs 32 bytes, file has 6"))) {
       val out = Files.createTempDirectory("t2p_bad").resolve("out")
       val e = intercept[IllegalArgumentException](
         TouchToParquet.convert(spark, data, out.toString))
@@ -199,6 +210,26 @@ class TouchBinarySpec extends AnyFunSuite {
       assert(code != 0 && log.contains(named), s"touchcheck accepted $data:\n$log")
     }
     assert(ToolCheck.run("touchcheck.py", trunc)._2.contains("byte 40"))
+  }
+
+  test("convert reads its output back with the written schema: one job") {
+    val sc = spark.sparkContext
+    val out = Files.createTempDirectory("t2p_jobs").resolve("out").toString
+    sc.setJobGroup("t2p_convert", "convert")
+    val result = try TouchToParquet.convert(spark, TouchToParquet.fixturePath(3), out)
+      finally sc.clearJobGroup()
+    // the status store hears of jobs through the ordered listener bus,
+    // so once a later job shows up, every job convert started has too
+    sc.setJobGroup("t2p_marker", "marker")
+    try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup("t2p_marker").isEmpty && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    assert(sc.statusTracker.getJobIdsForGroup("t2p_convert").length == 1,
+      "convert must run only the write job (no schema-inference read-back)")
+    // the parquet reader's nullability, as a schema-inferring read gives it
+    assert(result.schema.map(f => (f.name, f.dataType, f.nullable)) ==
+      fixture(3).schema.map(f => (f.name, f.dataType, true)))
   }
 
   test("converter stamps footer KV provenance that round-trips write+read") {

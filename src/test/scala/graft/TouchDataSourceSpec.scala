@@ -274,6 +274,105 @@ class TouchDataSourceSpec extends AnyFunSuite {
     assert(got.map(_.getAs[Int]("source_node_id")).forall(g => g == 100 || g == 101))
   }
 
+  /** Per-gid record counts of the batch-boundary pair (gids 500, 501,
+    * …): the 3rd block spans records 4000-4299 and the 6th 8100-8299,
+    * so both 4096-record batch boundaries fall inside a gid block.
+    */
+  private val boundaryCounts = Seq(1500, 2500, 300, 1700, 2100, 200, 1700, 37)
+
+  /** A v3 pair of 10,037 records in the given byte order, with varied
+    * values in every field: negative and out-of-range section, segment
+    * and branch words (narrowed on decode), every branch_type byte, and
+    * random float bit patterns, NaNs among them.
+    */
+  private def writeBoundaryPair(order: java.nio.ByteOrder): String = {
+    import java.nio.ByteBuffer
+    val dir = java.nio.file.Paths.get(graft.io.TempDirs.create("touch_batches"))
+    val rec = 104
+    val n = boundaryCounts.sum
+    def mix(x: Long): Int = {
+      var z = x * 0x9E3779B97F4A7C15L + 0x632BE59BD9B4E019L
+      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+      (z ^ (z >>> 27)).toInt
+    }
+    val data = ByteBuffer.allocate(n * rec).order(order)
+    val gids = boundaryCounts.zipWithIndex.flatMap { case (c, i) => Seq.fill(c)(500 + i) }
+    for ((gid, r) <- gids.zipWithIndex) {
+      val base = r * rec
+      data.putInt(base, gid)
+      data.putInt(base + 4, mix(r) % 0x8000) // pre_section: at most 0x7fff
+      for (w <- 2 until 19) data.putInt(base + 4 * w, mix(r.toLong * 31 + w))
+      data.putInt(base + 12, 20000 + r % 977) // post gid
+      data.put(base + 76, r.toByte)           // branch_type
+      for (w <- 20 until 26) data.putInt(base + 4 * w, mix(r.toLong * 37 + w))
+    }
+    java.nio.file.Files.write(dir.resolve("touchesData.0"), data.array())
+    val idx = ByteBuffer.allocate(32 + boundaryCounts.length * 16).order(order)
+    idx.putDouble(1.001).putLong(boundaryCounts.length)
+    idx.put("6.0.0".getBytes("US-ASCII")); idx.position(32)
+    boundaryCounts.scanLeft(0L)(_ + _).zip(boundaryCounts).zipWithIndex.foreach {
+      case ((shift, c), i) => idx.putInt(500 + i).putInt(c).putLong(shift * rec) }
+    java.nio.file.Files.write(dir.resolve("touches.0"), idx.array())
+    dir.resolve("touchesData.0").toString
+  }
+
+  private lazy val boundaryPairs = Seq(java.nio.ByteOrder.LITTLE_ENDIAN, java.nio.ByteOrder.BIG_ENDIAN)
+    .map(o => o -> writeBoundaryPair(o))
+
+  /** The frame is decoded by Spark's `ColumnarToRow` over the touchbin
+    * scan, not by a row reader.
+    */
+  private def assertColumnar(df: org.apache.spark.sql.DataFrame): Unit = {
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val plan = df.queryExecution.executedPlan
+    // whole-stage codegen puts an InputAdapter between the two
+    assert(plan.collect { case c: ColumnarToRowExec => c.child }.exists {
+      case InputAdapter(b: BatchScanExec) => b.scan.description().startsWith("touchbin ")
+      case _ => false
+    }, s"no ColumnarToRow over the touchbin scan:\n$plan")
+  }
+
+  test("batch boundaries: a single-split read equals touchcheck.py in both byte orders") {
+    for ((order, path) <- boundaryPairs) {
+      val df = spark.read.format("touchbin").load(path)
+      assert(df.rdd.getNumPartitions == 1, s"$order")
+      assertColumnar(df)
+      val got = ToolCheck.rendered(df)
+      val want = ToolCheck.touchRows(path)
+      assert(got.length == 10037 && want.length == 10037, s"$order row count")
+      got.zip(want).zipWithIndex.foreach { case ((g, w), i) =>
+        assert(g == w, s"$order row $i") }
+    }
+  }
+
+  test("batch boundaries: mid-batch splits, gid IN and limit match the single-split read") {
+    import org.apache.spark.sql.functions.col
+    for ((order, path) <- boundaryPairs) {
+      def read(recordsPerSplit: Int = 1 << 20) = spark.read.format("touchbin")
+        .option("maxBytesPerPartition", (104L * recordsPerSplit).toString).load(path)
+      val single = ToolCheck.rendered(read())
+      for (perSplit <- Seq(1000, 5000)) {
+        val df = read(perSplit)
+        assert(df.rdd.getNumPartitions == (10037 + perSplit - 1) / perSplit, s"$order $perSplit")
+        assertColumnar(df)
+        assert(ToolCheck.rendered(df).sorted == single.sorted, s"$order $perSplit records/split")
+      }
+      // blocks 501, 502 and 505 start at records 1500, 4000 and 8100,
+      // inside the first, the first and the second batch of the file
+      val gids = Seq(501, 502, 505)
+      val in = read().filter(col("source_node_id").isin(gids: _*))
+      assert(in.queryExecution.executedPlan.toString.contains("PushedGidRanges"))
+      assertColumnar(in)
+      assert(ToolCheck.rendered(in).sorted ==
+        single.filter(r => gids.contains(r.split('|')(1).toInt)).sorted, s"$order IN")
+      // a limit reads the head of the file across the first batch boundary
+      val lim = read().limit(5000)
+      assertColumnar(lim)
+      assert(ToolCheck.rendered(lim).sorted == single.take(5000).sorted, s"$order limit")
+    }
+  }
+
   test("truncated data file fails loudly at split planning") {
     val dir = java.nio.file.Paths.get(graft.io.TempDirs.create("touch_dir_trunc"))
     copyFixture(2, dir, 0)
