@@ -1,7 +1,10 @@
 package graft.io
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{Metadata, MetadataBuilder}
+import org.apache.spark.sql.types.{DataType, Metadata, MetadataBuilder, StructType}
 
 /** File-level KV metadata on parquet sinks — the reference stamps its
   * converter provenance into the parquet footer
@@ -38,12 +41,33 @@ object ParquetMeta {
       .write.mode("overwrite").options(options).parquet(path)
   }
 
+  /** Spark's footer key holding the row schema as JSON. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
   /** The file-meta map read back from a parquet sink (empty metadata if
-    * the sink carries none).
+    * the sink carries none). Every part file of a sink carries the same
+    * schema entry, so the footer of the first one, read with
+    * parquet-hadoop, is enough: no Spark job runs (schema inference
+    * would merge the footers in one).
     */
   def readMeta(spark: SparkSession, path: String): Metadata = {
-    val withMeta = spark.read.parquet(path).schema.fields
-      .find(_.metadata.contains(MetaKey))
-    withMeta.map(_.metadata.getMetadata(MetaKey)).getOrElse(Metadata.empty)
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val part =
+      if (!fs.getFileStatus(root).isDirectory) root
+      else {
+        // Spark's data-file rule: `_SUCCESS` and `.crc` files are not parts
+        val parts = fs.listStatus(root).filter(_.isFile).map(_.getPath)
+          .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+        require(parts.nonEmpty, s"$path: no parquet part file")
+        parts.minBy(_.getName)
+      }
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(part, conf))
+    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
+      finally reader.close()
+    Option(json).map(DataType.fromJson(_).asInstanceOf[StructType])
+      .flatMap(_.fields.find(_.metadata.contains(MetaKey)))
+      .map(_.metadata.getMetadata(MetaKey)).getOrElse(Metadata.empty)
   }
 }

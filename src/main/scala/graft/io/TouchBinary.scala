@@ -57,10 +57,10 @@ object TouchBinary {
       * so no monotonicity of offsets across gids is assumed; `None`
       * means "cannot prune" (truncated or empty index), `Some((0, 0))`
       * means provably no records. Like the reference's seek, pruning
-      * trusts the index to describe the data file — callers keep the
-      * gid predicate as a post-scan residual, so a lying index can only
-      * lose rows the reference would also mis-seek, never emit wrong
-      * ones.
+      * trusts the index to describe the data file — the `touchbin`
+      * reader checks every record's gid word against the pushed gid
+      * intervals, so a lying index can only lose rows the reference
+      * would also mis-seek, never emit wrong ones.
       */
     def recordRangeFor(lo: Long, hi: Long): Option[(Long, Long)] = {
       if (truncated || shifts.isEmpty || counts.length != shifts.length) return None
@@ -89,7 +89,7 @@ object TouchBinary {
       * planner never emits overlapping splits (offsets need not be
       * monotone across gids, so two gid intervals CAN map to
       * overlapping record ranges; a duplicate split would duplicate
-      * rows because the residual filter passes them twice). This is
+      * rows because the reader's gid check passes them twice). This is
       * the multi-neuron face of the reference's per-neuron `seek(pos)`
       * loop (touch_reader.cpp:196-228): scattered gids prune to their
       * own blocks instead of one [min,max] hull. `None` = cannot
@@ -131,9 +131,9 @@ object TouchBinary {
     * decoding works on any Hadoop-supported store, not just local
     * paths. Index files are 32 B + 16 B/neuron — always driver-sized.
     */
-  private def readAllBytesFs(path: String): Array[Byte] = {
+  private def readAllBytesFs(path: String, conf: Configuration): Array[Byte] = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(hadoopConf())
+    val fs = p.getFileSystem(conf)
     val len = fs.getFileStatus(p).getLen
     require(len <= Int.MaxValue, s"$path: implausibly large touch index ($len bytes)")
     val bytes = new Array[Byte](len.toInt)
@@ -149,8 +149,8 @@ object TouchBinary {
     * holds yields zero records (the v1 fixture depends on this) — and its
     * duplicate-empty-entry skip rule (touch_reader.cpp:131-143).
     */
-  def readIndex(indexPath: String): TouchIndex = {
-    val bytes = readAllBytesFs(indexPath)
+  def readIndex(indexPath: String, conf: Configuration = hadoopConf()): TouchIndex = {
+    val bytes = readAllBytesFs(indexPath, conf)
     require(bytes.length >= 32,
       s"$indexPath: index header needs 32 bytes, file has ${bytes.length}")
     val le = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)

@@ -30,15 +30,18 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    IS the row index of every dataset (the sink writes the total
   *    order at position = edge_id), so range/IN/OR predicates on it
   *    map straight to planned row ranges — the hyperslab-select face
-  *    of the reference's index traversal (src/index/index.cpp:157-180)
-  *    with the same safety contract as the touch source: every filter
-  *    stays a post-scan residual, pruning only skips I/O.
+  *    of the reference's index traversal (src/index/index.cpp:157-180).
+  *    The planned ranges ARE the predicate, so `edge_id` filters are
+  *    not returned as residuals and no `Filter` runs above the scan;
+  *    only filters on other columns stay residual.
   *  - **Metadata-only COUNT** (`SupportsPushDownAggregates`): the
   *    dataspace dims in the file header ARE the row count; an
   *    ungrouped count(*) / count(col) (all columns non-nullable) reads
-  *    zero data bytes.
+  *    zero data bytes — over pushed `edge_id` predicates it counts the
+  *    pruned row ranges.
   *  - **Limit pushdown** (`SupportsPushDownLimit`, partial): `limit k`
-  *    plans ~k rows.
+  *    plans ~k rows, of the pruned ranges when `edge_id` predicates are
+  *    pushed.
   *  - **Exact statistics** (`SupportsReportStatistics`): the planned
   *    (pruned) row count × the pruned row width, so a scan narrowed by
   *    an edge_id range or projection is costed at its true size and
@@ -49,7 +52,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * partition positional-reads its slice of each required column
   * ([[Hdf5Mini.readSlice]] — the MPI-IO independent-transfer read
   * model). Driver-side metadata is one [[Hdf5Mini.readMeta]] parse of
-  * the few-KB header prefix.
+  * the few-KB header prefix per load: the provider hands the layout its
+  * [[inferSchema]] parsed to the table [[getTable]] builds.
   */
 class Hdf5DataSource extends TableProvider with DataSourceRegister {
 
@@ -61,16 +65,25 @@ class Hdf5DataSource extends TableProvider with DataSourceRegister {
     p
   }
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    Hdf5DataSource.layout(pathOf(options),
-      Option(options.get("population"))).schema
+  /** [[inferSchema]]'s layout, keyed by (path, population). */
+  private[sources] var inferred: Option[((String, Option[String]), Hdf5DataSource.Layout)] = None
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val key = (pathOf(options), Option(options.get("population")))
+    val layout = Hdf5DataSource.layout(key._1, key._2)
+    inferred = Some(key -> layout)
+    layout.schema
+  }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new Hdf5Table(properties.get("path"),
-      Option(properties.get("population")),
+                        properties: util.Map[String, String]): Table = {
+    val key = (properties.get("path"), Option(properties.get("population")))
+    new Hdf5Table(key._1,
+      inferred.collect { case (`key`, layout) => layout }
+        .getOrElse(Hdf5DataSource.layout(key._1, key._2)),
       Option(properties.get("maxBytesPerPartition")).map(_.toLong)
         .getOrElse(128L * 1024 * 1024))
+  }
 }
 
 object Hdf5DataSource {
@@ -165,11 +178,21 @@ object Hdf5DataSource {
       case _ => None
     }
   }
+
+  /** Closed `edge_id` intervals → the half-open row ranges of an
+    * `nRows`-row container they select (all rows for `None`).
+    */
+  def rowRanges(nRows: Long, intervals: Option[Seq[(Long, Long)]]): Seq[(Long, Long)] =
+    intervals
+      .map(_.map { case (lo, hi) =>
+        (math.max(lo, 0L), math.min(if (hi == Long.MaxValue) nRows else hi + 1, nRows))
+      }.filter { case (s, e) => e > s })
+      .getOrElse(if (nRows > 0) Seq((0L, nRows)) else Nil)
 }
 
-private[sources] class Hdf5Table(path: String, population: Option[String],
+private[sources] class Hdf5Table(path: String,
+    private[sources] val layout: Hdf5DataSource.Layout,
     maxBytesPerPartition: Long) extends Table with SupportsRead {
-  private lazy val layout = Hdf5DataSource.layout(path, population)
   override def name(): String = s"sonatah5:$path#${layout.population}"
   override def schema(): StructType = layout.schema
   override def capabilities(): util.Set[TableCapability] =
@@ -194,19 +217,25 @@ private[sources] class Hdf5ScanBuilder(path: String,
     required = StructType(layout.schema.fields.filter(f =>
       requiredSchema.fieldNames.contains(f.name)))
 
+  /** `edge_id` is the row position, so the planned row ranges are the
+    * predicate: only the other filters are returned as residuals.
+    */
   override def pushFilters(filters: Array[sources.Filter]): Array[sources.Filter] = {
     import GidIntervals.{normalize, intersect}
-    accepted = filters.filter(f => Hdf5DataSource.edgeIdIntervalsOf(f).isDefined)
+    val (edgeId, rest) = filters.partition(f => Hdf5DataSource.edgeIdIntervalsOf(f).isDefined)
+    accepted = edgeId
     rowIntervals = accepted.foldLeft(Option.empty[Seq[(Long, Long)]]) { (acc, f) =>
       val iv = normalize(Hdf5DataSource.edgeIdIntervalsOf(f).get)
       Some(acc.fold(iv)(intersect(_, iv)))
     }
-    filters // all residual — pruning only skips I/O
+    rest
   }
 
   override def pushedFilters(): Array[sources.Filter] = accepted
 
-  /** Row count from the header's dataspace dims — zero data bytes. */
+  /** Row count from the header's dataspace dims, or the width of the
+    * pruned row ranges — zero data bytes.
+    */
   override def supportCompletePushDown(aggregation: Aggregation): Boolean = false
 
   override def pushAggregation(aggregation: Aggregation): Boolean = {
@@ -231,22 +260,24 @@ private[sources] class Hdf5ScanBuilder(path: String,
   override def isPartiallyPushed(): Boolean = true
 
   override def build(): Scan =
-    if (countsPushed > 0) new Hdf5CountScan(path, layout, countsPushed)
+    if (countsPushed > 0) new Hdf5CountScan(path,
+      Hdf5DataSource.rowRanges(layout.nRows, rowIntervals).map { case (s, e) => e - s }.sum,
+      countsPushed)
     else new Hdf5Scan(path, layout, required, maxBytesPerPartition, rowIntervals, limit)
 }
 
-/** Metadata-only COUNT: one single-row partition carrying the header's
-  * row count.
+/** Metadata-only COUNT: one single-row partition carrying the row count
+  * of the (pruned) row ranges.
   */
 private[sources] class Hdf5CountScan(path: String,
-    layout: Hdf5DataSource.Layout, nCounts: Int) extends Scan with Batch {
+    nRows: Long, nCounts: Int) extends Scan with Batch {
   override def readSchema(): StructType =
     StructType((1 to nCounts).map(i => StructField(s"count_$i", LongType, nullable = false)))
   override def toBatch: Batch = this
   override def description(): String =
-    s"sonatah5-count $path rows=${layout.nRows} PushedAggregates: count (metadata-only)"
+    s"sonatah5-count $path rows=$nRows PushedAggregates: count (metadata-only)"
   override def planInputPartitions(): Array[InputPartition] =
-    Array(TouchCountSplit(layout.nRows))
+    Array(TouchCountSplit(nRows))
   override def createReaderFactory(): PartitionReaderFactory =
     new TouchCountReaderFactory(nCounts)
 }
@@ -271,15 +302,8 @@ private[sources] class Hdf5Scan(path: String, layout: Hdf5DataSource.Layout,
         s" PushedEdgeIdRanges: ${iv.map { case (a, b) => s"[$a,$b]" }.mkString("∪")}") +
       limit.fold("")(l => s" PushedLimit: $l")
 
-  private def prunedRanges: Seq[(Long, Long)] = {
-    val n = layout.nRows
-    // closed intervals → clamped half-open row ranges
-    rowIntervals
-      .map(_.map { case (lo, hi) =>
-        (math.max(lo, 0L), math.min(if (hi == Long.MaxValue) n else hi + 1, n))
-      }.filter { case (s, e) => e > s })
-      .getOrElse(if (n > 0) Seq((0L, n)) else Nil)
-  }
+  private def prunedRanges: Seq[(Long, Long)] =
+    Hdf5DataSource.rowRanges(layout.nRows, rowIntervals)
 
   override def estimateStatistics(): Statistics = {
     val rowBytes = math.max(1L,

@@ -8,6 +8,8 @@ import graft.io.TouchBinary.TouchIndex
 import graft.model.TouchModel
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HadoopPath}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -20,6 +22,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 connector for TouchDetector binary files — the
   * "custom connector" rung of the extension ladder (SURVEY.md §7.4's
@@ -48,20 +51,26 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
   *    interval, the Spark face of the reference's per-neuron
   *    `seek(pos)` loop (touch_reader.cpp:196-228, offsets :136-144):
   *    `IN (5, 9000)` reads two neuron blocks, not the hull between
-  *    them. Pruning is split-planning only: every filter stays a
-  *    post-scan residual, so results never depend on the index being
-  *    truthful; a query for k scattered neurons' touches reads those
+  *    them. The pushed predicate is EXACT, so no residual `Filter` runs
+  *    above the scan: the reader checks every decoded record's gid word,
+  *    read from the raw record bytes, against the pushed intervals and
+  *    drops the records outside them. Results never depend on the index
+  *    being truthful — the index only chooses which record ranges are
+  *    read; a query for k scattered neurons' touches reads those
   *    neurons' byte ranges, not the file.
   *  - **Metadata-only COUNT** (`SupportsPushDownAggregates`): an
   *    ungrouped, unfiltered `count(*)` (or `count(col)` — every touch
   *    column is non-nullable) is answered from file lengths alone
   *    (`length / recordSize` per file, summed by Spark), zero data
   *    bytes read — parquet's footer-count trick for a fixed-width
-  *    format. Gid predicates stay residual Filter nodes, so a filtered
-  *    count takes the pruned-scan path and never trusts the index.
-  *  - **Limit pushdown** (`SupportsPushDownLimit`, partial): `limit k`
-  *    plans ~k records from the first file(s) instead of the whole
-  *    directory — the interactive-peek path.
+  *    format. With gid predicates pushed, COUNT is refused, so a
+  *    filtered count takes the pruned-scan path and never trusts the
+  *    index.
+  *  - **Limit pushdown** (`SupportsPushDownLimit`, partial): an
+  *    unfiltered `limit k` plans ~k records from the first file(s)
+  *    instead of the whole directory — the interactive-peek path. Like
+  *    COUNT, it is refused when gid predicates are pushed: both would
+  *    count planned records before the exact gid check.
   *  - **Faithful synapse ids without a count job**: global row =
   *    `split start record + local index` is known statically from the
   *    split plan (no `zipWithIndex` counting pass), and the id uses the
@@ -79,10 +88,11 @@ import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
   *    projections without it scan them freely.
   *  - **Hadoop FileSystem I/O**: lengths, listings, and reads go
   *    through `org.apache.hadoop.fs.FileSystem` (the session's Hadoop
-  *    conf, serialized to executors), so the source works on any
-  *    Hadoop-supported store, not just the local filesystem — and a
-  *    file whose length is not a record multiple is rejected loudly at
-  *    split planning, naming the byte offset of the partial record.
+  *    conf, broadcast once per scan as Spark's `FileScan` does), so the
+  *    source works on any Hadoop-supported store, not just the local
+  *    filesystem — and a file whose length is not a record multiple is
+  *    rejected loudly at split planning, naming the byte offset of the
+  *    partial record.
   *
   * Usage: `spark.read.format("touchbin").load(dataPathOrDir)` (registered
   * via `DataSourceRegister`) — schema, endianness, and version come
@@ -98,15 +108,28 @@ class TouchDataSource extends TableProvider with DataSourceRegister {
     p
   }
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    TouchDataSource.schemaFor(
-      TouchDataSource.indexedDataFiles(pathOf(options)).head.index.version)
+  /** The listing and index reads of [[inferSchema]], handed on to the
+    * table [[getTable]] builds for the same path: one metadata pass per
+    * load.
+    */
+  private[sources] var inferred: Option[(String, Seq[TouchDataSource.IndexedFile])] = None
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val path = pathOf(options)
+    val indexed = TouchDataSource.indexedDataFiles(path)
+    inferred = Some(path -> indexed)
+    TouchDataSource.schemaFor(indexed.head.index.version)
+  }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new TouchTable(properties.get("path"),
+                        properties: util.Map[String, String]): Table = {
+    val path = properties.get("path")
+    new TouchTable(path,
+      inferred.collect { case (`path`, indexed) => indexed }
+        .getOrElse(TouchDataSource.indexedDataFiles(path)),
       Option(properties.get("maxBytesPerPartition")).map(_.toLong)
         .getOrElse(128L * 1024 * 1024))
+  }
 }
 
 object TouchDataSource {
@@ -135,9 +158,10 @@ object TouchDataSource {
     * carry "Data" in the name); a plain file resolves to itself.
     * Lengths come from the same listing.
     */
-  def resolveDataFiles(path: String): Seq[(String, Long)] = {
+  def resolveDataFiles(path: String,
+                       conf: Configuration = TouchBinary.hadoopConf()): Seq[(String, Long)] = {
     val p = new HadoopPath(path)
-    val fs = p.getFileSystem(TouchBinary.hadoopConf())
+    val fs = p.getFileSystem(conf)
     val status = fs.getFileStatus(p)
     if (!status.isDirectory) Seq(path -> status.getLen)
     else {
@@ -153,11 +177,13 @@ object TouchDataSource {
     * with its decoded companion index, with the schema-agreement check
     * of the reference's multi-input converter (parquet2hdf5.cpp:67-73):
     * mixed record versions cannot share one schema, so the load fails
-    * before any task runs.
+    * before any task runs. One Hadoop conf serves the listing and every
+    * index read.
     */
   def indexedDataFiles(paths: String*): Seq[IndexedFile] = {
-    val indexed = paths.flatMap(resolveDataFiles).map { case (f, len) =>
-      IndexedFile(f, len, TouchBinary.readIndex(TouchBinary.indexFileFor(f))) }
+    val conf = TouchBinary.hadoopConf()
+    val indexed = paths.flatMap(resolveDataFiles(_, conf)).map { case (f, len) =>
+      IndexedFile(f, len, TouchBinary.readIndex(TouchBinary.indexFileFor(f), conf)) }
     val versions = indexed.map(_.index.version).distinct
     require(versions.size == 1,
       s"touch inputs disagree on schema version: " +
@@ -254,28 +280,27 @@ object TouchDataSource {
       }
     }
   }
+
+  /** Moves rows `sel(0) < sel(1) < … < sel(m - 1)` of `v` to rows
+    * `0 … m - 1`, in place (each `sel(j) >= j`, so no row is read
+    * after it is overwritten).
+    */
+  private[sources] def compact(v: WritableColumnVector, sel: Array[Int], m: Int): Unit = {
+    var j = 0
+    v.dataType match {
+      case LongType => while (j < m) { v.putLong(j, v.getLong(sel(j))); j += 1 }
+      case IntegerType => while (j < m) { v.putInt(j, v.getInt(sel(j))); j += 1 }
+      case ShortType => while (j < m) { v.putShort(j, v.getShort(sel(j))); j += 1 }
+      case ByteType => while (j < m) { v.putByte(j, v.getByte(sel(j))); j += 1 }
+      case FloatType => while (j < m) { v.putFloat(j, v.getFloat(sel(j))); j += 1 }
+      case t => throw new IllegalStateException(s"touch column of type $t cannot be compacted")
+    }
+  }
 }
 
-/** Java-serializable Hadoop `Configuration` carrier (the Spark-internal
-  * equivalent is `private[spark]`): Configuration is a Writable, so the
-  * wrapper round-trips it through its own wire format.
-  */
-private[sources] class SerializableHadoopConf(@transient var value: Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
-}
-
-private[sources] class TouchTable(path: String, maxBytesPerPartition: Long)
-    extends Table with SupportsRead {
-  private lazy val indexed = TouchDataSource.indexedDataFiles(path)
+private[sources] class TouchTable(path: String,
+    private[sources] val indexed: Seq[TouchDataSource.IndexedFile],
+    maxBytesPerPartition: Long) extends Table with SupportsRead {
   override def name(): String = s"touchbin:$path"
   override def schema(): StructType = TouchDataSource.schemaFor(indexed.head.index.version)
   override def capabilities(): util.Set[TableCapability] =
@@ -352,6 +377,20 @@ private[sources] object GidIntervals {
       for { a <- intervalsOf(l); b <- intervalsOf(r) } yield normalize(a ++ b)
     case _ => None
   }
+
+  /** A sorted, disjoint interval union as bound arrays: the reader's
+    * per-record membership test.
+    */
+  final case class Bounds(lo: Array[Long], hi: Array[Long]) {
+    def contains(x: Long): Boolean = {
+      val r = java.util.Arrays.binarySearch(lo, x)
+      val k = if (r >= 0) r else -r - 2 // last interval starting at or below x
+      k >= 0 && x <= hi(k)
+    }
+  }
+
+  /** `iv` must be sorted and disjoint, as every pushed union is. */
+  def bounds(iv: Seq[(Long, Long)]): Bounds = Bounds(iv.map(_._1).toArray, iv.map(_._2).toArray)
 }
 
 private[sources] class TouchScanBuilder(path: String,
@@ -374,23 +413,24 @@ private[sources] class TouchScanBuilder(path: String,
 
   import GidIntervals.{intersect, intervalsOf, normalize}
 
-  /** Gid-range pushdown as SPLIT PRUNING (the Spark face of the
-    * reference's `seek(pos)`, touch_reader.cpp:196-228): gid predicates
-    * on `source_node_id` narrow each file's planned record ranges via
-    * its companion index — one range per disjoint gid interval, so
-    * `IN (5, 9000)` reads two neuron blocks, not the hull between
-    * them. EVERY filter is returned as a residual — the index bounds
-    * which record ranges can hold matching gids, Spark still evaluates
-    * the predicate per row, so pruning can never change results, only
-    * skip I/O.
+  /** Exact gid-range pushdown (the Spark face of the reference's
+    * `seek(pos)`, touch_reader.cpp:196-228): gid predicates on
+    * `source_node_id` narrow each file's planned record ranges via its
+    * companion index — one range per disjoint gid interval, so
+    * `IN (5, 9000)` reads two neuron blocks, not the hull between them
+    * — and the reader checks every record it decodes against the same
+    * intervals. Only the filters [[GidIntervals.intervalsOf]] cannot
+    * read are returned as residuals; the index chooses which records
+    * are read, never which ones are returned.
     */
   override def pushFilters(filters: Array[sources.Filter]): Array[sources.Filter] = {
-    accepted = filters.filter(f => intervalsOf(f).isDefined)
+    val (gid, rest) = filters.partition(f => intervalsOf(f).isDefined)
+    accepted = gid
     gidIntervals = accepted.foldLeft(Option.empty[Seq[(Long, Long)]]) { (acc, f) =>
       val iv = normalize(intervalsOf(f).get)
       Some(acc.fold(iv)(intersect(_, iv)))
     }
-    filters
+    rest
   }
 
   override def pushedFilters(): Array[sources.Filter] = accepted
@@ -401,8 +441,9 @@ private[sources] class TouchScanBuilder(path: String,
     * ungrouped, non-distinct counts qualify (`count(*)`, or `count(col)`
     * of any touch column — all are non-nullable, so both equal the
     * record count). Catalyst only offers an aggregate for pushdown when
-    * nothing sits between it and the scan, and every gid predicate
-    * stays a post-scan residual (a Filter node), so a filtered count
+    * no residual filter sits between it and the scan; a count over
+    * pushed gid predicates is refused, because file lengths count
+    * planned records before the exact gid check, so a filtered count
     * takes the normal pruned-scan path and this fast path can never
     * hinge on the index being truthful — it trusts only the record
     * width, which the scan already requires of every file. Pushdown is
@@ -422,7 +463,7 @@ private[sources] class TouchScanBuilder(path: String,
       })
       case _ => false
     }
-    val ok = aggregation.groupByExpressions.isEmpty &&
+    val ok = accepted.isEmpty && aggregation.groupByExpressions.isEmpty &&
       aggregation.aggregateExpressions.nonEmpty &&
       aggregation.aggregateExpressions.forall(countable)
     if (ok) countsPushed = aggregation.aggregateExpressions.length
@@ -433,9 +474,11 @@ private[sources] class TouchScanBuilder(path: String,
     * still applies the final limit): `df.limit(k)` on a touch directory
     * reads ~k records from the first file instead of every byte. Like
     * the count path, Catalyst only offers a limit when no residual
-    * filter sits below it.
+    * filter sits below it, and it is refused over pushed gid
+    * predicates, whose planned records may include non-matching ones.
     */
-  override def pushLimit(l: Int): Boolean = { limit = Some(l); true }
+  override def pushLimit(l: Int): Boolean =
+    if (accepted.nonEmpty) false else { limit = Some(l); true }
   override def isPartiallyPushed(): Boolean = true
 
   override def build(): Scan =
@@ -486,6 +529,10 @@ private[sources] case class TouchSplit(
     path: String, startRecord: Long, numRecords: Long,
     index: TouchIndex) extends InputPartition
 
+/** `planTimeIntervals` are the pushed gid predicates: they prune splits
+  * and are checked per record. Runtime (DPP) intervals only prune:
+  * Spark keeps the join above them.
+  */
 private[sources] class TouchScan(path: String,
     indexed: Seq[TouchDataSource.IndexedFile],
     required: StructType, maxBytesPerPartition: Long,
@@ -516,10 +563,10 @@ private[sources] class TouchScan(path: String,
     * but before split enumeration, and intersects into the same
     * interval algebra the static pushdown uses, so a broadcast-joined
     * neuron dimension prunes record ranges exactly like a literal
-    * `IN`. Same safety contract as the static path: pruning only skips
-    * I/O — Spark keeps every predicate as a post-scan residual, and a
-    * filter this scan cannot interpret is simply ignored (no pruning,
-    * never a wrong result).
+    * `IN`. Unlike the static path, runtime intervals only prune: the
+    * reader does not check them, because Spark keeps the join above
+    * the scan, and a filter this scan cannot interpret is simply
+    * ignored (no pruning, never a wrong result).
     */
   override def filterAttributes(): Array[NamedReference] =
     Array(org.apache.spark.sql.connector.expressions.Expressions
@@ -609,18 +656,30 @@ private[sources] class TouchScan(path: String,
   /** Every split is read as column batches (see [[TouchReaderFactory]]). */
   override def columnarSupportMode(): Scan.ColumnarSupportMode = Scan.ColumnarSupportMode.SUPPORTED
 
-  override def createReaderFactory(): PartitionReaderFactory =
+  /** The session's Hadoop conf is broadcast once per scan, as Spark's
+    * `FileScan` does, instead of riding in every task. Its carrier is
+    * Spark's own, which the Java and the Kryo serializer both
+    * round-trip.
+    */
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val session = SparkSession.active
     new TouchReaderFactory(
-      new SerializableHadoopConf(TouchBinary.hadoopConf()),
-      required.fieldNames)
+      session.sparkContext.broadcast(
+        new SerializableConfiguration(session.sessionState.newHadoopConf())),
+      required.fieldNames, planTimeIntervals.map(GidIntervals.bounds))
+  }
 }
 
 /** Columnar reader of one split: each batch `readFully`s up to
   * [[TouchDataSource.BatchRecords]] records into one reused byte array
-  * and fills one reused column vector per required field.
+  * and fills one reused column vector per required field. With `keep`
+  * set, records whose gid word lies outside it are dropped from the
+  * batch after decoding, so `synapse_id` still comes from each record's
+  * own position.
   */
-private[sources] class TouchReaderFactory(conf: SerializableHadoopConf,
-    fields: Array[String]) extends PartitionReaderFactory {
+private[sources] class TouchReaderFactory(
+    private[sources] val conf: Broadcast[SerializableConfiguration],
+    fields: Array[String], keep: Option[GidIntervals.Bounds]) extends PartitionReaderFactory {
 
   override def supportColumnarReads(partition: InputPartition): Boolean = true
 
@@ -640,26 +699,44 @@ private[sources] class TouchReaderFactory(conf: SerializableHadoopConf,
       private val batch = new ColumnarBatch(vectors.toArray[ColumnVector])
       private val in = {
         val p = new HadoopPath(split.path)
-        p.getFileSystem(conf.value).open(p)
+        p.getFileSystem(conf.value.value).open(p)
       }
+      private val gidOff = TouchModel.field("source_node_id").offset
+      private val sel = if (keep.isDefined) new Array[Int](capacity) else null
       private var done = 0L
 
-      // next() decodes the next batch into the reused vectors; get()
-      // returns it until the following next()
+      // next() decodes the next batch with a matching record into the
+      // reused vectors; get() returns it until the following next()
       override def next(): Boolean = {
-        if (done >= split.numRecords) return false
-        val n = math.min(capacity.toLong, split.numRecords - done).toInt
-        val first = split.startRecord + done
-        // positional readFully: fails loudly on a short read
-        in.readFully(first * recSize, bytes, 0, n * recSize)
-        var c = 0
-        while (c < layout.length) {
-          TouchDataSource.fill(layout(c), split, buf, n, first, vectors(c))
-          c += 1
+        while (done < split.numRecords) {
+          val n = math.min(capacity.toLong, split.numRecords - done).toInt
+          val first = split.startRecord + done
+          // positional readFully: fails loudly on a short read
+          in.readFully(first * recSize, bytes, 0, n * recSize)
+          var c = 0
+          while (c < layout.length) {
+            TouchDataSource.fill(layout(c), split, buf, n, first, vectors(c))
+            c += 1
+          }
+          done += n
+          val m = keep.fold(n)(matching(_, n))
+          if (m < n) vectors.foreach(TouchDataSource.compact(_, sel, m))
+          if (m > 0) { batch.setNumRows(m); return true }
         }
-        batch.setNumRows(n)
-        done += n
-        true
+        false
+      }
+
+      /** Records of the batch whose gid word is in `k`; their positions
+        * go to `sel`.
+        */
+      private def matching(k: GidIntervals.Bounds, n: Int): Int = {
+        var m = 0
+        var i = 0
+        while (i < n) {
+          if (k.contains(buf.getInt(i * recSize + gidOff))) { sel(m) = i; m += 1 }
+          i += 1
+        }
+        m
       }
 
       override def get(): ColumnarBatch = batch

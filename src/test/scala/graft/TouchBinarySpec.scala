@@ -257,6 +257,25 @@ class TouchBinarySpec extends AnyFunSuite {
     } finally reader.close()
   }
 
+  test("readMeta reads the footer KV pairs without a Spark job") {
+    val sc = spark.sparkContext
+    val out = Files.createTempDirectory("t2p_meta_jobs").resolve("out").toString
+    TouchToParquet.convert(spark, TouchToParquet.fixturePath(3), out)
+    sc.setJobGroup("read_meta", "readMeta")
+    val meta = try graft.io.ParquetMeta.readMeta(spark, out) finally sc.clearJobGroup()
+    // a later job seen by the status store means every earlier one is too
+    sc.setJobGroup("read_meta_marker", "marker")
+    try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup("read_meta_marker").isEmpty &&
+        System.nanoTime() < deadline)
+      Thread.sleep(20)
+    assert(sc.statusTracker.getJobIdsForGroup("read_meta").isEmpty,
+      "readMeta must read one footer, not run a schema-inference job")
+    assert(meta.getString("touchdetector_version") == "6.0.0")
+    assert(meta.getString("touch2parquet_version") == graft.BuildInfo.version)
+  }
+
   test("recordRangeFor clamps one-sided and out-of-domain bounds (no wrap)") {
     val idx = TouchBinary.TouchIndex(littleEndian = true, "1.0.0",
       graft.model.TouchModel.sniffVersion("1.0.0"), firstGid = 100,

@@ -17,6 +17,13 @@ class TouchDataSourceSpec extends AnyFunSuite {
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
 
+  /** `full`'s rows whose source gid passes `keep`, filtered on the
+    * driver: the reference for a pushed gid predicate.
+    */
+  private def rowsWhere(full: org.apache.spark.sql.DataFrame)(keep: Int => Boolean): Seq[String] =
+    full.collect().filter(r => keep(r.getAs[Int]("source_node_id")))
+      .map(_.toSeq.mkString("|")).sorted.toSeq
+
   /** The v3 output columns, in order; v1 and v2 are its first 11 and 22.
     * Written out here, not derived from `TouchModel.Layout`, so a change
     * to a column's type or position fails this spec.
@@ -170,10 +177,10 @@ class TouchDataSourceSpec extends AnyFunSuite {
       s"index pruning must plan only matching record ranges, got ${pruned.rdd.getNumPartitions}")
     assert(pruned.queryExecution.executedPlan.toString.contains("PushedGidRange"),
       pruned.queryExecution.executedPlan.toString)
-    // identical rows to the post-scan filter over the full scan —
+    // identical rows to the full scan filtered on the driver —
     // including synapse_id, whose global row positions must stay
     // absolute under pruned split plans
-    assert(rows(pruned) == rows(full.filter(pred)))
+    assert(rows(pruned) == rowsWhere(full)(g => g >= 102 && g <= 103))
     val ids = pruned.select("synapse_id", "source_node_id").collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSeq.sorted
     assert(ids == (for (g <- 102 to 103; k <- 0 until 10)
@@ -189,7 +196,7 @@ class TouchDataSourceSpec extends AnyFunSuite {
     // wrapped) and must prune to the leading blocks
     val upper = read().filter(col("source_node_id") <= 101)
     assert(upper.rdd.getNumPartitions == 2, s"got ${upper.rdd.getNumPartitions}")
-    assert(rows(upper) == rows(full.filter(col("source_node_id") <= 101)))
+    assert(rows(upper) == rowsWhere(full)(_ <= 101))
     assert(read().filter(col("source_node_id") < 101).rdd.getNumPartitions == 1)
   }
 
@@ -209,25 +216,24 @@ class TouchDataSourceSpec extends AnyFunSuite {
       s"IN (first, last) must plan 2 ranges, got ${pruned.rdd.getNumPartitions}")
     assert(pruned.queryExecution.executedPlan.toString.contains("PushedGidRanges"),
       pruned.queryExecution.executedPlan.toString)
-    assert(rows(pruned) == rows(full.filter(inPred)))
+    assert(rows(pruned) == rowsWhere(full)(Set(100, 105)))
     // OR of two ranges prunes the gap between them
     val orPred = (col("source_node_id") === 100) || (col("source_node_id") >= 104)
     val orScan = read().filter(orPred)
     assert(orScan.rdd.getNumPartitions == 3, // 1 block + 2 blocks
       s"got ${orScan.rdd.getNumPartitions}")
-    assert(rows(orScan) == rows(full.filter(orPred)))
+    assert(rows(orScan) == rowsWhere(full)(g => g == 100 || g >= 104))
     // ADJACENT gid values merge into one contiguous record range
     // (2 blocks of 10 records → 2 splits at 10 records/split, but ONE
     // merged range — no duplicate planning at the seam)
     val adj = read().filter(col("source_node_id").isin(102, 103))
     assert(adj.rdd.getNumPartitions == 2, s"got ${adj.rdd.getNumPartitions}")
-    assert(rows(adj) == rows(full.filter(col("source_node_id").isin(102, 103))))
+    assert(rows(adj) == rowsWhere(full)(Set(102, 103)))
     // conjunction of an IN with a range intersects interval sets
     val both = read().filter(col("source_node_id").isin(100, 103, 105) &&
       col("source_node_id") >= 103)
     assert(both.rdd.getNumPartitions == 2, s"got ${both.rdd.getNumPartitions}")
-    assert(rows(both) == rows(full.filter(
-      col("source_node_id").isin(100, 103, 105) && col("source_node_id") >= 103)))
+    assert(rows(both) == rowsWhere(full)(g => Set(100, 103, 105)(g) && g >= 103))
     // synapse ids keep absolute row positions under multi-range pruning
     val ids = pruned.select("synapse_id", "source_node_id").collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSeq.sorted
@@ -257,8 +263,9 @@ class TouchDataSourceSpec extends AnyFunSuite {
     // count DISTINCT must NOT push (not answerable from lengths)
     val cntDist = read().select(col("source_node_id")).distinct().count()
     assert(cntDist == 6L)
-    // a FILTERED count takes the pruned-scan path (gid predicates stay
-    // residuals, so Catalyst never offers the aggregate to the source)
+    // a FILTERED count takes the pruned-scan path (the source refuses
+    // COUNT over pushed gid predicates: file lengths count planned
+    // records, before the reader's exact gid check)
     val filtered = read().filter(col("source_node_id") <= 101).agg(count(lit(1)))
     assert(!filtered.queryExecution.executedPlan.toString.contains("PushedAggregates"),
       filtered.queryExecution.executedPlan.toString)
@@ -280,40 +287,10 @@ class TouchDataSourceSpec extends AnyFunSuite {
     */
   private val boundaryCounts = Seq(1500, 2500, 300, 1700, 2100, 200, 1700, 37)
 
-  /** A v3 pair of 10,037 records in the given byte order, with varied
-    * values in every field: negative and out-of-range section, segment
-    * and branch words (narrowed on decode), every branch_type byte, and
-    * random float bit patterns, NaNs among them.
-    */
+  /** A truthful v3 pair of 10,037 records in the given byte order. */
   private def writeBoundaryPair(order: java.nio.ByteOrder): String = {
-    import java.nio.ByteBuffer
-    val dir = java.nio.file.Paths.get(graft.io.TempDirs.create("touch_batches"))
-    val rec = 104
-    val n = boundaryCounts.sum
-    def mix(x: Long): Int = {
-      var z = x * 0x9E3779B97F4A7C15L + 0x632BE59BD9B4E019L
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      (z ^ (z >>> 27)).toInt
-    }
-    val data = ByteBuffer.allocate(n * rec).order(order)
-    val gids = boundaryCounts.zipWithIndex.flatMap { case (c, i) => Seq.fill(c)(500 + i) }
-    for ((gid, r) <- gids.zipWithIndex) {
-      val base = r * rec
-      data.putInt(base, gid)
-      data.putInt(base + 4, mix(r) % 0x8000) // pre_section: at most 0x7fff
-      for (w <- 2 until 19) data.putInt(base + 4 * w, mix(r.toLong * 31 + w))
-      data.putInt(base + 12, 20000 + r % 977) // post gid
-      data.put(base + 76, r.toByte)           // branch_type
-      for (w <- 20 until 26) data.putInt(base + 4 * w, mix(r.toLong * 37 + w))
-    }
-    java.nio.file.Files.write(dir.resolve("touchesData.0"), data.array())
-    val idx = ByteBuffer.allocate(32 + boundaryCounts.length * 16).order(order)
-    idx.putDouble(1.001).putLong(boundaryCounts.length)
-    idx.put("6.0.0".getBytes("US-ASCII")); idx.position(32)
-    boundaryCounts.scanLeft(0L)(_ + _).zip(boundaryCounts).zipWithIndex.foreach {
-      case ((shift, c), i) => idx.putInt(500 + i).putInt(c).putLong(shift * rec) }
-    java.nio.file.Files.write(dir.resolve("touches.0"), idx.array())
-    dir.resolve("touchesData.0").toString
+    val blocks = boundaryCounts.zipWithIndex.map { case (c, i) => (500 + i, c) }
+    TouchPairs.writeV3(order, blocks, TouchPairs.entriesOf(blocks))
   }
 
   private lazy val boundaryPairs = Seq(java.nio.ByteOrder.LITTLE_ENDIAN, java.nio.ByteOrder.BIG_ENDIAN)

@@ -39,7 +39,8 @@ class RuntimeFilterSpec extends AnyFunSuite {
   }
 
   private def freshScan(): TouchScan = {
-    val table = new TouchTable(fixturePath, maxBytesPerPartition = 1L << 26)
+    val table = new TouchTable(fixturePath,
+      TouchDataSource.indexedDataFiles(fixturePath), maxBytesPerPartition = 1L << 26)
     table.newScanBuilder(CaseInsensitiveStringMap.empty()).build()
       .asInstanceOf[TouchScan]
   }
