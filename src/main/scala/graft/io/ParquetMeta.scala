@@ -11,9 +11,10 @@ import org.apache.spark.sql.types.{DataType, Metadata, MetadataBuilder, StructTy
   * (`touchdetector_version` / `touch2parquet_version`,
   * src/touches/parquet_writer.cpp:115-120).
   *
-  * Spark's parquet writer owns the footer, and its one file-level KV
-  * entry is the schema JSON (`org.apache.spark.sql.parquet.row.
-  * metadata`), which embeds per-field `Metadata`. So the KV pairs ride
+  * Spark's parquet writer owns the footer (`PageParquetFormat` writes
+  * the same one), and its one file-level KV entry is the schema JSON
+  * (`org.apache.spark.sql.parquet.row.metadata`), which embeds
+  * per-field `Metadata`. So the KV pairs ride
   * as a nested metadata map on the FIRST schema field under the
   * `graft.file_meta` key: they land physically in every footer, survive
   * a write→read round trip through any Spark reader, and stay invisible
@@ -23,22 +24,26 @@ object ParquetMeta {
 
   val MetaKey = "graft.file_meta"
 
-  /** Write `df` with the given footer KV pairs (merged into the first
-    * field's existing metadata) and any parquet writer options.
+  /** Write `df` with the given footer KV pairs and any parquet writer
+    * options through Spark's parquet writer.
     */
   def writeWithMeta(df: DataFrame, path: String, kv: Map[String, String],
-                    options: Map[String, String] = Map.empty): Unit = {
+                    options: Map[String, String] = Map.empty): Unit =
+    stamped(df, kv).write.mode("overwrite").options(options).parquet(path)
+
+  /** `df` with the footer KV pairs merged into its first field's
+    * metadata, for any parquet sink that writes Spark's schema entry.
+    */
+  def stamped(df: DataFrame, kv: Map[String, String]): DataFrame = {
     require(df.columns.nonEmpty, "cannot stamp metadata on a zero-column frame")
     val inner = kv.foldLeft(new MetadataBuilder()) {
       case (b, (k, v)) => b.putString(k, v)
     }.build()
-    val first = df.columns.head
     val merged = new MetadataBuilder()
       .withMetadata(df.schema.head.metadata)
       .putMetadata(MetaKey, inner)
       .build()
-    df.withMetadata(first, merged)
-      .write.mode("overwrite").options(options).parquet(path)
+    df.withMetadata(df.columns.head, merged)
   }
 
   /** Spark's footer key holding the row schema as JSON. */

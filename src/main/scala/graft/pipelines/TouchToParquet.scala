@@ -1,8 +1,11 @@
 package graft.pipelines
 
+import java.util.UUID
+
 import graft.Q
-import graft.io.TouchBinary
+import graft.io.{PageParquetFormat, ParquetMeta, TouchBinary}
 import graft.sources.TouchDataSource
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
@@ -11,9 +14,13 @@ import org.apache.spark.sql.functions.{count, lit}
   *
   * The whole pipeline is ONE narrow stage: binary record scan → columnar
   * decode (rename/flatten/unpack/validate fused into the fill loops) →
-  * parquet sink; file-per-task parallel write replaces the reference's
-  * one-file-per-MPI-rank. Sink matches the reference writer's physical
-  * knobs: SNAPPY, dictionary encoding off, ~20 MB row groups
+  * rows → the column-at-a-time page writer `io.PageParquetFormat`,
+  * which transposes them into per-column 20,000-row pages and encodes
+  * each column's page in one pass, as the reference's writer does
+  * (src/touches/parquet_writer.cpp:189-296); file-per-task parallel
+  * write replaces the reference's one-file-per-MPI-rank. The writer has
+  * the reference writer's physical knobs as constants: SNAPPY,
+  * dictionary encoding off, ~20 MB row groups
   * (src/touches/parquet_writer.cpp:105-163, parquet_writer.h:56-59).
   */
 object TouchToParquet {
@@ -73,23 +80,40 @@ object TouchToParquet {
       indexed.head.index)
   }
 
-  /** The sink: decoded touches → parquet with the reference writer's
-    * knobs and footer provenance KVs (src/touches/parquet_writer.cpp:
+  /** The sink: decoded touches → parquet through the column-at-a-time
+    * page writer (`io.PageParquetFormat`: the reference writer's knobs)
+    * with the footer provenance KVs (src/touches/parquet_writer.cpp:
     * 115-120); `index` supplies the TouchDetector version string.
     * Returns the rows written, counted by an `Observation` on the
     * written frame rather than by reading the sink back.
+    *
+    * The job writes to a sibling staging directory
+    * (`<outDir>.inprogress-<uuid>`) that replaces `outDir` only once
+    * it has succeeded, so a failed convert (a decode guard tripping in
+    * a task) leaves no output and an earlier `outDir` untouched.
     */
   def write(touches: DataFrame, index: TouchBinary.TouchIndex, outDir: String): Long = {
-    val rows = Observation()
-    graft.io.ParquetMeta.writeWithMeta(touches.observe(rows, count(lit(1)).as("rows")), outDir,
-      kv = Map(
-        "touchdetector_version" -> index.versionString,
-        "touch2parquet_version" -> graft.BuildInfo.version),
-      options = Map(
-        "compression" -> "snappy",
-        "parquet.enable.dictionary" -> "false",
-        "parquet.block.size" -> (20 * 1024 * 1024).toString))
-    rows.get("rows").asInstanceOf[Long]
+    val spark = touches.sparkSession
+    val out = new Path(outDir)
+    val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
+    val target = fs.makeQualified(out)
+    val staging = new Path(target.getParent, s"${target.getName}.inprogress-${UUID.randomUUID}")
+    try {
+      val rows = Observation()
+      // stamped below the observation, so the stamp's projection joins
+      // the decode's code-generated stage instead of making a stage of
+      // its own above it
+      ParquetMeta.stamped(touches, Map(
+          "touchdetector_version" -> index.versionString,
+          "touch2parquet_version" -> graft.BuildInfo.version))
+        .observe(rows, count(lit(1)).as("rows"))
+        .write.format(classOf[PageParquetFormat].getName).save(staging.toString)
+      val n = rows.get("rows").asInstanceOf[Long]
+      fs.delete(target, true)
+      if (!fs.rename(staging, target))
+        throw new java.io.IOException(s"cannot move $staging to $target")
+      n
+    } finally fs.delete(staging, true)
   }
 
   /** Rows-only queries (binary input is outside the SQL oracle's reach —

@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 import scala.sys.process._
 
 /** The independent Python checkers under `tools/` (`h5check.py` for the
-  * HDF5 container, `touchcheck.py` for TouchDetector touch files), run
+  * HDF5 container, `touchcheck.py` for TouchDetector touch files,
+  * `parquetcheck.py` for parquet sinks), run
   * as separate processes so they share nothing with the code under test.
   */
 object ToolCheck {
@@ -26,9 +27,10 @@ object ToolCheck {
     out.linesIterator.toSeq
   }
 
-  /** A touch frame's rows rendered as `touchcheck.py` prints them:
-    * `|`-separated, integers in decimal, floats as their IEEE-754 bit
-    * pattern (`floatToIntBits` maps every NaN to 0x7fc00000).
+  /** A touch frame's rows rendered as `touchcheck.py` and
+    * `parquetcheck.py` print them: `|`-separated, integers in decimal,
+    * floats as their IEEE-754 bit pattern (`floatToIntBits` maps every
+    * NaN to 0x7fc00000).
     */
   def rendered(df: DataFrame): Seq[String] =
     df.collect().toSeq.map(_.toSeq.map {

@@ -3,6 +3,8 @@ package graft
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.io.TouchBinary
 import graft.model.TouchModel
 import graft.pipelines.TouchToParquet
@@ -210,6 +212,41 @@ class TouchBinarySpec extends AnyFunSuite {
       assert(code != 0 && log.contains(named), s"touchcheck accepted $data:\n$log")
     }
     assert(ToolCheck.run("touchcheck.py", trunc)._2.contains("byte 40"))
+  }
+
+  test("a convert that fails in its tasks leaves no output and keeps an earlier one") {
+    // the crafted pairs of the guard test: pre_section 0x8000 at byte
+    // 84, a 2^24 ordinal at byte 80; both trip inside the write job
+    val bad = writeFixture(Files.createTempDirectory("badsec_t2p"), 0x8000, 0L, lead = 2)
+    val over = writeFixture(Files.createTempDirectory("overflow_t2p"), 3, (2 - (1L << 24)) * 40, lead = 2)
+    def tree(dir: java.nio.file.Path): Map[String, Seq[Byte]] = {
+      val s = Files.walk(dir)
+      try s.iterator.asScala.filter(Files.isRegularFile(_))
+        .map(p => dir.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+      finally s.close()
+    }
+    def siblings(out: java.nio.file.Path): Seq[String] = {
+      val s = Files.list(out.getParent)
+      try s.iterator.asScala.map(_.getFileName.toString).toSeq.sorted finally s.close()
+    }
+    for ((data, detail) <- Seq((bad, s"$bad: byte 84: Invalid pre_section 32768"),
+        (over, s"$over: byte 80: gid 7 has more than 2^24"))) {
+      val fresh = Files.createTempDirectory("t2p_fail").resolve("out")
+      val e1 = intercept[org.apache.spark.SparkException](
+        TouchToParquet.convert(spark, data, fresh.toString))
+      assert(messages(e1).contains(detail), messages(e1))
+      assert(siblings(fresh).isEmpty, s"left behind: ${siblings(fresh)}")
+
+      val kept = Files.createTempDirectory("t2p_keep").resolve("out")
+      TouchToParquet.convert(spark, TouchToParquet.fixturePath(1), kept.toString)
+      val before = tree(kept)
+      assert(before.keys.exists(_.endsWith(".parquet")))
+      val e2 = intercept[org.apache.spark.SparkException](
+        TouchToParquet.convert(spark, data, kept.toString))
+      assert(messages(e2).contains(detail), messages(e2))
+      assert(siblings(kept) == Seq("out"), s"left behind: ${siblings(kept)}")
+      assert(tree(kept) == before, "the earlier output changed")
+    }
   }
 
   test("convert reads its output back with the written schema: one job") {

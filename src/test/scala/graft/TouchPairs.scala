@@ -45,4 +45,14 @@ object TouchPairs {
     java.nio.file.Files.write(dir.resolve("touches.0"), idx.array())
     dir.resolve("touchesData.0").toString
   }
+
+  /** Overwrites 32-bit words of the v3 data file `dataPath` in byte
+    * order `order`: each patch is (record, word, value).
+    */
+  def patchV3(dataPath: String, order: ByteOrder, patches: Seq[(Int, Int, Int)]): Unit = {
+    val path = java.nio.file.Paths.get(dataPath)
+    val data = ByteBuffer.wrap(java.nio.file.Files.readAllBytes(path)).order(order)
+    patches.foreach { case (r, w, v) => data.putInt(r * 104 + 4 * w, v) }
+    java.nio.file.Files.write(path, data.array())
+  }
 }
