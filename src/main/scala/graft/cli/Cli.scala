@@ -60,7 +60,9 @@ object Touch2Parquet {
   */
 object Parquet2Sonata {
 
-  /** The testable body (mains own the session): returns the edge count. */
+  /** The testable body (mains own the session): returns the edge count,
+    * read from the written container's metadata.
+    */
   def run(spark: SparkSession, parquetDir: String, outFile: String, population: String,
           sourceCol: String = "source_node_id", targetCol: String = "target_node_id",
           enumCols: Seq[String] = Seq.empty): Long = {
@@ -69,9 +71,9 @@ object Parquet2Sonata {
     // order, so edge_id is a total order over the input
     val tiebreak = edges.columns.filterNot(
       (Seq(sourceCol, targetCol) ++ graft.pipelines.SonataH5.SkipColumns).contains).toSeq
-    val (result, release) = graft.pipelines.SonataH5.convert(spark, edges,
+    graft.pipelines.SonataH5.convert(spark, edges,
       sourceCol, targetCol, outFile, population, tiebreak, enumCols)
-    try result.count() finally release()
+    graft.sources.Hdf5DataSource.layout(outFile, Some(population)).nRows
   }
 
   def main(args: Array[String]): Unit = {

@@ -204,7 +204,7 @@ object Dedup {
     * any τ) and MinHash (probabilistic, order-free).
     *
     * 100 TB shape: the sort is ONE range shuffle via
-    * [[graft.ops.Offsets.globalPosition]] (two-phase, no
+    * [[graft.ops.Offsets.globalPosition]] (gather → scan → scatter, no
     * single-partition stage); the neighbour join EXPLODES each row into
     * `window − 1` (pos + δ) probes and equi-joins on position — a plain
     * hash join, never an order-dependent window over the full corpus —
@@ -216,7 +216,7 @@ object Dedup {
     sortedNeighborhoodPairsStamped(docs, window, thresholdPct, keyLen)._1
 
   /** [[sortedNeighborhoodPairs]] plus the thunk releasing the persisted
-    * token index and position frame.
+    * token index.
     */
   def sortedNeighborhoodPairsStamped(docs: DataFrame, window: Int,
                                      thresholdPct: Int,
@@ -227,8 +227,7 @@ object Dedup {
     val p = thresholdPct
     val keyed = docs.select(col("doc_id"),
       substring(regexp_replace(lower(col("text")), "\\s+", ""), 1, keyLen).as("bk"))
-    val (pos, stamped) = graft.ops.Offsets.globalPositionStamped(
-      keyed, Seq(col("bk"), col("doc_id")))
+    val pos = graft.ops.Offsets.globalPosition(keyed, Seq(col("bk"), col("doc_id")))
     val probes = pos.select(col("doc_id").as("doc_a"),
         explode(sequence(col("pos") + 1, col("pos") + (window - 1))).as("pos"))
     val cand = probes.join(pos.select(col("doc_id").as("doc_b"), col("pos")), "pos")
@@ -244,7 +243,7 @@ object Dedup {
       .withColumn("n_common", size(array_intersect(col("ta"), col("tb"))).cast("long"))
       .where(lit(100L) * col("n_common") >= lit(p.toLong) * (col("n_a") + col("n_b") - col("n_common")))
       .select(col("doc_a"), col("doc_b"), col("n_common"), col("n_a"), col("n_b"))
-    (verified, () => { toks.unpersist(); stamped.unpersist(); () })
+    (verified, () => { toks.unpersist(); () })
   }
 
   /** Incremental near-dup: the production shape where a NEW BATCH of

@@ -73,8 +73,8 @@ object Stats {
     * per-PARTITION running-min window (partition-parallel), and the
     * cluster-width per-partition minima broadcast back as exclusive
     * prefix minima. The stamped frame is persisted before branching so
-    * both readers see one partition layout (same AQE note as
-    * globalPositionStamped).
+    * both readers see one partition layout (AQE may coalesce the
+    * exchange differently per reader).
     */
   def skyline2d(pts: DataFrame, xCol: String, yCol: String): DataFrame =
     skyline2dStamped(pts, xCol, yCol)._1

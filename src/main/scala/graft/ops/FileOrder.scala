@@ -28,8 +28,7 @@ object FileOrder {
     * for physical row order, which a columnar engine may not preserve
     * across splits). Emits `pos` (global) and `pos_in_file`, plus a
     * release thunk that unpersists the stamp's MEMORY_AND_DISK cache of
-    * the full input once the result is consumed (same contract as
-    * `CsrIndex.buildStamped`).
+    * the full input once the result is consumed.
     */
   def fileOrderedUnionStamped(spark: SparkSession, dir: String,
                               innerOrd: Seq[Column]): (DataFrame, () => Unit) = {

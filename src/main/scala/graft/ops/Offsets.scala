@@ -1,7 +1,12 @@
 package graft.ops
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{classic, Column, DataFrame, GraftSqlShim}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, JoinedRow, SpecificInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
@@ -31,48 +36,45 @@ object Offsets {
   }
 
   /** Deterministic global row position in `ord` order (the reference's
-    * "global row = rank offset + local row", src/parquet2hdf5.cpp:97-110).
-    *
-    * Pure-DataFrame two-phase plan, no single-partition stage anywhere:
-    * range-shuffle + local sort gives a total order across partitions;
-    * `monotonically_increasing_id` (= partitionId << 33 | localIndex, by
-    * contract) yields the local index inside codegen; per-partition counts
-    * go through the exclusive prefix sum and come back as a BROADCAST join
-    * on partition id. Catalyst's ReuseExchange evaluates the range shuffle
-    * once for both branches — total cost is one shuffle of the data plus a
-    * partition-count-sized side plan. (An RDD `zipWithIndex` formulation
-    * computes the same thing but pays a full externalize/re-encode round
-    * trip and an extra pass.) `ord` must be a total order (include a
-    * tiebreaker key) or positions are ambiguous.
+    * "global row = rank offset + local row", src/parquet2hdf5.cpp:97-110),
+    * as the reference's gather → scan → scatter: range-shuffle + local
+    * sort gives a total order across partitions; ONE job gathers the
+    * per-partition row counts to the driver, which takes their exclusive
+    * prefix; a `mapPartitionsWithIndex` over the SAME sorted RDD stamps
+    * `base(partition) + local index`. Both passes read that one RDD, so
+    * they reuse one shuffle output and see one partition layout — no
+    * cache, no second exchange, no data-sized window or join, and nothing
+    * for the caller to release. Eager: the count job runs when this is
+    * called. `ord` must be a total order (include a tiebreaker key) or
+    * positions are ambiguous.
     */
   def globalPosition(df: DataFrame, ord: Seq[Column], posCol: String = "pos"): DataFrame =
     globalPositionStamped(df, ord, posCol)._1
 
-  /** `globalPosition` plus the persisted internal frame, so composing
-    * pipelines can unpersist it once their actions complete (the plain
-    * `globalPosition` leaves the cache entry alive — callers that don't
-    * clear the session cache between queries should prefer this form).
+  /** [[globalPosition]] plus the range-sorted input it stamped. Nothing is
+    * cached: unpersisting the second element is a no-op and leaves a
+    * cache the caller put on the first in place.
     */
   def globalPositionStamped(df: DataFrame, ord: Seq[Column],
                             posCol: String = "pos"): (DataFrame, DataFrame) = {
     val sorted = df.repartitionByRange(ord: _*).sortWithinPartitions(ord: _*)
-    // single expression instance: two separate monotonically_increasing_id
-    // calls are independent nondeterministic expressions and need not agree.
-    // PERSISTED before branching — AQE may coalesce the exchange
-    // differently in the counts branch vs the main branch, which would
-    // assign different partition ids to the same rows; materializing the
-    // id-stamped data once pins the layout for both readers.
-    val withMid = sorted.withColumn("_mid", monotonically_increasing_id())
-      .withColumn("_pid", shiftright(col("_mid"), 33))
-      .withColumn("_local", col("_mid").bitwiseAND((1L << 33) - 1))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = withMid.groupBy(col("_pid")).agg(count(lit(1)).as("cnt"))
-    val offsets = exclusivePrefixSum(counts, "_pid")
-    val result = withMid
-      .join(broadcast(offsets.select(col("_pid"), col("write_offset"))), "_pid")
-      .withColumn(posCol, col("_local") + col("write_offset"))
-      .select(df.columns.map(col) :+ col(posCol): _*)
-    (result, withMid)
+    val rows = sorted.queryExecution.toRdd
+    val counts = rows.mapPartitions(it => Iterator.single(it.size.toLong)).collect()
+    val bases = counts.scanLeft(0L)(_ + _)
+    val types = sorted.schema.fields.map(_.dataType) :+ LongType
+    val stamped = rows.mapPartitionsWithIndex[InternalRow] { (pid, it) =>
+      val project = UnsafeProjection.create(types)
+      val pos = new SpecificInternalRow(Seq(LongType))
+      val joined = new JoinedRow
+      var next = bases(pid)
+      it.map { r => pos.setLong(0, next); next += 1; project(joined(r, pos)) }
+    }
+    val output = (sorted.queryExecution.analyzed.output :+
+      AttributeReference(posCol, LongType, nullable = false)()).map(_.newInstance())
+    val stats = Statistics(EstimationUtils.getSizePerRow(output) * bases.last,
+      rowCount = Some(BigInt(bases.last)))
+    val spark = sorted.sparkSession.asInstanceOf[classic.SparkSession]
+    (GraftSqlShim.ofRows(spark, LogicalRDD(output, stamped)(spark, Some(stats))), sorted)
   }
 
   /** `globalPositionStamped` with a leading GROUP dimension: `ord` must
@@ -132,7 +134,7 @@ object Offsets {
   /** Exclusive WEIGHTED prefix sum over data rows in `ord` order —
     * `globalPosition` generalized from weight 1 to `weightCol` (token
     * budgets, byte sizes): each row gets the sum of all preceding rows'
-    * weights. Same two-phase shape, still no single-partition stage:
+    * weights. A two-phase plan with no single-partition stage:
     * the only unpartitioned window runs over the per-partition totals
     * (cluster-width rows); the per-row running sum is a window
     * PARTITIONED by the physical partition id, so its parallelism is
@@ -143,8 +145,10 @@ object Offsets {
                            cumCol: String = "cum"): DataFrame =
     globalWeightedPrefixStamped(df, ord, weightCol, cumCol)._1
 
-  /** [[globalWeightedPrefix]] plus the persisted internal frame (same
-    * unpersist contract as [[globalPositionStamped]]).
+  /** [[globalWeightedPrefix]] plus the persisted internal frame, which
+    * both branches read so they see one partition layout (AQE may
+    * coalesce the exchange differently per branch); unpersist it once the
+    * result's actions complete.
     */
   def globalWeightedPrefixStamped(df: DataFrame, ord: Seq[Column], weightCol: String,
                                   cumCol: String = "cum"): (DataFrame, DataFrame) = {

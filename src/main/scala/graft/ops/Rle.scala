@@ -73,17 +73,10 @@ object Rle {
       val withPos = Offsets.globalPosition(li,
         Seq(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
           col("node_key"), col("l_quantity")))
-      // The cleanup thunk is DELIBERATELY discarded here (round-10
-      // advice): a registry query returns its frame lazily, so there is
-      // no post-action hook to run it from — the harness contract
-      // (Verify/Bench/ScaleProbe all clearCache() after each query's
-      // action) is what releases the persisted range-sorted frame.
-      // Compositions OUTSIDE that contract must call the thunk after
-      // their consuming action (the CsrIndex.buildNative done() pattern).
-      val (r, _discardedSeeComment) = RangeRle.numberedRanges(
+      RangeRle.numbered(
         withPos.select(lit(0).as("dir"),
           ascii(col("node_key")).cast("long").as("node_id"), col("pos")))
-      r.select(expr("chr(node_id)").as("node_key"),
+        .ranges.select(expr("chr(node_id)").as("node_key"),
         col("range_start"), col("range_end"))
     })
   )

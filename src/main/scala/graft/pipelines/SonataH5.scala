@@ -1,9 +1,14 @@
 package graft.pipelines
 
+import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
+import java.util.UUID
+
 import graft.{Q, Tables}
 import graft.io.Hdf5Mini
 import graft.io.Hdf5Mini.{DataRegion, DatasetSpec, GroupSpec}
-import graft.ops.{CsrIndex, Offsets}
+import graft.ops.{Offsets, RangeRle}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -18,25 +23,35 @@ import org.apache.spark.sql.types._
   * target_to_source}/{node_id_to_ranges,range_to_edge_id}` 2-D uint64).
   *
   * The distributed dataflow is the reference's MPI collectives as Spark
-  * stages: one `globalPositionStamped` total order (the exclusive prefix
-  * sum, O5), a broadcast enum encode, one fused
-  * `RangeRle.numberedRanges` two-direction RLE + numbering, and the
-  * dense primary join of `CsrIndex.primary`. Container I/O (the HDF5
-  * calls) is kept apart from that computation. Sink mechanics at scale:
+  * jobs: one `Offsets.globalPosition` total order (gather the
+  * per-partition counts, scan on the driver, scatter the bases — the
+  * exclusive prefix sum, O5), a broadcast enum encode, and one fused
+  * `RangeRle.numbered` two-direction RLE + numbering. Container I/O (the
+  * HDF5 calls) is kept apart from that computation. Sink mechanics at
+  * scale:
   *
   *  1. driver writes the file's METADATA only (a few KB: superblock,
-  *     groups, dataset headers) after three scalar facts are known —
-  *     edge count, node count per side, range count per direction;
+  *     groups, dataset headers) once the RLE's boundary summaries have
+  *     given its sizes — edge count, node count per side, range count
+  *     per direction — without a job of their own;
   *  2. every dataset is contiguous and fixed-size, so each EXECUTOR
   *     partition `pwrite`s its disjoint slice at
   *     `address + position·elemSize` — the exact MPI-IO
   *     independent-transfer model the reference uses
   *     (sonata_file.cpp:100-106, H5FD_MPIO_INDEPENDENT). On a cluster
   *     this requires the shared POSIX filesystem the reference's MPI-IO
-  *     requires too; rows are buffered per partition and flushed as
-  *     contiguous runs (one syscall per run per column, not per row);
+  *     requires too; values are buffered per partition and flushed as
+  *     contiguous runs (one syscall per run per dataset, not per row).
+  *     One pass writes the edge columns, one pass over the numbered
+  *     ranges all four index datasets: a primary row's `a` word comes
+  *     from the node's first range, its `b` word from its last — disjoint
+  *     slots, no join; edge-less ids keep the region's zero fill;
   *  3. only the `@library` dictionaries (enum-small by definition) pass
   *     through the driver.
+  *
+  * The file is written as a sibling `<out>.inprogress-<uuid>` and moved
+  * onto `<out>` only once every write has succeeded, so a failed convert
+  * leaves no partial container and keeps an earlier one.
   */
 object SonataH5 {
 
@@ -56,7 +71,7 @@ object SonataH5 {
   }
 
   /** Encode one value of a (name-matched) column as little-endian bytes. */
-  private def putValue(bb: java.nio.ByteBuffer, t: Hdf5Mini.H5Type,
+  private def putValue(bb: ByteBuffer, t: Hdf5Mini.H5Type,
                        row: Row, i: Int, name: String): Unit = {
     require(!row.isNullAt(i), s"sonata-h5: null in column $name (SONATA datasets are total)")
     t match {
@@ -71,45 +86,47 @@ object SonataH5 {
   }
 
   /** Per-partition flush cap: a run buffer never grows past this, so
-    * executor memory is O(#columns · cap) regardless of partition size
+    * executor memory is O(#datasets · cap) regardless of partition size
     * (the first cut buffered whole partitions of Row objects and OOM'd
     * at the 100× probe — 1.9M rows per partition × 32 tasks).
     */
   private val RunFlushBytes = 4 << 20
 
-  /** Streaming run writer over ONE pass of a partition: rows arrive as
-    * (row offset, per-dataset payloads); contiguous offsets accumulate
-    * into per-dataset buffers flushed on a run break or at
-    * [[RunFlushBytes]] — one positional write per dataset per run (one
-    * per partition in the common sorted-contiguous case), bounded
-    * memory, correct for ANY row order (out-of-order rows just start a
-    * new run).
+  /** One dataset's positional writes over an open channel: values put at
+    * consecutive element offsets accumulate into one run, written out on
+    * a gap or at [[RunFlushBytes]] — one write per dataset per partition
+    * in the common sorted-contiguous case, bounded memory, correct for
+    * ANY order (an out-of-order value just starts a new run).
     */
-  private def writeStreamedRuns(path: String,
-                                plans: Seq[(DataRegion, Int)], // (region, elems per row)
-                                rows: Iterator[(Long, Seq[Array[Byte]])]): Unit = {
-    if (!rows.hasNext) return
-    val ch = java.nio.channels.FileChannel.open(java.nio.file.Paths.get(path),
-      java.nio.file.StandardOpenOption.WRITE)
+  private final class Runs(ch: FileChannel, region: DataRegion) {
+    /** The next value's bytes; [[put]] appends them to the run. */
+    val value: ByteBuffer = ByteBuffer.allocate(region.dtype.size).order(ByteOrder.LITTLE_ENDIAN)
+    private val run = new java.io.ByteArrayOutputStream(64 << 10)
+    private var start = -1L
+    private var next = -1L
+
+    def put(elem: Long): Unit = {
+      if (elem != next || run.size >= RunFlushBytes) { flush(); start = elem }
+      run.write(value.array(), 0, value.position())
+      value.clear()
+      next = elem + 1
+    }
+
+    def putLong(elem: Long, v: Long): Unit = { value.putLong(v); put(elem) }
+
+    def flush(): Unit = if (run.size > 0) {
+      Hdf5Mini.fill(ch, region, start, run.toByteArray)
+      run.reset()
+    }
+  }
+
+  /** One partition's [[Runs]] over `regions` of `path`, flushed at the end. */
+  private def withRuns(path: String, regions: Seq[DataRegion])(body: IndexedSeq[Runs] => Unit): Unit = {
+    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.WRITE)
     try {
-      val bufs = plans.map(_ => new java.io.ByteArrayOutputStream(64 << 10))
-      var runStart = -1L
-      var expected = -1L
-      def flush(): Unit = if (runStart >= 0 && bufs.head.size > 0) {
-        plans.zip(bufs).foreach { case ((region, elemsPerRow), b) =>
-          Hdf5Mini.fill(ch, region, runStart * elemsPerRow, b.toByteArray)
-          b.reset()
-        }
-      }
-      rows.foreach { case (off, payloads) =>
-        if (off != expected || bufs.head.size >= RunFlushBytes) {
-          flush(); runStart = off
-        }
-        var i = 0
-        while (i < payloads.length) { bufs(i).write(payloads(i)); i += 1 }
-        expected = off + 1
-      }
-      flush()
+      val runs = regions.map(new Runs(ch, _)).toIndexedSeq
+      body(runs)
+      runs.foreach(_.flush())
     } finally ch.close()
   }
 
@@ -120,8 +137,8 @@ object SonataH5 {
     * dictionary-encoded into integer codes plus an `@library/<col>`
     * values dataset (sonata_writer.cpp:102-111); [[SkipColumns]] are
     * dropped. `population` names the `/edges/<population>/` group.
-    * Returns the ordered, enum-coded edge frame (still persisted;
-    * unpersisted via the returned thunk).
+    * Returns the ordered, enum-coded edge frame and a no-op release
+    * thunk (nothing is cached).
     */
   def convert(spark: SparkSession, edges: DataFrame,
               sourceCol: String, targetCol: String,
@@ -132,11 +149,8 @@ object SonataH5 {
       : (DataFrame, () => Unit) = {
     require(!enumCols.contains(sourceCol) && !enumCols.contains(targetCol),
       "node-id columns cannot be dictionary-encoded")
-    val pruned = edges.drop(SkipColumns: _*)
-    val (ordered0, stampedE) = Offsets.globalPositionStamped(
-      pruned, (Seq(sourceCol, targetCol) ++ tiebreak).map(col), "edge_id")
-    val ordered = ordered0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ordered = Offsets.globalPosition(edges.drop(SkipColumns: _*),
+      (Seq(sourceCol, targetCol) ++ tiebreak).map(col), "edge_id")
     val (encoded, libraries) = enumCols.foldLeft(
       (ordered, Seq.empty[(String, Seq[String])])) { case ((df, acc), c) =>
         val (coded, lib) = graft.ops.EnumLibrary.encode(df, c, c)
@@ -144,85 +158,68 @@ object SonataH5 {
         val values = lib.orderBy("code").collect().map(_.getString(1)).toSeq
         (coded, acc :+ (c, values))
     }
-    // edge count + node bounds in ONE action (also materializes the cache)
-    val obs = org.apache.spark.sql.Observation()
-    val nRecords = encoded.observe(obs,
-      max(col(sourceCol)).cast("long").as("ms"),
-      max(col(targetCol)).cast("long").as("mt"),
-      min(least(col(sourceCol), col(targetCol))).cast("long").as("mn")).count()
-    stampedE.unpersist()
-    def nodeCountOf(metric: String): Long =
-      Option(obs.get(metric)).map(_.asInstanceOf[Long] + 1).getOrElse(0L)
-    // a negative node id would flow straight into writeIndexDir's row
-    // offsets — Hdf5Mini.fill now rejects those too, but fail here with
-    // the semantic error, not the byte-level one
-    Option(obs.get("mn")).map(_.asInstanceOf[Long]).foreach { mn =>
-      require(mn >= 0, s"sonata-h5: negative node id $mn (SONATA ids are unsigned)")
-    }
-    val sourceNodes = nodeCountOf("ms")
-    val targetNodes = nodeCountOf("mt")
 
-    // both directions' CSR ranges, RLE'd + globally numbered in one
+    // both directions' CSR ranges, RLE'd + numbered per direction in one
     // range shuffle: each edge explodes into a (dir, node, pos) pair per
     // direction (src/index/index.cpp:114-153/272-280). The source
     // direction's runs are maximal because the edges are source-sorted.
-    val (numbered0, doneR) = graft.ops.RangeRle.numberedRanges(
+    // Its boundary summaries carry every size the metadata needs.
+    val numbered = RangeRle.numbered(
       ordered.select(
         explode(array(
           struct(lit(0).as("dir"), col(sourceCol).cast("long").as("node_id")),
           struct(lit(1).as("dir"), col(targetCol).cast("long").as("node_id")))).as("k"),
         col("edge_id").as("pos"))
         .select(col("k.dir").as("dir"), col("k.node_id").as("node_id"), col("pos")))
-    val numbered = numbered0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // per-direction range counts (2-row collect) size the index datasets
-    // AND materialize the cache; RangeRle.numberedRanges numbers
-    // range_pos PER DIRECTION already (dir 1 rebases through bDir0 —
-    // RangeRle.scala:171), matching the reference's 0-indexed
-    // per-direction range_to_edge_id (index.cpp:302-303)
-    val dirCounts = numbered.groupBy(col("dir")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    doneR() // cache materialized by the collect; the internal one is dead
-    val rangeCount0 = dirCounts.getOrElse(0, 0L)
-    val rangeCount1 = dirCounts.getOrElse(1, 0L)
+    val Seq(sources, targets) = numbered.dirs
+    // a negative node id would become a negative primary-index offset —
+    // Hdf5Mini.fill rejects those too, but fail here with the semantic
+    // error, before any file exists
+    val minNode = math.min(sources.minNode, targets.minNode)
+    require(minNode >= 0, s"sonata-h5: negative node id $minNode (SONATA ids are unsigned)")
 
-    try {
-      // ------------------------------------------------ file layout (driver)
-      val dataCols = encoded.schema.fields.filter(_.name != "edge_id")
-      val popAttrs =
-        Seq("parquet2hdf5_version" -> "graft-0.12") ++
-          (if (sourcePopulation.nonEmpty) Seq("source_population_name" -> sourcePopulation) else Nil) ++
-          (if (targetPopulation.nonEmpty) Seq("target_population_name" -> targetPopulation) else Nil)
-      def colSpec(f: StructField): DatasetSpec = {
-        val attrs = f.name match {
-          case "source_node_id" if sourcePopulation.nonEmpty =>
-            Seq("node_population" -> sourcePopulation)
-          case "target_node_id" if targetPopulation.nonEmpty =>
-            Seq("node_population" -> targetPopulation)
-          case _ => Nil
-        }
-        DatasetSpec(f.name, h5TypeOf(f.dataType), Seq(nRecords), attrs)
+    // ------------------------------------------------ file layout (driver)
+    val dataCols = encoded.schema.fields.filter(_.name != "edge_id")
+    val popAttrs =
+      Seq("parquet2hdf5_version" -> "graft-0.12") ++
+        (if (sourcePopulation.nonEmpty) Seq("source_population_name" -> sourcePopulation) else Nil) ++
+        (if (targetPopulation.nonEmpty) Seq("target_population_name" -> targetPopulation) else Nil)
+    def colSpec(f: StructField): DatasetSpec = {
+      val attrs = f.name match {
+        case "source_node_id" if sourcePopulation.nonEmpty =>
+          Seq("node_population" -> sourcePopulation)
+        case "target_node_id" if targetPopulation.nonEmpty =>
+          Seq("node_population" -> targetPopulation)
+        case _ => Nil
       }
-      val (topFields, propFields) = dataCols.partition(f => TopLevel(f.name))
-      val libraryGroup =
-        if (libraries.isEmpty) Nil
-        else Seq(GroupSpec("@library", datasets = libraries.map { case (c, values) =>
-          val width = math.max(values.map(_.getBytes("UTF-8").length).maxOption.getOrElse(1), 1)
-          DatasetSpec(c, Hdf5Mini.FixedStr(width), Seq(values.length.toLong))
-        }))
-      def indexDir(name: String, nodes: Long, ranges: Long) = GroupSpec(name, datasets = Seq(
-        DatasetSpec("node_id_to_ranges", Hdf5Mini.U64, Seq(nodes, 2L)),
-        DatasetSpec("range_to_edge_id", Hdf5Mini.U64, Seq(ranges, 2L))))
-      val tree = GroupSpec("", groups = Seq(GroupSpec("edges", groups = Seq(
-        GroupSpec(population,
-          groups = Seq(
-            GroupSpec("0", datasets = propFields.map(colSpec).toSeq, groups = libraryGroup),
-            GroupSpec("indices", groups = Seq(
-              indexDir("source_to_target", sourceNodes, rangeCount0),
-              indexDir("target_to_source", targetNodes, rangeCount1)))),
-          datasets = topFields.map(colSpec).toSeq,
-          attrs = popAttrs)))))
-      val regions = Hdf5Mini.write(outFile, tree)
+      DatasetSpec(f.name, h5TypeOf(f.dataType), Seq(sources.rows), attrs)
+    }
+    val (topFields, propFields) = dataCols.partition(f => TopLevel(f.name))
+    val libraryGroup =
+      if (libraries.isEmpty) Nil
+      else Seq(GroupSpec("@library", datasets = libraries.map { case (c, values) =>
+        val width = math.max(values.map(_.getBytes("UTF-8").length).maxOption.getOrElse(1), 1)
+        DatasetSpec(c, Hdf5Mini.FixedStr(width), Seq(values.length.toLong))
+      }))
+    val dirNames = Seq("source_to_target", "target_to_source")
+    val indexDirs = dirNames.zip(numbered.dirs).map { case (name, d) =>
+      GroupSpec(name, datasets = Seq(
+        DatasetSpec("node_id_to_ranges", Hdf5Mini.U64, Seq(d.maxNode + 1, 2L)),
+        DatasetSpec("range_to_edge_id", Hdf5Mini.U64, Seq(d.ranges, 2L))))
+    }
+    val tree = GroupSpec("", groups = Seq(GroupSpec("edges", groups = Seq(
+      GroupSpec(population,
+        groups = Seq(
+          GroupSpec("0", datasets = propFields.map(colSpec).toSeq, groups = libraryGroup),
+          GroupSpec("indices", groups = indexDirs)),
+        datasets = topFields.map(colSpec).toSeq,
+        attrs = popAttrs)))))
+
+    val target = Paths.get(outFile).toAbsolutePath
+    val staging = target.resolveSibling(s"${target.getFileName}.inprogress-${UUID.randomUUID}")
+    val path = staging.toString
+    try {
+      val regions = Hdf5Mini.write(path, tree)
 
       // ------------------------------------------- edge columns (executors)
       val colPlan: Seq[(String, Hdf5Mini.H5Type, DataRegion)] = dataCols.toSeq.map { f =>
@@ -231,47 +228,34 @@ object SonataH5 {
       }
       val edgeCols = col("edge_id") +: dataCols.map(f => col(f.name)).toSeq
       encoded.select(edgeCols: _*).foreachPartition { (it: Iterator[Row]) =>
-        // one pass, all columns interleaved into per-column run buffers
-        writeStreamedRuns(outFile, colPlan.map(p => (p._3, 1)), it.map { r =>
-          (r.getLong(0), colPlan.zipWithIndex.map { case ((name, t, _), ci) =>
-            val bb = java.nio.ByteBuffer.allocate(t.size)
-              .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-            putValue(bb, t, r, ci + 1, name)
-            bb.array()
-          })
-        })
+        if (it.hasNext) withRuns(path, colPlan.map(_._3)) { runs =>
+          it.foreach { r =>
+            val edge = r.getLong(0)
+            for (ci <- runs.indices) {
+              putValue(runs(ci).value, colPlan(ci)._2, r, ci + 1, colPlan(ci)._1)
+              runs(ci).put(edge)
+            }
+          }
+        }
       }
 
       // ------------------------------------------------- indices (executors)
-      def u64Pair(a: Long, b: Long): Array[Byte] = {
-        val bb = java.nio.ByteBuffer.allocate(16).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        bb.putLong(a); bb.putLong(b)
-        bb.array()
-      }
-      def writeIndexDir(dirTag: Int, nodes: Long, dirName: String): Unit = {
-        val nd = numbered.filter(col("dir") === dirTag)
-        val secondary = regions(s"/edges/$population/indices/$dirName/range_to_edge_id")
-        nd.select(col("range_pos"), col("range_start"), col("range_end"))
-          .foreachPartition { (it: Iterator[Row]) =>
-            writeStreamedRuns(outFile, Seq((secondary, 2)), it.map(r =>
-              (r.getLong(0), Seq(u64Pair(r.getLong(1), r.getLong(2))))))
+      // per direction d: runs(2d) = range_to_edge_id, runs(2d + 1) =
+      // node_id_to_ranges, both [n][2] uint64 written word by word
+      val indexRegions = dirNames.flatMap(d => Seq("range_to_edge_id", "node_id_to_ranges")
+        .map(ds => regions(s"/edges/$population/indices/$d/$ds")))
+      numbered.ranges.foreachPartition { (it: Iterator[Row]) =>
+        if (it.hasNext) withRuns(path, indexRegions) { runs =>
+          it.foreach { r =>
+            val (dir, node, rangePos) = (r.getInt(0), r.getLong(1), r.getLong(4))
+            val (secondary, primary) = (runs(2 * dir), runs(2 * dir + 1))
+            secondary.putLong(2 * rangePos, r.getLong(2))
+            secondary.putLong(2 * rangePos + 1, r.getLong(3))
+            if (r.getBoolean(5)) primary.putLong(2 * node, rangePos)
+            if (r.getBoolean(6)) primary.putLong(2 * node + 1, rangePos + 1)
           }
-        val primary = regions(s"/edges/$population/indices/$dirName/node_id_to_ranges")
-        CsrIndex.primary(nd, nodes)
-          // the join's hash exchange scatters node ids; node_id is DENSE
-          // (spark.range), so a range repartition + sort restores fully
-          // contiguous per-partition runs — ONE pwrite per partition
-          // instead of one per node (the 10x probe surfaced exactly this
-          // once the counts side outgrew the broadcast threshold)
-          .repartitionByRange(col("node_id"))
-          .sortWithinPartitions(col("node_id"))
-          .foreachPartition { (it: Iterator[Row]) =>
-            writeStreamedRuns(outFile, Seq((primary, 2)), it.map(r =>
-              (r.getLong(0), Seq(u64Pair(r.getLong(1), r.getLong(2))))))
-          }
+        }
       }
-      writeIndexDir(0, sourceNodes, "source_to_target")
-      writeIndexDir(1, targetNodes, "target_to_source")
 
       // ------------------------------------------- @library values (driver)
       libraries.foreach { case (c, values) =>
@@ -282,11 +266,11 @@ object SonataH5 {
           val b = v.getBytes("UTF-8")
           System.arraycopy(b, 0, bytes, i * w, b.length)
         }
-        Hdf5Mini.fill(outFile, region, 0L, bytes)
+        Hdf5Mini.fill(path, region, 0L, bytes)
       }
-    } catch { case e: Throwable => ordered.unpersist(); throw e }
-    finally { doneR(); numbered.unpersist() }
-    (encoded, () => { ordered.unpersist(); () })
+      Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(staging)
+    (encoded, () => ())
   }
 
   /** Distributed read of a 2-D `[n][2]` uint64 dataset (the CSR index
@@ -338,11 +322,10 @@ object SonataH5 {
         col("l_linenumber").as("edge_type_id"),
         col("l_quantity").as("my_attribute"),
         col("l_returnflag").as("my_label"))
-      val (_, done) = convert(s, edges, "source_node_id", "target_node_id",
+      convert(s, edges, "source_node_id", "target_node_id",
         out, "lineitem_edges",
         tiebreak = Seq("edge_type_id", "my_attribute", "my_label"),
         enumCols = Seq("my_label"))
-      done()
       s.read.format("sonatah5").option("population", "lineitem_edges").load(out)
         .select(col("source_node_id"), col("target_node_id"),
           col("edge_type_id").cast("int").as("edge_type_id"),
@@ -362,11 +345,10 @@ object SonataH5 {
         col("l_linenumber").as("edge_type_id"),
         col("l_quantity").as("my_attribute"),
         col("l_returnflag").as("my_label"))
-      val (_, done) = convert(s, edges, "source_node_id", "target_node_id",
+      convert(s, edges, "source_node_id", "target_node_id",
         out, "lineitem_edges",
         tiebreak = Seq("edge_type_id", "my_attribute", "my_label"),
         enumCols = Seq("my_label"))
-      done()
       val base = "/edges/lineitem_edges/indices"
       Seq(("source_to_target", 0), ("target_to_source", 1)).map { case (d, tag) =>
         readPairs(s, out, s"$base/$d/node_id_to_ranges")
@@ -398,11 +380,10 @@ object SonataH5 {
       val edges = base.select(
         Seq(col("source_node_id"), col("target_node_id"), col("edge_type_id"),
           col("q_cents"), col("my_label")) ++ props: _*)
-      val (_, done) = convert(s, edges, "source_node_id", "target_node_id",
+      convert(s, edges, "source_node_id", "target_node_id",
         out, "wide_edges",
         tiebreak = Seq("edge_type_id", "q_cents", "my_label"),
         enumCols = Seq("my_label"))
-      done()
       val cols = Seq(col("source_node_id"), col("target_node_id"),
         col("edge_type_id").cast("int").as("edge_type_id"),
         col("q_cents"), col("my_label")) ++
@@ -501,11 +482,10 @@ object SonataH5 {
         col("l_linenumber").as("edge_type_id"),
         col("l_quantity").as("my_attribute"),
         col("l_returnflag").as("my_label"))
-      val (_, done) = convert(s, edges, "source_node_id", "target_node_id",
+      convert(s, edges, "source_node_id", "target_node_id",
         out, "lineitem_edges",
         tiebreak = Seq("edge_type_id", "my_attribute", "my_label"),
         enumCols = Seq("my_label"))
-      done()
       out
     })
 

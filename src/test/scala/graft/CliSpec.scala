@@ -81,6 +81,26 @@ class CliSpec extends AnyFunSuite {
     assert(code == 0, s"h5check rejected the Touch2Sonata container:\n$log")
   }
 
+  test("Parquet2Sonata reads its edge count from the container, with no job after the convert") {
+    import graft.pipelines.SonataH5
+    val dir = graft.io.TempDirs.create("p2s_count")
+    val parquet = s"$dir/parquet"
+    TouchToParquet.convert(spark, TouchToParquet.fixturePath(2), parquet)
+    val (n, viaRun) = SparkJobs.counted(spark) {
+      graft.cli.Parquet2Sonata.run(spark, parquet, s"$dir/run.h5", "touches")
+    }
+    assert(n == 1104, s"v2 fixture has 1104 touches, got $n")
+    // the same read and convert without the CLI: run adds no job of its own
+    val (_, direct) = SparkJobs.counted(spark) {
+      val edges = graft.io.SchemaSidecar.readParquetDir(spark, parquet)
+      val tiebreak = edges.columns.filterNot(
+        (Seq("source_node_id", "target_node_id") ++ SonataH5.SkipColumns).contains).toSeq
+      SonataH5.convert(spark, edges, "source_node_id", "target_node_id",
+        s"$dir/direct.h5", "touches", tiebreak)
+    }
+    assert(viaRun == direct, s"Parquet2Sonata.run ran $viaRun jobs, the convert alone $direct")
+  }
+
   test("Touch2Parquet prints the row count observed while writing") {
     val out = graft.io.TempDirs.create("cli_t2p")
     assert(Touch2Parquet.run(spark, Seq(TouchToParquet.fixturePath(3)), out) ==

@@ -90,10 +90,11 @@ class PlanSweepSpec extends AnyFunSuite {
       case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition =>
         unwrap(e.child) match {
           case a: BaseAggregateExec if a.groupingExpressions.isEmpty => None
-          // the two-phase prefix-scan witness (Offsets.globalPosition):
-          // an aggregate grouped by the `_pid` partition id is
-          // ≤ #partitions(+groups) rows by construction — the repo-wide
-          // partition-summary naming contract
+          // the two-phase prefix-scan witness (Offsets' grouped and
+          // weighted variants; plain globalPosition gathers its counts
+          // outside the plan): an aggregate grouped by the `_pid`
+          // partition id is ≤ #partitions(+groups) rows by construction —
+          // the repo-wide partition-summary naming contract
           case a: BaseAggregateExec
             if a.groupingExpressions.exists(_.references.exists(_.name == "_pid")) => None
           // a limit's partial→final collect: LocalLimit(n≤1000) feeds
@@ -265,7 +266,7 @@ object PlanSweepSpec {
         (X, "dictionary build windows over the enum value alphabet"),
       "exclusive_prefix_sum" ->
         (X, "the operator's contract: the scan input is a per-key COUNT table " +
-          "(group-alphabet-sized); data-sized callers go through globalPosition's _pid route"),
+          "(group-alphabet-sized); data-sized callers go through globalPosition"),
       "survival_kaplan_meier" ->
         (X, "product-limit window runs over the distinct event-time grid"),
       "survival_logrank" ->

@@ -93,6 +93,54 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("globalPosition equals ROW_NUMBER on empty input, empty shuffle partitions and with AQE off") {
+    import spark.implicits._
+    val confs = Seq(
+      Seq.empty[(String, String)],
+      // 13 range partitions for at most 9 distinct keys, none coalesced away
+      Seq("spark.sql.shuffle.partitions" -> "13",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false"),
+      Seq("spark.sql.shuffle.partitions" -> "13", "spark.sql.adaptive.enabled" -> "false"))
+    for (conf <- confs; n <- Seq(0, 1, 40)) withConf(conf: _*) {
+      val rows = (0 until n).map(i => ((i * 7) % 9, i))
+      val got = Offsets.globalPosition(rows.toDF("a", "b").repartition(3), Seq(col("a"), col("b")))
+        .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getLong(2))).toMap
+      // ROW_NUMBER() OVER (ORDER BY a, b) - 1
+      val rowNumber = rows.sorted.zipWithIndex.map { case (k, i) => k -> i.toLong }.toMap
+      assert(got == rowNumber, s"conf $conf, $n rows")
+    }
+  }
+
+  test("a plain globalPosition call leaves no persisted RDD") {
+    import spark.implicits._
+    val before = SparkJobs.persisted(spark)
+    val df = (0 until 100).map(i => (i % 7, i)).toDF("a", "b")
+    assert(Offsets.globalPosition(df, Seq(col("a"), col("b"))).collect().length == 100)
+    assert(SparkJobs.persisted(spark) == before)
+  }
+
+  test("globalPositionStamped: unpersisting the second element keeps a cache on the first") {
+    import spark.implicits._
+    val df = (0 until 100).map(i => (i % 7, i)).toDF("a", "b")
+    val (positioned, stamped) = Offsets.globalPositionStamped(df, Seq(col("a"), col("b")), "edge_id")
+    val pinned = positioned.persist()
+    try {
+      assert(pinned.count() == 100)
+      stamped.unpersist()
+      assert(pinned.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    } finally pinned.unpersist()
+  }
+
   test("weighted prefix sum equals the serial scan for any partitioning; weight 1 equals position") {
     import spark.implicits._
     for (parts <- Seq(1, 5, 13)) {

@@ -59,10 +59,9 @@ class RangeRleSpec extends AnyFunSuite {
     val (withPos, frame) = Offsets.globalPositionStamped(
       base, Seq(col("node_id"), col("seq")))
     val pre = withPos.select(lit(0).as("dir"), col("node_id"), col("pos"))
-    val (ranges, done) = RangeRle.numberedRangesPresorted(pre)
-    val got = ranges.collect()
+    val got = RangeRle.numberedRangesPresorted(pre).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
-    done(); frame.unpersist()
+    frame.unpersist()
     // reference result from the general (self-shuffling) route
     val expect = fused(withPos.select(lit(0).as("dir"), col("node_id"), col("pos")))
     assert(got == expect)
