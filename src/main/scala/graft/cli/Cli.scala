@@ -36,7 +36,8 @@ private[cli] object Cli {
 object Touch2Parquet {
 
   /** The testable body (mains own the session): returns the line
-    * `main` prints, with the row count the sink observed while writing.
+    * `main` prints, with the row count the sink's tasks counted while
+    * writing.
     */
   def run(spark: SparkSession, inputs: Seq[String], outDir: String): String = {
     val n = graft.pipelines.TouchToParquet.convertMany(spark, inputs, outDir)

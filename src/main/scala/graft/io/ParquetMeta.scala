@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.{DataType, Metadata, MetadataBuilder, StructTy
   * (`touchdetector_version` / `touch2parquet_version`,
   * src/touches/parquet_writer.cpp:115-120).
   *
-  * Spark's parquet writer owns the footer (`PageParquetFormat` writes
-  * the same one), and its one file-level KV entry is the schema JSON
+  * Spark's parquet writer owns the footer (`PageParquet` writes the
+  * same one), and its one file-level KV entry is the schema JSON
   * (`org.apache.spark.sql.parquet.row.metadata`), which embeds
   * per-field `Metadata`. So the KV pairs ride
   * as a nested metadata map on the FIRST schema field under the
@@ -28,22 +28,24 @@ object ParquetMeta {
     * options through Spark's parquet writer.
     */
   def writeWithMeta(df: DataFrame, path: String, kv: Map[String, String],
-                    options: Map[String, String] = Map.empty): Unit =
-    stamped(df, kv).write.mode("overwrite").options(options).parquet(path)
+                    options: Map[String, String] = Map.empty): Unit = {
+    val first = stampedSchema(df.schema, kv).head
+    df.withMetadata(first.name, first.metadata).write.mode("overwrite").options(options).parquet(path)
+  }
 
-  /** `df` with the footer KV pairs merged into its first field's
+  /** `schema` with the footer KV pairs merged into its first field's
     * metadata, for any parquet sink that writes Spark's schema entry.
     */
-  def stamped(df: DataFrame, kv: Map[String, String]): DataFrame = {
-    require(df.columns.nonEmpty, "cannot stamp metadata on a zero-column frame")
+  def stampedSchema(schema: StructType, kv: Map[String, String]): StructType = {
+    require(schema.nonEmpty, "cannot stamp metadata on a zero-column schema")
     val inner = kv.foldLeft(new MetadataBuilder()) {
       case (b, (k, v)) => b.putString(k, v)
     }.build()
     val merged = new MetadataBuilder()
-      .withMetadata(df.schema.head.metadata)
+      .withMetadata(schema.head.metadata)
       .putMetadata(MetaKey, inner)
       .build()
-    df.withMetadata(df.columns.head, merged)
+    StructType(schema.head.copy(metadata = merged) +: schema.tail)
   }
 
   /** Spark's footer key holding the row schema as JSON. */

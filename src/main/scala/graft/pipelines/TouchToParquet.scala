@@ -3,21 +3,23 @@ package graft.pipelines
 import java.util.UUID
 
 import graft.Q
-import graft.io.{PageParquetFormat, ParquetMeta, TouchBinary}
+import graft.io.{PageParquet, ParquetMeta, TouchBinary}
 import graft.sources.TouchDataSource
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
 
 /** Pipeline A end-to-end (S1 → W1 → P1-P4 → S4): TouchDetector binary →
   * columnar Parquet (reference: src/touch2parquet.cpp:34-138).
   *
-  * The whole pipeline is ONE narrow stage: binary record scan → columnar
-  * decode (rename/flatten/unpack/validate fused into the fill loops) →
-  * rows → the column-at-a-time page writer `io.PageParquetFormat`,
-  * which transposes them into per-column 20,000-row pages and encodes
-  * each column's page in one pass, as the reference's writer does
-  * (src/touches/parquet_writer.cpp:189-296); file-per-task parallel
+  * The whole pipeline is ONE narrow stage with no row in it: binary
+  * record scan → columnar decode (rename/flatten/unpack/validate fused
+  * into the fill loops) → the scan's column batches straight into the
+  * column-at-a-time page writer `io.PageParquet`, which copies each
+  * batch column into its 20,000-row page buffer and encodes each
+  * column's page in one pass, as the reference's writer does
+  * (src/touches/parquet_writer.cpp:166-296). The job commits through
+  * the session's `FileCommitProtocol` directly; file-per-task parallel
   * write replaces the reference's one-file-per-MPI-rank. The writer has
   * the reference writer's physical knobs as constants: SNAPPY,
   * dictionary encoding off, ~20 MB row groups
@@ -62,7 +64,11 @@ object TouchToParquet {
     *    mixed record versions cannot share a sink);
     *  - gid-range disjointness (synapse ids are `(gid << 24) + ordinal`,
     *    so overlapping gid ranges across files would collide);
-    *  - every data file's length is a whole number of records.
+    *  - every data file's length is a whole number of records;
+    *  - no gid's block starts past the end of its data file (its
+    *    records would get negative ordinals: another gid's synapse
+    *    ids); only starts are checked, as the reference's v1 fixture
+    *    claims more records than its file holds.
     * Version STRING agreement is not required (git-hash builds of one
     * record version differ), so the first file's string is stamped.
     */
@@ -75,45 +81,69 @@ object TouchToParquet {
   private def load(spark: SparkSession, inputs: Seq[String]): (DataFrame, TouchBinary.TouchIndex) = {
     val indexed = TouchDataSource.indexedDataFiles(inputs: _*)
     TouchDataSource.requireDisjointGidRanges(indexed)
-    indexed.foreach(_.numRecords)
+    indexed.foreach { f =>
+      f.numRecords
+      val (idx, rec) = (f.index, f.index.version.recordSize)
+      idx.counts.indices.find(p => idx.counts(p) > 0 && idx.shifts(p) * rec > f.length).foreach { p =>
+        throw new IllegalArgumentException(s"${TouchBinary.indexFileFor(f.path)}: gid ${idx.firstGid + p} " +
+          s"starts at byte ${idx.shifts(p) * rec}, past the end of ${f.path} (length ${f.length})")
+      }
+    }
     (inputs.map(p => spark.read.format("touchbin").load(p)).reduce(_ unionByName _),
       indexed.head.index)
   }
 
-  /** The sink: decoded touches → parquet through the column-at-a-time
-    * page writer (`io.PageParquetFormat`: the reference writer's knobs)
-    * with the footer provenance KVs (src/touches/parquet_writer.cpp:
-    * 115-120); `index` supplies the TouchDetector version string.
-    * Returns the rows written, counted by an `Observation` on the
-    * written frame rather than by reading the sink back.
+  /** The sink: the decoded touches' column batches → parquet through the
+    * column-at-a-time page writer (`io.PageParquet`: the reference
+    * writer's knobs) with the footer provenance KVs
+    * (src/touches/parquet_writer.cpp:115-120) in the schema entry it
+    * stamps; `index` supplies the TouchDetector version string. The
+    * frame is planned once, and the columnar child of its top
+    * `ColumnarToRow` (the `touchbin` scan, or a union of them) runs as
+    * one job in one SQL execution. Returns the rows written, summed
+    * from the tasks. A frame whose plan has no such child, or with a
+    * field the writer does not take, is refused on the driver before
+    * any job runs or any path is made.
     *
     * The job writes to a sibling staging directory
     * (`<outDir>.inprogress-<uuid>`) that replaces `outDir` only once
     * it has succeeded, so a failed convert (a decode guard tripping in
     * a task) leaves no output and an earlier `outDir` untouched.
     */
-  def write(touches: DataFrame, index: TouchBinary.TouchIndex, outDir: String): Long = {
+  def write(touches: DataFrame, index: TouchBinary.TouchIndex, outDir: String): Long =
+    write(touches, index, outDir, PageParquet.RowGroupBytes)
+
+  private[graft] def write(touches: DataFrame, index: TouchBinary.TouchIndex, outDir: String,
+                           rowGroupBytes: Long): Long = {
+    PageParquet.requireWritable(touches.schema)
+    val plan = touches.queryExecution.executedPlan
+    val batches = columnarChild(plan).getOrElse(throw new IllegalArgumentException(
+      s"touch2parquet writes column batches, and this frame's plan has no columnar child " +
+        s"under a ColumnarToRow:\n${plan.treeString}"))
+    val schema = ParquetMeta.stampedSchema(touches.schema, Map(
+      "touchdetector_version" -> index.versionString,
+      "touch2parquet_version" -> graft.BuildInfo.version))
     val spark = touches.sparkSession
     val out = new Path(outDir)
     val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
     val target = fs.makeQualified(out)
     val staging = new Path(target.getParent, s"${target.getName}.inprogress-${UUID.randomUUID}")
     try {
-      val rows = Observation()
-      // stamped below the observation, so the stamp's projection joins
-      // the decode's code-generated stage instead of making a stage of
-      // its own above it
-      ParquetMeta.stamped(touches, Map(
-          "touchdetector_version" -> index.versionString,
-          "touch2parquet_version" -> graft.BuildInfo.version))
-        .observe(rows, count(lit(1)).as("rows"))
-        .write.format(classOf[PageParquetFormat].getName).save(staging.toString)
-      val n = rows.get("rows").asInstanceOf[Long]
+      val n = GraftSqlShim.withExecution(touches, batches) {
+        PageParquet.write(spark, batches.executeColumnar(), schema, staging.toString, rowGroupBytes)
+      }
       fs.delete(target, true)
       if (!fs.rename(staging, target))
         throw new java.io.IOException(s"cannot move $staging to $target")
       n
     } finally fs.delete(staging, true)
+  }
+
+  private def columnarChild(plan: SparkPlan): Option[SparkPlan] = plan match {
+    case WholeStageCodegenExec(p) => columnarChild(p)
+    case ColumnarToRowExec(InputAdapter(p)) => Some(p)
+    case ColumnarToRowExec(p) => Some(p)
+    case _ => None
   }
 
   /** Rows-only queries (binary input is outside the SQL oracle's reach —

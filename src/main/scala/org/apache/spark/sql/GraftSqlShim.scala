@@ -18,6 +18,17 @@ object GraftSqlShim {
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
       .registerFunction(name, info, builder)
 
+  /** Runs `body` as one SQL execution of `df` whose plan is `plan`, the
+    * part of `df`'s executed plan that `body` runs.
+    */
+  def withExecution[T](df: DataFrame, plan: execution.SparkPlan)(body: => T): T = {
+    val qe = new execution.QueryExecution(df.sparkSession.asInstanceOf[classic.SparkSession],
+        df.queryExecution.logical) {
+      override def executedPlan: execution.SparkPlan = plan
+    }
+    execution.SQLExecution.withNewExecutionId(qe)(body)
+  }
+
   /** Release the block-manager storage behind a `localCheckpoint`ed
     * Dataset. `Dataset.unpersist` is a no-op for it — that only clears
     * CacheManager entries, and a local checkpoint's RDD persists itself

@@ -214,6 +214,20 @@ class TouchBinarySpec extends AnyFunSuite {
     assert(ToolCheck.run("touchcheck.py", trunc)._2.contains("byte 40"))
   }
 
+  test("an index entry that starts past the end of its data file is refused before any output") {
+    // gid 6's two records are the file's last two, but its entry puts
+    // them at record 10 of a 5-record file: their ordinals would go
+    // negative, into gid 5's synapse ids
+    val data = TouchPairs.writeV3(ByteOrder.LITTLE_ENDIAN, Seq(5 -> 3, 6 -> 2), Seq((5, 3, 0L), (6, 2, 10L)))
+    val out = Files.createTempDirectory("t2p_eof").resolve("out")
+    val e = intercept[IllegalArgumentException](TouchToParquet.convert(spark, data, out.toString))
+    for (part <- Seq(TouchBinary.indexFileFor(data), "gid 6", "byte 1040", data, "length 520"))
+      assert(e.getMessage.contains(part), e.getMessage)
+    val left = Files.list(out.getParent)
+    try assert(left.count() == 0, s"$out or its staging directory exists after the refusal")
+    finally left.close()
+  }
+
   test("a convert that fails in its tasks leaves no output and keeps an earlier one") {
     // the crafted pairs of the guard test: pre_section 0x8000 at byte
     // 84, a 2^24 ordinal at byte 80; both trip inside the write job

@@ -5,22 +5,21 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import graft.io.{PageParquetFormat, ParquetMeta, TouchBinary}
+import graft.io.{ParquetMeta, TouchBinary}
 import graft.pipelines.TouchToParquet
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Page writer with 1 MB row groups, so a 45,000-record pair spans
-  * several of them.
-  */
-class SmallGroupPageParquet extends PageParquetFormat(1L << 20)
-
-/** The touch sink (`io.PageParquetFormat` behind
-  * `TouchToParquet.write`) against Spark's own parquet writer with the
+/** The touch sink (`TouchToParquet.write`, whose page writer is
+  * `io.PageParquet`) against Spark's own parquet writer with the
   * reference's knobs, on the same frame: equal rows through both Spark
   * readers and through the independent `tools/parquetcheck.py`, and
   * equal footers.
@@ -113,6 +112,8 @@ class TouchParquetSpec extends AnyFunSuite {
       assert(fa.getFileMetaData.getKeyValueMetaData == fb.getFileMetaData.getKeyValueMetaData)
       assert(ia == ib, "column and offset index presence")
       assert(ia.forall(_._2))
+      // the footer too, whose KV pairs parquet-mr writes in its map's order
+      assert(java.util.Arrays.equals(Files.readAllBytes(a), Files.readAllBytes(b)), s"$a and $b differ")
     }
     footer
   }
@@ -171,12 +172,22 @@ class TouchParquetSpec extends AnyFunSuite {
     assert(lines(footer, "chunk").forall(l => pageRows(l) == Seq(20000, 20000, 5000)), footer.mkString("\n"))
   }
 
+  test("several splits per file: each part file is the one Spark's writer writes") {
+    // 24,038 records per split: both parts straddle a page boundary
+    // and end inside a 4,096-record batch
+    val frame = spark.read.format("touchbin").option("maxBytesPerPartition", "2500000").load(edgePair)
+    assert(frame.rdd.getNumPartitions == 2)
+    val footer = assertSameAsSpark(frame, edgePair)
+    assert(lines(footer, "file") == Seq("file 0 rows 24038 row_groups 1", "file 1 rows 20962 row_groups 1"))
+    assert(lines(footer, "chunk").filter(_.startsWith("chunk 0.")).forall(pageRows(_) == Seq(20000, 4038)))
+    assert(lines(footer, "chunk").filter(_.startsWith("chunk 1.")).forall(pageRows(_) == Seq(20000, 962)))
+  }
+
   test("row groups end on page boundaries; rows and stats survive the split") {
     val frame = spark.read.format("touchbin").load(edgePair)
     val groups = out("t2p_groups")
     val theirs = out("t2p_groups_spark")
-    ParquetMeta.stamped(frame, kv(edgePair))
-      .write.format(classOf[SmallGroupPageParquet].getName).save(groups)
+    assert(TouchToParquet.write(frame, index(edgePair), groups, rowGroupBytes = 1L << 20) == 45000)
     sparkWrite(frame, edgePair, theirs)
     val (rows, footer) = check(groups)
     val (sparkRows, sparkFooter) = check(theirs)
@@ -190,24 +201,23 @@ class TouchParquetSpec extends AnyFunSuite {
     assert(lines(footer, "stats") == lines(sparkFooter, "stats"))
   }
 
+  // a frame whose plan has no column batches is refused the same way
   test("a nullable or string field fails on the driver before any output path exists") {
     val sc = spark.sparkContext
     val frames = Seq(
-      "maybe" -> spark.range(3).select(when(col("id") > 1, col("id").cast("int")).as("maybe")),
-      "name" -> spark.range(3).select(col("id"), col("id").cast("string").as("name")))
-    for ((field, df) <- frames) {
-      assert(df.schema(field).nullable == (field == "maybe"))
+      "field `maybe`" -> spark.range(3).select(when(col("id") > 1, col("id").cast("int")).as("maybe")),
+      "field `name`" -> spark.range(3).select(col("id"), col("id").cast("string").as("name")),
+      "no columnar child" -> spark.range(3).toDF("id"))
+    assert(frames(0)._2.schema("maybe").nullable && !frames(1)._2.schema("name").nullable)
+    for ((named, df) <- frames) {
       val dir = out("t2p_refuse")
       sc.setJobGroup("page_refuse", "refuse")
       val e = try intercept[IllegalArgumentException](
-          df.write.format(classOf[PageParquetFormat].getName).save(dir))
+          TouchToParquet.write(df, index(TouchToParquet.fixturePath(3)), dir))
         finally sc.clearJobGroup()
-      assert(e.getMessage.contains(s"field `$field`"), e.getMessage)
-      assert(!Files.exists(Paths.get(dir)), s"$dir exists after the refusal")
-      val staged = out("t2p_refuse_staged")
-      intercept[IllegalArgumentException](TouchToParquet.write(df, index(TouchToParquet.fixturePath(3)), staged))
-      val siblings = Files.list(Paths.get(staged).getParent)
-      try assert(siblings.count() == 0, "the staging directory was left behind")
+      assert(e.getMessage.contains(named), e.getMessage)
+      val siblings = Files.list(Paths.get(dir).getParent)
+      try assert(siblings.count() == 0, s"$dir or its staging directory exists after the refusal")
       finally siblings.close()
     }
     // a later job seen by the status tracker means every earlier one is too
@@ -217,5 +227,55 @@ class TouchParquetSpec extends AnyFunSuite {
     while (sc.statusTracker.getJobIdsForGroup("page_refuse_marker").isEmpty && System.nanoTime() < deadline)
       Thread.sleep(20)
     assert(sc.statusTracker.getJobIdsForGroup("page_refuse").isEmpty, "the refusal ran a job")
+  }
+
+  /** `body`'s result and, for each job it started, the names of the
+    * nodes in the plan of that job's SQL execution.
+    */
+  private def jobPlans[T](body: => T): (T, Seq[Seq[String]]) = {
+    val sc = spark.sparkContext
+    val plans = new java.util.concurrent.ConcurrentHashMap[Long, Seq[String]]
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[Long]]
+    def names(p: SparkPlanInfo): Seq[String] = p.nodeName +: p.children.flatMap(names)
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.put(s.executionId, names(s.sparkPlanInfo))
+        case _ => ()
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong))
+    }
+    ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      ListenerDrain(sc)
+      (r, jobs.asScala.toSeq.map(_.flatMap(id => Option(plans.get(id))).getOrElse(Nil)))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("convert and convertMany sink the scan's batches in one job with no ColumnarToRow") {
+    import TouchPairs.{entriesOf, writeV3}
+    val little = Seq(3 -> 5000, 4 -> 7000)
+    val big = Seq(9 -> 6000)
+    val le = writeV3(ByteOrder.LITTLE_ENDIAN, little, entriesOf(little))
+    val be = writeV3(ByteOrder.BIG_ENDIAN, big, entriesOf(big))
+
+    val one = out("t2p_one")
+    val (read, onePlans) = jobPlans(TouchToParquet.convert(spark, le, one))
+    assert(onePlans.size == 1, s"jobs: $onePlans")
+    assert(onePlans.head.exists(_.startsWith("BatchScan")), onePlans.head)
+    assert(!onePlans.head.exists(_.contains("ColumnarToRow")), onePlans.head)
+    assert(check(one)._1.size == 12000)
+    assert(read.count() == 12000)
+
+    val many = out("t2p_many")
+    val (n, manyPlans) = jobPlans(TouchToParquet.convertMany(spark, Seq(le, be), many))
+    assert(manyPlans.size == 1, s"jobs: $manyPlans")
+    assert(manyPlans.head.count(_.startsWith("BatchScan")) == 2 && manyPlans.head.contains("Union"),
+      manyPlans.head)
+    assert(!manyPlans.head.exists(_.contains("ColumnarToRow")), manyPlans.head)
+    assert(n == 18000)
+    assert(check(many)._1.size == n)
   }
 }
