@@ -569,16 +569,20 @@ object Hdf5Mini {
     * within the subset above). Strict: unknown structure → error, never a
     * guess.
     */
-  def read(path: String): ReadFile =
-    parse(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-      materializeChunked = true)
+  def read(path: String): ReadFile = {
+    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
+    try parse(bytes, materializeChunked = true)
+    catch { case f: MetaFault => throw f.in(path, bytes.length) }
+  }
 
   /** Metadata-only parse: reads just the file's metadata prefix (this
     * writer lays out every header before the first data byte), so the
     * driver can plan a DISTRIBUTED read without loading the data — the
     * [[ReadFile]] returned here must not be used for data access
     * (`longs`/`doubles`/`strings`); executors read the regions
-    * themselves via [[readSlice]].
+    * themselves via [[readSlice]]. A container that is cut short or
+    * corrupt fails naming its path and the byte where the structure
+    * that could not be parsed starts.
     */
   def readMeta(path: String): ReadFile = {
     val fileLen = java.nio.file.Files.size(java.nio.file.Paths.get(path))
@@ -597,11 +601,10 @@ object Hdf5Mini {
       // their data may lie anywhere in the file, far past the prefix
       try return parse(buf, materializeChunked = false)
       catch {
-        // a header straddling the prefix boundary surfaces as a range
-        // error (position past limit is IllegalArgument in ByteBuffer)
-        case _: IndexOutOfBoundsException | _: java.nio.BufferUnderflowException |
-            _: IllegalArgumentException if prefix < fileLen =>
+        // a header straddling the prefix boundary reads past its end
+        case f: MetaFault if f.pastEnd && prefix < fileLen =>
           prefix = math.min(fileLen, prefix.toLong * 4).toInt
+        case f: MetaFault => throw f.in(path, fileLen)
       }
     }
     sys.error("unreachable")
@@ -728,15 +731,57 @@ object Hdf5Mini {
     c
   }
 
+  /** A metadata parse that failed in the structure starting at byte
+    * `at`; `pastEnd` when it read past the end of the parsed bytes.
+    */
+  private final class MetaFault(val at: Long, cause: RuntimeException) extends RuntimeException(cause) {
+    def pastEnd: Boolean = cause match {
+      case _: IndexOutOfBoundsException | _: java.nio.BufferUnderflowException => true
+      case _ => false
+    }
+
+    /** The fault as the error of the `length`-byte file `path`. */
+    def in(path: String, length: Long): IllegalArgumentException = new IllegalArgumentException(
+      if (pastEnd) s"hdf5: $path: truncated or corrupt metadata: the structure at byte $at " +
+        s"reads past the end of the file ($length bytes)"
+      else s"hdf5: $path: byte $at: " +
+        String.valueOf(cause.getMessage).stripPrefix("requirement failed: ").stripPrefix("hdf5: "),
+      cause)
+  }
+
+  /** Moves `b` to `pos`; a position past its end is a read past it. */
+  private def seek(b: ByteBuffer, pos: Long): Unit =
+    if (pos < 0 || pos > b.limit()) throw new java.nio.BufferUnderflowException
+    else b.position(pos.toInt)
+
+  /** Any fault of the parse is a [[MetaFault]] at the start of the
+    * structure being read.
+    */
   private def parse(bytes: Array[Byte], materializeChunked: Boolean): ReadFile = {
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    var at = 0L
+    def guarded[T](body: => T): T =
+      try body catch { case e: RuntimeException => throw new MetaFault(at, e) }
+    /** `read` of the structure at byte `addr`, from a view at `addr`.
+      * A fault leaves `at` at the innermost structure, the one named.
+      */
+    def within[T](addr: Long)(read: ByteBuffer => T): T = {
+      val outer = at
+      at = addr
+      val b = bb.duplicate().order(ByteOrder.LITTLE_ENDIAN)
+      seek(b, addr)
+      val r = read(b)
+      at = outer
+      r
+    }
+
     val sig = Array[Byte](0x89.toByte, 'H', 'D', 'F', '\r', '\n', 0x1A, '\n')
-    require((0 until 8).forall(i => bytes(i) == sig(i)), "hdf5: bad signature")
+    guarded(require((0 until 8).forall(i => bytes(i) == sig(i)), "hdf5: bad signature"))
     // superblock v0 (the classic form this codec writes) or v2/v3 (what
     // libhdf5 emits under H5F_LIBVER_LATEST — spec II.A.2: a fixed
     // 48-byte block ending in a lookup3 checksum, root OH address
     // direct instead of a cached symbol-table entry)
-    val rootOh = (bytes(8): Int) match {
+    val rootOh = guarded((bytes(8): Int) match {
       case 0 =>
         require(bytes(13) == 8 && bytes(14) == 8, "hdf5: offsets/lengths must be 8 bytes")
         bb.getLong(64)   // root STE: name offset at 56, OH address at 64
@@ -748,7 +793,7 @@ object Hdf5Mini {
           f"hdf5: superblock v${bytes(8)} checksum mismatch (stored 0x$stored%08x, computed 0x$computed%08x)")
         bb.getLong(36)
       case v => sys.error(s"hdf5: superblock version $v (only 0, 2, 3)")
-    }
+    })
 
     val datasets = scala.collection.mutable.LinkedHashMap.empty[String, ReadDataset]
     val groupAttrs = scala.collection.mutable.LinkedHashMap.empty[String, Map[String, String]]
@@ -760,9 +805,7 @@ object Hdf5Mini {
       * (4), then `dim` 8-byte offsets (the trailing one always 0).
       */
     def walkChunkBtree(addr: Long, dim: Int)(
-        visit: (Long, Int, Int, Long) => Unit): Unit = {
-      val t = bb.duplicate().order(ByteOrder.LITTLE_ENDIAN)
-      t.position(addr.toInt)
+        visit: (Long, Int, Int, Long) => Unit): Unit = within(addr) { t =>
       val ts = new Array[Byte](4); t.get(ts)
       require(new String(ts, StandardCharsets.US_ASCII) == "TREE", "hdf5: bad chunk btree")
       require(t.get() == 1, "hdf5: not a chunk btree")
@@ -788,10 +831,10 @@ object Hdf5Mini {
       val dsSize = b.getShort() & 0xFFFF
       val nameBytes = new Array[Byte](nameSize); b.get(nameBytes)
       val name = new String(nameBytes, 0, nameSize - 1, StandardCharsets.US_ASCII)
-      b.position(start + 8 + pad8(nameSize))
+      seek(b, start + 8 + pad8(nameSize))
       val dt = parseDatatype(b)
-      b.position(start + 8 + pad8(nameSize) + pad8(dtSize))
-      b.position(b.position() + pad8(dsSize))   // scalar dataspace, skip
+      seek(b, start + 8 + pad8(nameSize) + pad8(dtSize))
+      seek(b, b.position() + pad8(dsSize))   // scalar dataspace, skip
       val w = dt match {
         case FixedStr(n) => n
         case t => sys.error(s"hdf5: attribute $name has type $t (only strings)")
@@ -801,9 +844,7 @@ object Hdf5Mini {
       name -> new String(v, 0, if (end < 0) w else end, StandardCharsets.US_ASCII)
     }
 
-    def readObject(ohAddr: Long, path: String): Unit = {
-      val b = bb.duplicate().order(ByteOrder.LITTLE_ENDIAN)
-      b.position(ohAddr.toInt)
+    def readObject(ohAddr: Long, path: String): Unit = within(ohAddr) { b =>
       var stab: Option[(Long, Long)] = None
       var dims: Option[Seq[Long]] = None
       var dtype: Option[H5Type] = None
@@ -888,7 +929,7 @@ object Hdf5Mini {
         // spec IV.A.2 version-2 header: OHDR, version, flags, optional
         // times/sizing, variable-width chunk-0 size, unaligned messages,
         // lookup3 gateway checksum — VERIFIED (fail loud on corruption)
-        b.position(ohAddr.toInt + 4)
+        seek(b, ohAddr + 4)
         require(b.get() == 2, s"hdf5: OHDR at $ohAddr is not version 2")
         val f = b.get() & 0xFF
         if ((f & 0x20) != 0) { b.getInt(); b.getInt(); b.getInt(); b.getInt() }
@@ -911,7 +952,7 @@ object Hdf5Mini {
           if ((f & 0x04) != 0) b.getShort()       // creation order
           val mStart = b.position()
           handleMessage(t)
-          b.position(mStart + size)
+          seek(b, mStart + size)
         }
       } else {
         require(b.get() == 1, s"hdf5: object header at $ohAddr is not version 1")
@@ -924,28 +965,26 @@ object Hdf5Mini {
           b.get(); b.get(); b.get(); b.get()
           val bodyStart = b.position()
           handleMessage(t)
-          b.position(bodyStart + size)
+          seek(b, bodyStart + size)
         }
       }
       stab match {
         case Some((btreeAddr, heapAddr)) =>
           groupAttrs(if (path.isEmpty) "/" else path) = attrs.toMap
           // heap header → data address
-          val h = bb.duplicate().order(ByteOrder.LITTLE_ENDIAN)
-          h.position(heapAddr.toInt)
-          val hs = new Array[Byte](4); h.get(hs)
-          require(new String(hs, StandardCharsets.US_ASCII) == "HEAP", "hdf5: bad heap")
-          h.getInt(); h.getLong(); h.getLong()
-          val heapData = h.getLong()
+          val heapData = within(heapAddr) { h =>
+            val hs = new Array[Byte](4); h.get(hs)
+            require(new String(hs, StandardCharsets.US_ASCII) == "HEAP", "hdf5: bad heap")
+            h.getInt(); h.getLong(); h.getLong()
+            h.getLong()
+          }
           def name(off: Long): String = {
             var end = (heapData + off).toInt
             while (bytes(end) != 0) end += 1
             new String(bytes, (heapData + off).toInt, end - (heapData + off).toInt,
               StandardCharsets.US_ASCII)
           }
-          def walkBtree(addr: Long): Unit = {
-            val t = bb.duplicate().order(ByteOrder.LITTLE_ENDIAN)
-            t.position(addr.toInt)
+          def walkBtree(addr: Long): Unit = within(addr) { t =>
             val ts = new Array[Byte](4); t.get(ts)
             require(new String(ts, StandardCharsets.US_ASCII) == "TREE", "hdf5: bad btree")
             require(t.get() == 0, "hdf5: not a group btree")
@@ -957,9 +996,7 @@ object Hdf5Mini {
               t.getLong()                          // key i
               val child = t.getLong()
               if (level > 0) walkBtree(child)
-              else {
-                val s = bb.duplicate().order(ByteOrder.LITTLE_ENDIAN)
-                s.position(child.toInt)
+              else within(child) { s =>
                 val ss = new Array[Byte](4); s.get(ss)
                 require(new String(ss, StandardCharsets.US_ASCII) == "SNOD", "hdf5: bad SNOD")
                 s.get(); s.get()
@@ -1026,7 +1063,7 @@ object Hdf5Mini {
           }
       }
     }
-    readObject(rootOh, "")
+    guarded(readObject(rootOh, ""))
     ReadFile(datasets.toMap, groupAttrs.toMap, bytes, chunkedAux.toMap)
   }
 }

@@ -4,10 +4,11 @@ import java.util.UUID
 
 import graft.Q
 import graft.io.{PageParquet, ParquetMeta, TouchBinary}
-import graft.sources.TouchDataSource
+import graft.sources.{DriverScan, TouchDataSource}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 
 /** Pipeline A end-to-end (S1 → W1 → P1-P4 → S4): TouchDetector binary →
   * columnar Parquet (reference: src/touch2parquet.cpp:34-138).
@@ -100,10 +101,12 @@ object TouchToParquet {
     * stamps; `index` supplies the TouchDetector version string. The
     * frame is planned once, and the columnar child of its top
     * `ColumnarToRow` (the `touchbin` scan, or a union of them) runs as
-    * one job in one SQL execution. Returns the rows written, summed
-    * from the tasks. A frame whose plan has no such child, or with a
-    * field the writer does not take, is refused on the driver before
-    * any job runs or any path is made.
+    * one job in one SQL execution; a gid read small enough to be read
+    * on the driver (`sources.DriverScan`) is planned as its batch scan
+    * here, so it too is written from its column batches. Returns the
+    * rows written, summed from the tasks. A frame whose plan has no
+    * such child, or with a field the writer does not take, is refused
+    * on the driver before any job runs or any path is made.
     *
     * The job writes to a sibling staging directory
     * (`<outDir>.inprogress-<uuid>`) that replaces `outDir` only once
@@ -116,7 +119,8 @@ object TouchToParquet {
   private[graft] def write(touches: DataFrame, index: TouchBinary.TouchIndex, outDir: String,
                            rowGroupBytes: Long): Long = {
     PageParquet.requireWritable(touches.schema)
-    val plan = touches.queryExecution.executedPlan
+    val frame = batchScanned(touches)
+    val plan = frame.queryExecution.executedPlan
     val batches = columnarChild(plan).getOrElse(throw new IllegalArgumentException(
       s"touch2parquet writes column batches, and this frame's plan has no columnar child " +
         s"under a ColumnarToRow:\n${plan.treeString}"))
@@ -129,7 +133,7 @@ object TouchToParquet {
     val target = fs.makeQualified(out)
     val staging = new Path(target.getParent, s"${target.getName}.inprogress-${UUID.randomUUID}")
     try {
-      val n = GraftSqlShim.withExecution(touches, batches) {
+      val n = GraftSqlShim.withExecution(frame, batches) {
         PageParquet.write(spark, batches.executeColumnar(), schema, staging.toString, rowGroupBytes)
       }
       fs.delete(target, true)
@@ -137,6 +141,20 @@ object TouchToParquet {
         throw new java.io.IOException(s"cannot move $staging to $target")
       n
     } finally fs.delete(staging, true)
+  }
+
+  /** `touches`, with each scan that would be read on the driver
+    * replaced by its batch scan.
+    */
+  private def batchScanned(touches: DataFrame): DataFrame = {
+    val optimized = touches.queryExecution.optimizedPlan
+    val batched = optimized.transform {
+      case r: DataSourceV2ScanRelation => r.scan match {
+        case d: DriverScan => r.copy(scan = d.batch)
+        case _ => r
+      }
+    }
+    if (batched eq optimized) touches else GraftSqlShim.ofRows(touches.sparkSession, batched)
   }
 
   private def columnarChild(plan: SparkPlan): Option[SparkPlan] = plan match {

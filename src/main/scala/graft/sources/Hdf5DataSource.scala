@@ -46,6 +46,16 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    (pruned) row count × the pruned row width, so a scan narrowed by
   *    an edge_id range or projection is costed at its true size and
   *    becomes broadcast-eligible.
+  *  - **Point reads on the driver**: an `edge_id` read whose planned
+  *    bytes (the statistics above) come to at most
+  *    [[DriverScan.MaxBytes]] (4 MiB; its scaladoc says how it was
+  *    sized) is a Spark `LocalScan`: the driver runs the tasks' reader
+  *    over the same planned splits, and Spark plans a `LocalTableScan`
+  *    whose collect starts no job. The read happens at physical
+  *    planning, so `explain()` or `executedPlan` of such a read reads
+  *    its data; `explain()` shows a `LocalTableScan`, and the pushed
+  *    ranges stay in the scan's description in the optimized plan.
+  *    Unfiltered scans, counts and larger reads stay jobs.
   *
   * Split planning carves the pruned row ranges into
   * `maxBytesPerPartition` chunks of the PRUNED row width; each
@@ -53,7 +63,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * ([[Hdf5Mini.readSlice]] — the MPI-IO independent-transfer read
   * model). Driver-side metadata is one [[Hdf5Mini.readMeta]] parse of
   * the few-KB header prefix per load: the provider hands the layout its
-  * [[inferSchema]] parsed to the table [[getTable]] builds.
+  * [[inferSchema]] parsed to the table [[getTable]] builds. A container
+  * cut short or with a corrupt header fails the load naming its path
+  * and the byte where the unreadable structure starts.
   */
 class Hdf5DataSource extends TableProvider with DataSourceRegister {
 
@@ -259,11 +271,15 @@ private[sources] class Hdf5ScanBuilder(path: String,
   override def pushLimit(l: Int): Boolean = { limit = Some(l); true }
   override def isPartiallyPushed(): Boolean = true
 
+  /** An `edge_id` read whose planned rows fit [[DriverScan.MaxBytes]]
+    * is read on the driver; other reads are Spark jobs.
+    */
   override def build(): Scan =
     if (countsPushed > 0) new Hdf5CountScan(path,
       Hdf5DataSource.rowRanges(layout.nRows, rowIntervals).map { case (s, e) => e - s }.sum,
       countsPushed)
-    else new Hdf5Scan(path, layout, required, maxBytesPerPartition, rowIntervals, limit)
+    else DriverScan.orBatch(rowIntervals.isDefined,
+      new Hdf5Scan(path, layout, required, maxBytesPerPartition, rowIntervals, limit))
 }
 
 /** Metadata-only COUNT: one single-row partition carrying the row count
@@ -291,7 +307,7 @@ private[sources] case class Hdf5Split(
 private[sources] class Hdf5Scan(path: String, layout: Hdf5DataSource.Layout,
     required: StructType, maxBytesPerPartition: Long,
     rowIntervals: Option[Seq[(Long, Long)]], limit: Option[Int])
-  extends Scan with Batch with SupportsReportStatistics {
+  extends DriverReadable with Batch {
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -348,6 +364,16 @@ private[sources] class Hdf5Scan(path: String, layout: Hdf5DataSource.Layout,
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new Hdf5ReaderFactory
+
+  /** The planned splits read by the tasks' [[Hdf5ReaderFactory]]
+    * reader; it makes a new row per record, so none is copied.
+    */
+  override def readOnDriver(): Array[InternalRow] = {
+    val factory = createReaderFactory()
+    val rows = Array.newBuilder[InternalRow]
+    planInputPartitions().foreach(p => DriverScan.drain(factory.createReader(p))(rows += _))
+    rows.result()
+  }
 }
 
 private[sources] class Hdf5ReaderFactory extends PartitionReaderFactory {

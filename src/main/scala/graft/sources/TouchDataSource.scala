@@ -58,6 +58,17 @@ import org.apache.spark.util.SerializableConfiguration
   *    being truthful — the index only chooses which record ranges are
   *    read; a query for k scattered neurons' touches reads those
   *    neurons' byte ranges, not the file.
+  *  - **Point reads on the driver**: a gid read whose planned records
+  *    come to at most [[DriverScan.MaxBytes]] (4 MiB; its scaladoc says
+  *    how it was sized) is a Spark `LocalScan`: the driver runs the
+  *    tasks' columnar reader over the same planned splits, with the
+  *    same gid check and decode guards, and Spark plans a
+  *    `LocalTableScan` whose collect starts no job of its own. The read
+  *    happens at physical planning, so `explain()` or `executedPlan` of
+  *    such a read reads its data, and a decode fault surfaces there.
+  *    `explain()` shows a `LocalTableScan`; the pushed ranges stay in
+  *    the scan's description in the optimized plan. Unfiltered scans,
+  *    counts and larger gid reads stay jobs.
   *  - **Metadata-only COUNT** (`SupportsPushDownAggregates`): an
   *    ungrouped, unfiltered `count(*)` (or `count(col)` — every touch
   *    column is non-nullable) is answered from file lengths alone
@@ -88,7 +99,7 @@ import org.apache.spark.util.SerializableConfiguration
   *    projections without it scan them freely.
   *  - **Hadoop FileSystem I/O**: lengths, listings, and reads go
   *    through `org.apache.hadoop.fs.FileSystem` (the session's Hadoop
-  *    conf, broadcast once per scan as Spark's `FileScan` does), so the
+  *    conf, broadcast once per job scan as Spark's `FileScan` does), so the
   *    source works on any Hadoop-supported store, not just the local
   *    filesystem — and a file whose length is not a record multiple is
   *    rejected loudly at split planning, naming the byte offset of the
@@ -481,9 +492,13 @@ private[sources] class TouchScanBuilder(path: String,
     if (accepted.nonEmpty) false else { limit = Some(l); true }
   override def isPartiallyPushed(): Boolean = true
 
+  /** A gid read whose planned records fit [[DriverScan.MaxBytes]] is
+    * read on the driver; other reads are Spark jobs.
+    */
   override def build(): Scan =
     if (countsPushed > 0) new TouchCountScan(path, indexed, countsPushed)
-    else new TouchScan(path, indexed, required, maxBytesPerPartition, gidIntervals, limit)
+    else DriverScan.orBatch(gidIntervals.isDefined,
+      new TouchScan(path, indexed, required, maxBytesPerPartition, gidIntervals, limit))
 }
 
 /** Metadata-only COUNT scan: one split per file, each emitting a single
@@ -538,8 +553,7 @@ private[sources] class TouchScan(path: String,
     required: StructType, maxBytesPerPartition: Long,
     planTimeIntervals: Option[Seq[(Long, Long)]] = None,
     limit: Option[Int] = None)
-  extends Scan with Batch with SupportsRuntimeFiltering
-    with SupportsReportStatistics {
+  extends DriverReadable with Batch with SupportsRuntimeFiltering {
 
   /** Plan-time pushdown ∩ any runtime filter delivered after planning
     * (dynamic pruning): [[filter]] narrows this before
@@ -668,15 +682,27 @@ private[sources] class TouchScan(path: String,
         new SerializableConfiguration(session.sessionState.newHadoopConf())),
       required.fieldNames, planTimeIntervals.map(GidIntervals.bounds))
   }
+
+  /** The planned splits read by [[TouchBatchReader]], as the tasks read
+    * them, but with the session's Hadoop conf and no broadcast; every
+    * batch row is copied out of the reused vectors.
+    */
+  override def readOnDriver(): Array[InternalRow] = {
+    val conf = SparkSession.active.sessionState.newHadoopConf()
+    val keep = planTimeIntervals.map(GidIntervals.bounds)
+    val rows = Array.newBuilder[InternalRow]
+    planInputPartitions().foreach { p =>
+      DriverScan.drain(new TouchBatchReader(p.asInstanceOf[TouchSplit], conf, required.fieldNames, keep)) {
+        batch =>
+          var i = 0
+          while (i < batch.numRows) { rows += batch.getRow(i).copy(); i += 1 }
+      }
+    }
+    rows.result()
+  }
 }
 
-/** Columnar reader of one split: each batch `readFully`s up to
-  * [[TouchDataSource.BatchRecords]] records into one reused byte array
-  * and fills one reused column vector per required field. With `keep`
-  * set, records whose gid word lies outside it are dropped from the
-  * batch after decoding, so `synapse_id` still comes from each record's
-  * own position.
-  */
+/** Opens every split with the scan's broadcast Hadoop conf. */
 private[sources] class TouchReaderFactory(
     private[sources] val conf: Broadcast[SerializableConfiguration],
     fields: Array[String], keep: Option[GidIntervals.Bounds]) extends PartitionReaderFactory {
@@ -686,62 +712,70 @@ private[sources] class TouchReaderFactory(
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     throw new UnsupportedOperationException("touchbin splits are read as column batches")
 
-  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
-    val split = partition.asInstanceOf[TouchSplit]
-    new PartitionReader[ColumnarBatch] {
-      private val recSize = split.index.version.recordSize
-      private val layout = fields.map(TouchModel.field)
-      private val capacity = math.min(TouchDataSource.BatchRecords.toLong, split.numRecords).toInt
-      private val bytes = new Array[Byte](capacity * recSize)
-      private val buf = ByteBuffer.wrap(bytes)
-        .order(if (split.index.littleEndian) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN)
-      private val vectors = layout.map(f => new OnHeapColumnVector(capacity, f.dataType))
-      private val batch = new ColumnarBatch(vectors.toArray[ColumnVector])
-      private val in = {
-        val p = new HadoopPath(split.path)
-        p.getFileSystem(conf.value.value).open(p)
-      }
-      private val gidOff = TouchModel.field("source_node_id").offset
-      private val sel = if (keep.isDefined) new Array[Int](capacity) else null
-      private var done = 0L
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
+    new TouchBatchReader(partition.asInstanceOf[TouchSplit], conf.value.value, fields, keep)
+}
 
-      // next() decodes the next batch with a matching record into the
-      // reused vectors; get() returns it until the following next()
-      override def next(): Boolean = {
-        while (done < split.numRecords) {
-          val n = math.min(capacity.toLong, split.numRecords - done).toInt
-          val first = split.startRecord + done
-          // positional readFully: fails loudly on a short read
-          in.readFully(first * recSize, bytes, 0, n * recSize)
-          var c = 0
-          while (c < layout.length) {
-            TouchDataSource.fill(layout(c), split, buf, n, first, vectors(c))
-            c += 1
-          }
-          done += n
-          val m = keep.fold(n)(matching(_, n))
-          if (m < n) vectors.foreach(TouchDataSource.compact(_, sel, m))
-          if (m > 0) { batch.setNumRows(m); return true }
-        }
-        false
-      }
-
-      /** Records of the batch whose gid word is in `k`; their positions
-        * go to `sel`.
-        */
-      private def matching(k: GidIntervals.Bounds, n: Int): Int = {
-        var m = 0
-        var i = 0
-        while (i < n) {
-          if (k.contains(buf.getInt(i * recSize + gidOff))) { sel(m) = i; m += 1 }
-          i += 1
-        }
-        m
-      }
-
-      override def get(): ColumnarBatch = batch
-
-      override def close(): Unit = try in.close() finally batch.close()
-    }
+/** Columnar reader of one split: each batch `readFully`s up to
+  * [[TouchDataSource.BatchRecords]] records into one reused byte array
+  * and fills one reused column vector per required field. With `keep`
+  * set, records whose gid word lies outside it are dropped from the
+  * batch after decoding, so `synapse_id` still comes from each record's
+  * own position.
+  */
+private[sources] class TouchBatchReader(split: TouchSplit, conf: Configuration,
+    fields: Array[String], keep: Option[GidIntervals.Bounds]) extends PartitionReader[ColumnarBatch] {
+  private val recSize = split.index.version.recordSize
+  private val layout = fields.map(TouchModel.field)
+  private val capacity = math.min(TouchDataSource.BatchRecords.toLong, split.numRecords).toInt
+  private val bytes = new Array[Byte](capacity * recSize)
+  private val buf = ByteBuffer.wrap(bytes)
+    .order(if (split.index.littleEndian) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN)
+  private val vectors = layout.map(f => new OnHeapColumnVector(capacity, f.dataType))
+  private val batch = new ColumnarBatch(vectors.toArray[ColumnVector])
+  private val in = {
+    val p = new HadoopPath(split.path)
+    p.getFileSystem(conf).open(p)
   }
+  private val gidOff = TouchModel.field("source_node_id").offset
+  private val sel = if (keep.isDefined) new Array[Int](capacity) else null
+  private var done = 0L
+
+  // next() decodes the next batch with a matching record into the
+  // reused vectors; get() returns it until the following next()
+  override def next(): Boolean = {
+    while (done < split.numRecords) {
+      val n = math.min(capacity.toLong, split.numRecords - done).toInt
+      val first = split.startRecord + done
+      // positional readFully: fails loudly on a short read
+      in.readFully(first * recSize, bytes, 0, n * recSize)
+      var c = 0
+      while (c < layout.length) {
+        TouchDataSource.fill(layout(c), split, buf, n, first, vectors(c))
+        c += 1
+      }
+      done += n
+      val m = keep.fold(n)(matching(_, n))
+      if (m < n) vectors.foreach(TouchDataSource.compact(_, sel, m))
+      if (m > 0) { batch.setNumRows(m); return true }
+    }
+    false
+  }
+
+  /** Records of the batch whose gid word is in `k`; their positions
+    * go to `sel`.
+    */
+  private def matching(k: GidIntervals.Bounds, n: Int): Int = {
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (k.contains(buf.getInt(i * recSize + gidOff))) { sel(m) = i; m += 1 }
+      i += 1
+    }
+    m
+  }
+
+  override def get(): ColumnarBatch = batch
+
+  override def close(): Unit = try in.close() finally batch.close()
 }

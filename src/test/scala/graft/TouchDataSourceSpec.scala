@@ -173,10 +173,9 @@ class TouchDataSourceSpec extends AnyFunSuite {
     // Spark face of the reference's per-neuron seek (touch_reader.cpp:196-228)
     val pred = col("source_node_id") >= 102 && col("source_node_id") <= 103
     val pruned = read().filter(pred)
-    assert(pruned.rdd.getNumPartitions == 2,
-      s"index pruning must plan only matching record ranges, got ${pruned.rdd.getNumPartitions}")
-    assert(pruned.queryExecution.executedPlan.toString.contains("PushedGidRange"),
-      pruned.queryExecution.executedPlan.toString)
+    assert(ScanPlans.splits(pruned) == 2,
+      s"index pruning must plan only matching record ranges, got ${ScanPlans.splits(pruned)}")
+    assert(ScanPlans.description(pruned).contains("PushedGidRange"), ScanPlans.description(pruned))
     // identical rows to the full scan filtered on the driver —
     // including synapse_id, whose global row positions must stay
     // absolute under pruned split plans
@@ -189,15 +188,15 @@ class TouchDataSourceSpec extends AnyFunSuite {
     // a range outside every indexed gid plans ZERO splits
     assert(read().filter(col("source_node_id") > 1000).count() == 0)
     // equality and one-sided predicates prune too
-    assert(read().filter(col("source_node_id") === 100).rdd.getNumPartitions == 1)
-    assert(read().filter(col("source_node_id") > 103).rdd.getNumPartitions == 2)
+    assert(ScanPlans.splits(read().filter(col("source_node_id") === 100)) == 1)
+    assert(ScanPlans.splits(read().filter(col("source_node_id") > 103)) == 2)
     // UPPER-bound-only predicates (lo = Long.MinValue internally) must
     // not crash split planning (round-7 advice: the raw subtraction
     // wrapped) and must prune to the leading blocks
     val upper = read().filter(col("source_node_id") <= 101)
-    assert(upper.rdd.getNumPartitions == 2, s"got ${upper.rdd.getNumPartitions}")
+    assert(ScanPlans.splits(upper) == 2, s"got ${ScanPlans.splits(upper)}")
     assert(rows(upper) == rowsWhere(full)(_ <= 101))
-    assert(read().filter(col("source_node_id") < 101).rdd.getNumPartitions == 1)
+    assert(ScanPlans.splits(read().filter(col("source_node_id") < 101)) == 1)
   }
 
   test("multi-range pushdown: IN / OR plan one record range per gid interval") {
@@ -212,27 +211,26 @@ class TouchDataSourceSpec extends AnyFunSuite {
     // touch_reader.cpp:196-228)
     val inPred = col("source_node_id").isin(100, 105)
     val pruned = read().filter(inPred)
-    assert(pruned.rdd.getNumPartitions == 2,
-      s"IN (first, last) must plan 2 ranges, got ${pruned.rdd.getNumPartitions}")
-    assert(pruned.queryExecution.executedPlan.toString.contains("PushedGidRanges"),
-      pruned.queryExecution.executedPlan.toString)
+    assert(ScanPlans.splits(pruned) == 2,
+      s"IN (first, last) must plan 2 ranges, got ${ScanPlans.splits(pruned)}")
+    assert(ScanPlans.description(pruned).contains("PushedGidRanges"), ScanPlans.description(pruned))
     assert(rows(pruned) == rowsWhere(full)(Set(100, 105)))
     // OR of two ranges prunes the gap between them
     val orPred = (col("source_node_id") === 100) || (col("source_node_id") >= 104)
     val orScan = read().filter(orPred)
-    assert(orScan.rdd.getNumPartitions == 3, // 1 block + 2 blocks
-      s"got ${orScan.rdd.getNumPartitions}")
+    assert(ScanPlans.splits(orScan) == 3, // 1 block + 2 blocks
+      s"got ${ScanPlans.splits(orScan)}")
     assert(rows(orScan) == rowsWhere(full)(g => g == 100 || g >= 104))
     // ADJACENT gid values merge into one contiguous record range
     // (2 blocks of 10 records → 2 splits at 10 records/split, but ONE
     // merged range — no duplicate planning at the seam)
     val adj = read().filter(col("source_node_id").isin(102, 103))
-    assert(adj.rdd.getNumPartitions == 2, s"got ${adj.rdd.getNumPartitions}")
+    assert(ScanPlans.splits(adj) == 2, s"got ${ScanPlans.splits(adj)}")
     assert(rows(adj) == rowsWhere(full)(Set(102, 103)))
     // conjunction of an IN with a range intersects interval sets
     val both = read().filter(col("source_node_id").isin(100, 103, 105) &&
       col("source_node_id") >= 103)
-    assert(both.rdd.getNumPartitions == 2, s"got ${both.rdd.getNumPartitions}")
+    assert(ScanPlans.splits(both) == 2, s"got ${ScanPlans.splits(both)}")
     assert(rows(both) == rowsWhere(full)(g => Set(100, 103, 105)(g) && g >= 103))
     // synapse ids keep absolute row positions under multi-range pruning
     val ids = pruned.select("synapse_id", "source_node_id").collect()
@@ -267,8 +265,8 @@ class TouchDataSourceSpec extends AnyFunSuite {
     // COUNT over pushed gid predicates: file lengths count planned
     // records, before the reader's exact gid check)
     val filtered = read().filter(col("source_node_id") <= 101).agg(count(lit(1)))
-    assert(!filtered.queryExecution.executedPlan.toString.contains("PushedAggregates"),
-      filtered.queryExecution.executedPlan.toString)
+    assert(ScanPlans.description(filtered).contains("PushedGidRanges") &&
+      !ScanPlans.description(filtered).contains("PushedAggregates"), ScanPlans.description(filtered))
     assert(filtered.collect().head.getLong(0) == 20L)
 
     // limit pushdown: limit 15 plans only the covering splits and trims
@@ -296,18 +294,27 @@ class TouchDataSourceSpec extends AnyFunSuite {
   private lazy val boundaryPairs = Seq(java.nio.ByteOrder.LITTLE_ENDIAN, java.nio.ByteOrder.BIG_ENDIAN)
     .map(o => o -> writeBoundaryPair(o))
 
-  /** The frame is decoded by Spark's `ColumnarToRow` over the touchbin
-    * scan, not by a row reader.
+  /** The frame is decoded by the touchbin scan's column batches, not by
+    * a row reader: Spark's `ColumnarToRow` runs over the scan, or, for a
+    * read on the driver, a `LocalTableScan` holds the rows of a batch
+    * scan that reads column batches only.
     */
   private def assertColumnar(df: org.apache.spark.sql.DataFrame): Unit = {
-    import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter}
+    import org.apache.spark.sql.connector.read.Scan.ColumnarSupportMode
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter, LocalTableScanExec}
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     val plan = df.queryExecution.executedPlan
-    // whole-stage codegen puts an InputAdapter between the two
-    assert(plan.collect { case c: ColumnarToRowExec => c.child }.exists {
-      case InputAdapter(b: BatchScanExec) => b.scan.description().startsWith("touchbin ")
-      case _ => false
-    }, s"no ColumnarToRow over the touchbin scan:\n$plan")
+    if (ScanPlans.onDriver(df)) {
+      val scan = ScanPlans.scans(df).collect { case d: graft.sources.DriverScan => d.batch }
+      assert(scan.length == 1 && scan.head.description().startsWith("touchbin ") &&
+        scan.head.columnarSupportMode() == ColumnarSupportMode.SUPPORTED, ScanPlans.description(df))
+      assert(plan.collect { case l: LocalTableScanExec => l }.length == 1, s"no LocalTableScan:\n$plan")
+    } else
+      // whole-stage codegen puts an InputAdapter between the two
+      assert(plan.collect { case c: ColumnarToRowExec => c.child }.exists {
+        case InputAdapter(b: BatchScanExec) => b.scan.description().startsWith("touchbin ")
+        case _ => false
+      }, s"no ColumnarToRow over the touchbin scan:\n$plan")
   }
 
   test("batch boundaries: a single-split read equals touchcheck.py in both byte orders") {
@@ -339,7 +346,7 @@ class TouchDataSourceSpec extends AnyFunSuite {
       // inside the first, the first and the second batch of the file
       val gids = Seq(501, 502, 505)
       val in = read().filter(col("source_node_id").isin(gids: _*))
-      assert(in.queryExecution.executedPlan.toString.contains("PushedGidRanges"))
+      assert(ScanPlans.description(in).contains("PushedGidRanges"), ScanPlans.description(in))
       assertColumnar(in)
       assert(ToolCheck.rendered(in).sorted ==
         single.filter(r => gids.contains(r.split('|')(1).toInt)).sorted, s"$order IN")

@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.SparkTestSession
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,15 +19,11 @@ class Hdf5SourceSpec extends AnyFunSuite {
 
   private def goldenDf = spark.read.format("sonatah5").load(golden)
 
-  private def scanDescription(df: org.apache.spark.sql.DataFrame): String = {
-    // under AQE the BatchScanExec may sit inside an AdaptiveSparkPlanExec
-    // whose collectLeaves() stops at the adaptive node — search the
-    // whole executed plan tree string instead
-    val viaNode = df.queryExecution.executedPlan.collect {
-      case b: BatchScanExec => b.scan.description()
-    }.headOption
-    viaNode.getOrElse(df.queryExecution.executedPlan.toString)
-  }
+  /** The description of the scan in the optimized plan, whether it runs
+    * as a job or is read on the driver.
+    */
+  private def scanDescription(df: org.apache.spark.sql.DataFrame): String =
+    graft.ScanPlans.description(df)
 
   test("schema and full read of the golden fixture") {
     val df = goldenDf
