@@ -569,8 +569,8 @@ object Dedup {
 
   /** [[embeddingCosineLshPairs]] plus the thunk releasing the persisted
     * quantized base (read by both candidate-join sides and both payload
-    * fetches) — same contract as `FileOrder.fileOrderedUnionStamped`;
-    * the plain form is for harnesses that `clearCache()` per query.
+    * fetches); call it once the result's actions complete. The plain
+    * form is for harnesses that `clearCache()` per query.
     */
   def embeddingCosineLshPairsStamped(vectors: DataFrame, threshold: Double,
                               rows: Int = 3, bands: Int = 24): (DataFrame, () => Unit) = {

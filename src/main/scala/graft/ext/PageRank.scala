@@ -137,13 +137,12 @@ object PageRank {
         .select(col("node_id"),
           (expr(s"(15 * $scale div 100) div n_nodes") +
             expr(s"85 * ($coalesceContrib + dangling div n_nodes) div 100")).as("rank"))
-        // each round reads `ranks` TWICE (contrib + dangling), so an
-        // unpersisted chain re-evaluates round r-1 twice — 2^rounds
-        // recompute of the whole fit (the old 3-round checkpoint cadence
-        // never fired at iterations=3, measured as the dangling variant
-        // costing ~2× the plain one). Node-sized persist per round, the
-        // Preference-fit discipline.
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // each round reads `ranks` TWICE (contrib + dangling): without a
+        // cut, round r's plan nests round r-1 twice and the fit's plan
+        // and recompute double per round. A node-sized local checkpoint
+        // every round computes each round once and keeps the plan one
+        // leaf (lazy: the next round's shuffles are the action).
+        .localCheckpoint(eager = false)
     }
     (ranks, () => { e.unpersist(); nodes.unpersist(); outDeg.unpersist(); () })
   }

@@ -18,16 +18,12 @@ import org.apache.spark.sql.functions._
   *
   * 100 TB shape: the rank is NOT a single-partition window. The three
   * metrics are unpivoted into one (metric, value, custkey) table and
-  * ranked with [[Offsets.globalPositionGroupedStamped]] — range
-  * repartition by (metric, value, custkey), per-partition counts, and a
-  * prefix-sum over the partition×group bucket table (cluster-width rows,
-  * never data-width). One extra shuffle; parallelism stays the cluster
-  * width at any customer count. The per-metric totals (3 rows) and the
-  * global last-day (1 row) ride broadcasts. The internal persisted frame
-  * is unpersisted via the stamped contract once the plan is consumed —
-  * here the caller materializes one action so the thunk unpersists lazily
-  * on a listener-free path: we keep it simple and leave the MEMORY_AND_DISK
-  * entry to session GC, matching `globalPosition`'s documented behavior.
+  * ranked with [[Offsets.globalPositionGrouped]] — range repartition
+  * by (metric, value, custkey), one job gathering a summary per
+  * partition, and a driver walk over those summaries (cluster-width,
+  * never data-width); nothing is cached. One extra shuffle; parallelism
+  * stays the cluster width at any customer count. The per-metric totals
+  * (3 rows) and the global last-day (1 row) ride broadcasts.
   *
   * Output: one row per occupied (r,f,m) cell — `segment` "r-f-m",
   * customer count and summed lifetime cents. ≤ 64 rows.
@@ -47,7 +43,7 @@ object Rfm {
       .select(col("c"), col("r"), col("f"), col("mon"))
     val long = metrics.selectExpr(
       "c", "stack(3, 'R', r, 'F', f, 'M', mon) AS (metric, v)")
-    val (ranked, stamped) = Offsets.globalPositionGroupedStamped(
+    val ranked = Offsets.globalPositionGrouped(
       long, "metric", Seq(col("metric"), col("v"), col("c")), "pos", "gpos")
     val totals = ranked.groupBy(col("metric")).agg(count(lit(1)).as("n"))
     val quartiled = ranked.join(broadcast(totals), "metric")

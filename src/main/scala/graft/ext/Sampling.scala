@@ -432,8 +432,9 @@ object Sampling {
     // per-doc token counts in shuffle order, shard = cum div budget —
     // every shard holds ~budget tokens of contiguous shuffled docs, and
     // the assignment is reproducible anywhere. The scan runs through
-    // globalWeightedPrefix: per-partition running sums + a
-    // cluster-width offset table, never a window over the corpus.
+    // globalWeightedPrefix: one job gathers each partition's token
+    // total, the driver scans them, one pass stamps the running sums —
+    // no window over the corpus, no cache.
     "corpus_pack_shards" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).select(col("doc_id"),
         size(TextAnalysis.tokens(col("text"))).cast("long").as("n_tokens"))
@@ -449,8 +450,8 @@ object Sampling {
     // waste in the few long-doc shards and packs the tail nearly
     // exactly — the offline half of best-fit-decreasing that stays a
     // pure prefix scan (true BFD's bin search is inherently
-    // sequential; documented trade). Same two-phase
-    // globalWeightedPrefix discipline, order = (n_tokens desc, doc_id).
+    // sequential; documented trade). Same globalWeightedPrefix scan,
+    // order = (n_tokens desc, doc_id).
     "pack_fill_sorted" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).select(col("doc_id"),
         size(TextAnalysis.tokens(col("text"))).cast("long").as("n_tokens"))

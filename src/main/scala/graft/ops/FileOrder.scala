@@ -13,12 +13,12 @@ import java.nio.file.{Files, Path}
   * is load-bearing").
   *
   * Spark-first: `input_file_name()` recovers each row's file, and
-  * `Offsets.globalPositionGroupedStamped` with the FILENAME as the
-  * group yields both the global file-ordered position and the row's
-  * position within its file — the per-file offset table is exactly the
-  * grouped stamp's per-group bases, riding the same broadcast as the
-  * partition offsets. One range shuffle over (file, innerOrd), no
-  * per-file jobs, scales to any number of files.
+  * `Offsets.globalPositionGrouped` with the FILENAME as the group
+  * yields both the global file-ordered position and the row's position
+  * within its file — the per-file offset table is exactly the grouped
+  * stamp's group starts, walked on the driver from one summary per
+  * partition. One range shuffle over (file, innerOrd), no per-file
+  * jobs, no cache, scales to any number of files.
   */
 object FileOrder {
 
@@ -26,25 +26,13 @@ object FileOrder {
     * (lexicographic filename, `innerOrd` within the file). `innerOrd`
     * must totally order rows WITHIN each file (the relational stand-in
     * for physical row order, which a columnar engine may not preserve
-    * across splits). Emits `pos` (global) and `pos_in_file`, plus a
-    * release thunk that unpersists the stamp's MEMORY_AND_DISK cache of
-    * the full input once the result is consumed.
+    * across splits). Emits `pos` (global) and `pos_in_file`.
     */
-  def fileOrderedUnionStamped(spark: SparkSession, dir: String,
-                              innerOrd: Seq[Column]): (DataFrame, () => Unit) = {
+  def fileOrderedUnion(spark: SparkSession, dir: String, innerOrd: Seq[Column]): DataFrame = {
     val df = spark.read.parquet(dir).withColumn("_file", input_file_name())
-    val (stamped, cached) = Offsets.globalPositionGroupedStamped(
-      df, "_file", col("_file") +: innerOrd, "pos", "pos_in_file")
-    (stamped.drop("_file"), () => { cached.unpersist(); () })
+    Offsets.globalPositionGrouped(df, "_file", col("_file") +: innerOrd, "pos", "pos_in_file")
+      .drop("_file")
   }
-
-  /** [[fileOrderedUnionStamped]] without the cache handle — only for
-    * callers that clear caches themselves (Verify/Bench run
-    * `clearCache()` per query); long-lived sessions should use the
-    * stamped form and release.
-    */
-  def fileOrderedUnion(spark: SparkSession, dir: String, innerOrd: Seq[Column]): DataFrame =
-    fileOrderedUnionStamped(spark, dir, innerOrd)._1
 
   /** Fixture: split `orders` keys into three parquet FILES in one temp
     * directory whose filename order deliberately differs from key order

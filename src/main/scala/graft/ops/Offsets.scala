@@ -3,25 +3,26 @@ package graft.ops
 import graft.{Q, Tables}
 import org.apache.spark.sql.{classic, Column, DataFrame, GraftSqlShim}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, JoinedRow, SpecificInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, BoundReference, InterpretedOrdering, JoinedRow, SortOrder, SpecificInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** O5 `exclusive_prefix_sum` — the reference's signature distributed-scan
   * pattern: exclusive prefix sum of per-partition counts to assign global
   * write offsets (MPI Gather → serial scan → Scatter,
   * src/parquet2hdf5.cpp:97-110; src/index/index.cpp:272-280).
   *
-  * Spark-first: the scan runs over the (tiny) per-key count table, so the
-  * unpartitioned window is bounded by the number of groups, not the number
-  * of rows — at 100 TB the big table is only touched by the map-side
-  * partial count. This is the deterministic replacement for
-  * `monotonically_increasing_id` everywhere row order is load-bearing
-  * (SURVEY.md §7.5.2).
+  * Spark-first: [[exclusivePrefixSum]] scans a (tiny) per-key count
+  * table, so its unpartitioned window is bounded by the number of keys.
+  * Every data-sized offset — the global position, the position within a
+  * group and the weighted prefix — is one gather → scan → scatter pass
+  * whose driver state is bounded by the partition count. This is the
+  * deterministic replacement for partition-dependent row ids everywhere
+  * row order is load-bearing (SURVEY.md §7.5.2).
   */
 object Offsets {
 
@@ -43,8 +44,8 @@ object Offsets {
     * prefix; a `mapPartitionsWithIndex` over the SAME sorted RDD stamps
     * `base(partition) + local index`. Both passes read that one RDD, so
     * they reuse one shuffle output and see one partition layout — no
-    * cache, no second exchange, no data-sized window or join, and nothing
-    * for the caller to release. Eager: the count job runs when this is
+    * cache, no second exchange, no data-sized window, and nothing for
+    * the caller to release. Eager: the count job runs when this is
     * called. `ord` must be a total order (include a tiebreaker key) or
     * positions are ambiguous.
     */
@@ -52,121 +53,130 @@ object Offsets {
     globalPositionStamped(df, ord, posCol)._1
 
   /** [[globalPosition]] plus the range-sorted input it stamped. Nothing is
-    * cached: unpersisting the second element is a no-op and leaves a
-    * cache the caller put on the first in place.
+    * cached: releasing the second element is a no-op and leaves a cache
+    * the caller put on the first in place.
     */
   def globalPositionStamped(df: DataFrame, ord: Seq[Column],
-                            posCol: String = "pos"): (DataFrame, DataFrame) = {
-    val sorted = df.repartitionByRange(ord: _*).sortWithinPartitions(ord: _*)
-    val rows = sorted.queryExecution.toRdd
-    val counts = rows.mapPartitions(it => Iterator.single(it.size.toLong)).collect()
-    val bases = counts.scanLeft(0L)(_ + _)
-    val types = sorted.schema.fields.map(_.dataType) :+ LongType
-    val stamped = rows.mapPartitionsWithIndex[InternalRow] { (pid, it) =>
-      val project = UnsafeProjection.create(types)
-      val pos = new SpecificInternalRow(Seq(LongType))
-      val joined = new JoinedRow
-      var next = bases(pid)
-      it.map { r => pos.setLong(0, next); next += 1; project(joined(r, pos)) }
-    }
-    val output = (sorted.queryExecution.analyzed.output :+
-      AttributeReference(posCol, LongType, nullable = false)()).map(_.newInstance())
-    val stats = Statistics(EstimationUtils.getSizePerRow(output) * bases.last,
-      rowCount = Some(BigInt(bases.last)))
-    val spark = sorted.sparkSession.asInstanceOf[classic.SparkSession]
-    (GraftSqlShim.ofRows(spark, LogicalRDD(output, stamped)(spark, Some(stats))), sorted)
-  }
+                            posCol: String = "pos"): (DataFrame, DataFrame) =
+    stamp(df, ord, posCol, None, None)
 
-  /** `globalPositionStamped` with a leading GROUP dimension: `ord` must
-    * lead with ascending `groupCol`, so groups are contiguous in the
-    * total order. Emits BOTH the global position (`posCol`) and each
-    * row's position WITHIN its group (`groupPosCol`) — the per-group
-    * bases ride the same tiny broadcast as the per-partition offsets
-    * (counts keyed (partition, group) instead of partition alone), so
-    * numbering G groups independently costs exactly the same jobs as
-    * numbering one. This is the reference's per-communicator offset
+  /** [[globalPosition]] with a GROUP dimension: `ord` must lead with
+    * `groupCol`, so each group is contiguous in the total order. Emits
+    * the global position (`posCol`) and each row's position WITHIN its
+    * group (`groupPosCol`). A null group is a group, placed where `ord`
+    * puts nulls. This is the reference's per-communicator offset
     * exchange (src/index/index.cpp:272-280) run ONCE for all
     * communicators, and its per-FILE offset table
-    * (src/parquet2hdf5.cpp:97-110) when the group is a filename.
-    *
-    * Scale regimes: groups are contiguous in the total order, so the
-    * bucket table holds ≈ |groups| + |partitions| rows and the default
-    * broadcast is sized by GROUP COUNT — fine to ~10^6 groups (tens of
-    * MB), the regime of per-file offsets. Past that, pass
-    * `broadcastOffsets = false`: the bucket join becomes a plain
-    * equi-join on (_pid, group) — one keyed shuffle of the data, no
-    * driver-sized structure anywhere, good to any group count. The
-    * hint stays explicit (not left to AQE) in the default because
-    * window outputs carry poor size estimates and AQE would sometimes
-    * pick that shuffle long before the ceiling.
+    * (src/parquet2hdf5.cpp:97-110) when the group is a filename. Same
+    * jobs as [[globalPosition]]; the driver holds one summary per
+    * partition, whatever the number of groups.
     */
-  def globalPositionGroupedStamped(df: DataFrame, groupCol: String, ord: Seq[Column],
-                                   posCol: String, groupPosCol: String,
-                                   broadcastOffsets: Boolean = true): (DataFrame, DataFrame) = {
-    val sorted = df.repartitionByRange(ord: _*).sortWithinPartitions(ord: _*)
-    val withMid = sorted.withColumn("_mid", monotonically_increasing_id())
-      .withColumn("_pid", shiftright(col("_mid"), 33))
-      .withColumn("_local", col("_mid").bitwiseAND((1L << 33) - 1))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = withMid.groupBy(col("_pid"), col(groupCol).as("_grp"))
-      .agg(count(lit(1)).as("cnt"))
-    // (pid, grp) bucket order IS the global row order: partitions are
-    // range-ordered and ord leads with groupCol inside each partition.
-    // All three windows run over the bucket table (|partitions|·|groups|
-    // rows), never the data.
-    val wAll = Window.orderBy(col("_pid"), col("_grp"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = counts
-      .withColumn("_boff", coalesce(sum(col("cnt")).over(wAll), lit(0L)))
-      .withColumn("_pbase", min(col("_boff")).over(Window.partitionBy(col("_pid"))))
-      .withColumn("_gbase", min(col("_boff")).over(Window.partitionBy(col("_grp"))))
-    val bucketSide = offsets.select(col("_pid"), col("_grp").as(groupCol),
-      col("_pbase"), col("_gbase"))
-    val result = withMid
-      .join(if (broadcastOffsets) broadcast(bucketSide) else bucketSide,
-        Seq("_pid", groupCol))
-      .withColumn(posCol, col("_pbase") + col("_local"))
-      .withColumn(groupPosCol, col(posCol) - col("_gbase"))
-      .select(df.columns.map(col) ++ Seq(col(posCol), col(groupPosCol)): _*)
-    (result, withMid)
-  }
+  def globalPositionGrouped(df: DataFrame, groupCol: String, ord: Seq[Column],
+                            posCol: String, groupPosCol: String): DataFrame =
+    stamp(df, ord, posCol, None, Some(groupCol -> groupPosCol))._1
 
   /** Exclusive WEIGHTED prefix sum over data rows in `ord` order —
-    * `globalPosition` generalized from weight 1 to `weightCol` (token
-    * budgets, byte sizes): each row gets the sum of all preceding rows'
-    * weights. A two-phase plan with no single-partition stage:
-    * the only unpartitioned window runs over the per-partition totals
-    * (cluster-width rows); the per-row running sum is a window
-    * PARTITIONED by the physical partition id, so its parallelism is
-    * the partition count and its state is one accumulator per task.
+    * [[globalPosition]] generalized from weight 1 to the integral
+    * `weightCol` (token budgets, byte sizes): each row gets the sum of
+    * all preceding rows' weights. A null weight gives a null `cumCol`
+    * and adds nothing to later rows. Same jobs as [[globalPosition]].
     * `ord` must be a total order.
     */
   def globalWeightedPrefix(df: DataFrame, ord: Seq[Column], weightCol: String,
                            cumCol: String = "cum"): DataFrame =
-    globalWeightedPrefixStamped(df, ord, weightCol, cumCol)._1
+    stamp(df, ord, cumCol, Some(weightCol), None)._1
 
-  /** [[globalWeightedPrefix]] plus the persisted internal frame, which
-    * both branches read so they see one partition layout (AQE may
-    * coalesce the exchange differently per branch); unpersist it once the
-    * result's actions complete.
+  /** One partition as the gather sees it: rows, weight total, first and
+    * last group key (null if empty) and the weight of its last group.
     */
-  def globalWeightedPrefixStamped(df: DataFrame, ord: Seq[Column], weightCol: String,
-                                  cumCol: String = "cum"): (DataFrame, DataFrame) = {
+  private final case class Summary(rows: Long, total: Long, first: UnsafeRow, last: UnsafeRow, lastGroup: Long)
+
+  /** The gather → scan → scatter pass behind every form above. One job
+    * gathers a summary per partition of the range-sorted RDD; the driver
+    * walks them into each partition's base and the start of its first
+    * group (a group may straddle partitions); a `mapPartitionsWithIndex`
+    * over the same RDD stamps `base + running weight` and the position
+    * within the group, restarting it at each group change. Without group
+    * and weight the summary is the row count and each row adds 1.
+    */
+  private def stamp(df: DataFrame, ord: Seq[Column], posCol: String, weightCol: Option[String],
+                    group: Option[(String, String)]): (DataFrame, DataFrame) = {
     val sorted = df.repartitionByRange(ord: _*).sortWithinPartitions(ord: _*)
-    val withMid = sorted.withColumn("_mid", monotonically_increasing_id())
-      .withColumn("_pid", shiftright(col("_mid"), 33))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val totals = withMid.groupBy(col("_pid")).agg(sum(col(weightCol)).as("cnt"))
-    val offsets = exclusivePrefixSum(totals, "_pid")
-    val wLocal = Window.partitionBy(col("_pid")).orderBy(col("_mid"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val result = withMid
-      .withColumn("_run", sum(col(weightCol)).over(wLocal))
-      .join(broadcast(offsets.select(col("_pid"), col("write_offset"))), "_pid")
-      .withColumn(cumCol, col("_run") - col(weightCol) + col("write_offset"))
-      .select(df.columns.map(col) :+ col(cumCol): _*)
-    (result, withMid)
+    val rows = sorted.queryExecution.toRdd
+    val schema = sorted.schema
+    val plain = weightCol.isEmpty && group.isEmpty
+    val key = group.map { case (g, _) => BoundReference(schema.fieldIndex(g), schema(g).dataType, nullable = true) }
+    val w = weightCol.fold(-1)(schema.fieldIndex)
+    val wType = if (w < 0) LongType else schema(w).dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(wType), s"weight column must be integral, got $wType")
+    // a null weighs nothing
+    val weigh: InternalRow => Long =
+      if (w < 0) _ => 1L else r => if (r.isNullAt(w)) 0L else r.get(w, wType).asInstanceOf[Number].longValue
+    val (bases, starts, nRows) = if (plain) {
+      val counts = rows.mapPartitions(it => Iterator.single(it.size.toLong)).collect()
+      val bases = counts.scanLeft(0L)(_ + _)
+      (bases, bases, bases.last)
+    } else {
+      val sums = rows.mapPartitions { it =>
+        val (keyOf, keys) = keying(key)
+        var n, total, lastGroup = 0L
+        var first, last: UnsafeRow = null
+        it.foreach { r =>
+          val k = keyOf(r)
+          if (last == null || keys.compare(last, k) != 0) {
+            last = k.copy(); if (first == null) first = last; lastGroup = 0L
+          }
+          val w = weigh(r); n += 1; total += w; lastGroup += w
+        }
+        Iterator.single(Summary(n, total, first, last, lastGroup))
+      }.collect()
+      val keys = keying(key)._2
+      val bases = sums.scanLeft(0L)(_ + _.total)
+      val starts = new Array[Long](sums.length)
+      var (last, carried) = (null: UnsafeRow, 0L)
+      for ((s, p) <- sums.zipWithIndex if s.first != null) {
+        starts(p) = if (last != null && keys.compare(last, s.first) == 0) carried else bases(p)
+        carried = if (keys.compare(s.first, s.last) == 0) starts(p) else bases(p + 1) - s.lastGroup
+        last = s.last
+      }
+      (bases, starts, sums.map(_.rows).sum)
+    }
+    val extra = AttributeReference(posCol, LongType, w >= 0 && schema(w).nullable)() +:
+      group.map { case (_, g) => AttributeReference(g, LongType, nullable = false)() }.toSeq
+    val types = schema.fields.map(_.dataType) ++ extra.map(_.dataType)
+    val stamped = rows.mapPartitionsWithIndex[InternalRow] { (pid, it) =>
+      val project = UnsafeProjection.create(types)
+      val pos = new SpecificInternalRow(extra.map(_.dataType))
+      val joined = new JoinedRow
+      var next = bases(pid)
+      if (plain) it.map { r => pos.setLong(0, next); next += 1; project(joined(r, pos)) }
+      else {
+        val (keyOf, keys) = keying(key)
+        var (start, cur) = (starts(pid), null: UnsafeRow)
+        it.map { r =>
+          val k = keyOf(r)
+          if (cur == null) cur = k.copy()
+          else if (keys.compare(cur, k) != 0) { cur = k.copy(); start = next }
+          if (w >= 0 && r.isNullAt(w)) pos.setNullAt(0) else pos.setLong(0, next)
+          if (group.isDefined) pos.setLong(1, next - start)
+          next += weigh(r)
+          project(joined(r, pos))
+        }
+      }
+    }
+    val output = (sorted.queryExecution.analyzed.output ++ extra).map(_.newInstance())
+    val stats = Statistics(EstimationUtils.getSizePerRow(output) * nRows, rowCount = Some(BigInt(nRows)))
+    val spark = sorted.sparkSession.asInstanceOf[classic.SparkSession]
+    (GraftSqlShim.ofRows(spark, LogicalRDD(output, stamped)(spark, Some(stats))), sorted)
   }
+
+  /** A row's group key as a one-field row (no field without a group),
+    * and the ordering under which two keys are one group: `ord`'s
+    * equality, so a null key is a group and -0.0 is 0.0.
+    */
+  private def keying(key: Option[BoundReference]): (UnsafeProjection, InterpretedOrdering) =
+    (UnsafeProjection.create(key.toSeq), new InterpretedOrdering(
+      key.map(k => SortOrder(BoundReference(0, k.dataType, nullable = true), Ascending)).toSeq))
 
   val queries: Map[String, Q] = Map(
     "global_position" -> ((s, dir) => {

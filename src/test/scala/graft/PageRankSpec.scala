@@ -80,12 +80,23 @@ class PageRankSpec extends AnyFunSuite {
     assert(drop < keep - 100000L, s"drop=$drop keep=$keep")
   }
 
-  test("dangling variant is partition-invariant across the checkpoint cadence") {
-    // 7 iterations crosses the every-3-rounds lineage checkpoint twice
+  test("dangling variant is partition-invariant over 7 rounds") {
     val edges = (1L to 40L).map(i => (i, i % 7 + 100L)) ++ Seq((100L, 101L), (101L, 102L))
     val a = danglingRanksOf(edges, iters = 7, parts = 1)
     val b = danglingRanksOf(edges, iters = 7, parts = 13)
     assert(a == b)
+  }
+
+  test("dangling variant's optimized plan is no larger at 7 rounds than at 3") {
+    import spark.implicits._
+    val edges = ((1L to 40L).map(i => (i, i % 7 + 100L)) :+ ((100L, 101L))).toDF("src", "dst")
+    def planNodes(iters: Int): Int = {
+      val (r, unpersist) = graft.ext.PageRank.pageRankDanglingIntStamped(edges, iters)
+      try r.queryExecution.optimizedPlan.collect { case p => p }.length
+      finally unpersist()
+    }
+    val (three, seven) = (planNodes(3), planNodes(7))
+    assert(seven <= three, s"$seven plan nodes at 7 rounds, $three at 3")
   }
 
   test("modularity of two cliques joined by a bridge matches the hand computation") {

@@ -90,11 +90,11 @@ class PlanSweepSpec extends AnyFunSuite {
       case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition =>
         unwrap(e.child) match {
           case a: BaseAggregateExec if a.groupingExpressions.isEmpty => None
-          // the two-phase prefix-scan witness (Offsets' grouped and
-          // weighted variants; plain globalPosition gathers its counts
-          // outside the plan): an aggregate grouped by the `_pid`
-          // partition id is ≤ #partitions(+groups) rows by construction —
-          // the repo-wide partition-summary naming contract
+          // the two-phase running-min witness of `Stats.skyline2dStamped`,
+          // this exemption's only remaining user (Offsets gathers its
+          // per-partition summaries outside the plan): an aggregate
+          // grouped by the `_pid` partition id is ≤ #partitions rows by
+          // construction — the repo-wide partition-summary naming contract
           case a: BaseAggregateExec
             if a.groupingExpressions.exists(_.references.exists(_.name == "_pid")) => None
           // a limit's partial→final collect: LocalLimit(n≤1000) feeds

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.{Intervals, Offsets, Rle}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -123,10 +123,17 @@ class PropertySpec extends AnyFunSuite {
 
   test("a plain globalPosition call leaves no persisted RDD") {
     import spark.implicits._
-    val before = SparkJobs.persisted(spark)
     val df = (0 until 100).map(i => (i % 7, i)).toDF("a", "b")
-    assert(Offsets.globalPosition(df, Seq(col("a"), col("b"))).collect().length == 100)
-    assert(SparkJobs.persisted(spark) == before)
+    val ord = Seq(col("a"), col("b"))
+    val forms = Seq[(String, () => DataFrame)](
+      "plain" -> (() => Offsets.globalPosition(df, ord)),
+      "grouped" -> (() => Offsets.globalPositionGrouped(df, "a", ord, "pos", "apos")),
+      "weighted" -> (() => Offsets.globalWeightedPrefix(df, ord, "b", "cum")))
+    for ((form, stamp) <- forms) {
+      val before = SparkJobs.persisted(spark)
+      assert(stamp().collect().length == 100, form)
+      assert(SparkJobs.persisted(spark) == before, form)
+    }
   }
 
   test("globalPositionStamped: unpersisting the second element keeps a cache on the first") {
@@ -159,32 +166,44 @@ class PropertySpec extends AnyFunSuite {
       val pos = Offsets.globalPosition(df, Seq(col("a"), col("b")))
         .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getLong(3))).toMap
       assert(ones == pos)
-      spark.catalog.clearCache()
     }
+    // a null weight gives a null cum and adds nothing to later rows
+    val sparse = Seq[(Int, Option[Long])]((1, Some(5L)), (2, None), (3, Some(7L)), (4, None), (5, Some(1L)))
+    val cums = Offsets.globalWeightedPrefix(sparse.toDF("a", "w").repartition(3), Seq(col("a")), "w", "cum")
+      .collect().map(r => r.getInt(0) -> Option(r.get(2))).sortBy(_._1).toSeq
+    assert(cums == Seq(1 -> Some(0L), 2 -> None, 3 -> Some(5L), 4 -> None, 5 -> Some(12L)))
   }
 
-  test("grouped stamp: join fallback (past the broadcast ceiling) equals the broadcast form") {
+  test("grouped stamp equals the serial scan on any partitioning") {
     import spark.implicits._
-    val df = (0 until 500).map(i => (s"g${(i * 13) % 7}", (i * 7919) % 1000, i))
-      .toDF("grp", "a", "b").repartition(5)
-    val ord = Seq(col("grp"), col("a"), col("b"))
-    def run(bcast: Boolean): Seq[(String, Int, Int, Long, Long)] = {
-      val (res, cached) = Offsets.globalPositionGroupedStamped(
-        df, "grp", ord, "pos", "gpos", broadcastOffsets = bcast)
-      val out = res.collect().map(r =>
-        (r.getString(0), r.getInt(1), r.getInt(2), r.getLong(3), r.getLong(4))).toSeq
-      cached.unpersist()
-      out
+    // g1 holds 60 % of the rows, so it straddles most of the 13 range
+    // partitions; a null group sorts first, as ord puts it
+    val spread = (0 until 300).map { i =>
+      val g = i % 10 match { case 3 => None; case d if d < 7 => Some("g1"); case d => Some(s"g$d") }
+      (g, (i * 7919) % 1000, i)
     }
-    val (b, j) = (run(true).sortBy(_._4), run(false).sortBy(_._4))
-    assert(b == j)
-    // and both are the window-formulation ground truth
-    val expected = df.collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2)))
-      .sortBy(t => (t._1, t._2, t._3)).zipWithIndex
-      .map { case ((g, a, x), i) => (g, a, x, i.toLong) }
-    val gbase = expected.groupBy(_._1).view.mapValues(_.map(_._4).min).toMap
-    val truth = expected.map { case (g, a, x, p) => (g, a, x, p, p - gbase(g)) }.toSeq
-    assert(b == truth)
+    // identical rows collapse the range bounds: the last range partition is empty
+    val dups = (None, 2, 2) +: Seq.fill(5)((Some("g1"), 1, 1))
+    val ord = Seq(col("grp"), col("a"), col("b"))
+    for (parts <- Seq(1, 5, 13); (name, rows) <- Seq("empty" -> Nil, "dups" -> dups, "spread" -> spread))
+      withConf("spark.sql.shuffle.partitions" -> "13",
+          "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+        val res = Offsets.globalPositionGrouped(rows.toDF("grp", "a", "b").repartition(parts),
+            "grp", ord, "pos", "gpos")
+          .withColumn("pid", spark_partition_id())
+        val got = res.collect().map(r =>
+          (Option(r.getString(0)), r.getInt(1), r.getInt(2), r.getLong(3), r.getLong(4), r.getInt(5)))
+        val serial = rows.sortBy(t => (t._1, t._2, t._3))
+        val truth = serial.zipWithIndex.map { case ((g, a, b), i) =>
+          (g, a, b, i.toLong, (i - serial.indexWhere(_._1 == g)).toLong) }
+        assert(got.map(t => (t._1, t._2, t._3, t._4, t._5)).sortBy(_._4).toSeq == truth,
+          s"$name on $parts input partitions")
+        val spans = got.groupBy(_._1).view.mapValues(_.map(_._6).distinct.length).toMap
+        if (name == "dups") assert(got.map(_._6).distinct.length < res.rdd.getNumPartitions,
+          s"$parts input partitions: no empty range partition")
+        if (name == "spread") assert(spans(Some("g1")) >= 3,
+          s"$parts input partitions: g1 spans ${spans(Some("g1"))} partitions")
+      }
   }
 
   test("HLL sketch: within error bound of exact, invariant to partitioning") {

@@ -2,7 +2,7 @@ package graft
 
 import graft.sources.DriverScan
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.connector.read.Scan
+import org.apache.spark.sql.connector.read.{InputPartition, Scan}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 
 /** The V2 scans of a frame's optimized plan: what was pushed into a
@@ -20,10 +20,12 @@ object ScanPlans {
   /** The splits the scans plan; a scan read on the driver reads its
     * batch scan's splits.
     */
-  def splits(df: DataFrame): Int = scans(df).map {
-    case d: DriverScan => d.batch.toBatch.planInputPartitions().length
-    case s => s.toBatch.planInputPartitions().length
-  }.sum
+  def partitions(df: DataFrame): Seq[InputPartition] = scans(df).flatMap {
+    case d: DriverScan => d.batch.toBatch.planInputPartitions()
+    case s => s.toBatch.planInputPartitions()
+  }
+
+  def splits(df: DataFrame): Int = partitions(df).length
 
   /** Whether a scan of the frame is read on the driver. */
   def onDriver(df: DataFrame): Boolean = scans(df).exists(_.isInstanceOf[DriverScan])

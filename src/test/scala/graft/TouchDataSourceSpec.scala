@@ -357,6 +357,25 @@ class TouchDataSourceSpec extends AnyFunSuite {
     }
   }
 
+  test("an index block running past its data file is clamped at the file's end") {
+    import org.apache.spark.sql.functions.col
+    // the v1 fixture's only index entry: gid 24 claims 20,992 records
+    // from offset 0 over an 82-record file
+    val path = TouchToParquet.fixturePath(1)
+    def read() = spark.read.format("touchbin")
+      .option("maxBytesPerPartition", (40 * 10).toString) // 10 records/split
+      .load(path)
+    val full = read()
+    assert(full.count() == 82)
+    val gid24 = read().filter(col("source_node_id") === 24)
+    assert(rows(gid24) == rowsWhere(full)(_ == 24))
+    // the block plans the whole file once: ranges tile [0, 82) with no
+    // record planned twice and none past the end
+    val planned = graft.sources.TouchSplits.ranges(gid24).map { case (_, s, e) => (s, e) }.sorted
+    assert(planned.map(_._1) == (0L until 82L by 10L), planned.toString)
+    assert(planned.map(_._2) == planned.map(_._1).drop(1) :+ 82L, planned.toString)
+  }
+
   test("truncated data file fails loudly at split planning") {
     val dir = java.nio.file.Paths.get(graft.io.TempDirs.create("touch_dir_trunc"))
     copyFixture(2, dir, 0)
